@@ -82,31 +82,20 @@ class WarehouseConfig:
     """Where and how the star schema is persisted.
 
     ``path`` is the warehouse root; each table lives at ``<path>/<table>``
-    as parquet. At cluster scale the fact table is partitioned by
-    ``year_month`` (derived from date_key) so date-range queries prune
-    partitions — the Spark replacement for the reference's B-tree date
-    indexes (sql/schema.sql:229-242).
+    as parquet. The fact table is partitioned by ``year_month`` (derived
+    from date_key) so date-range queries prune partitions — the Spark
+    replacement for the reference's B-tree date indexes
+    (sql/schema.sql:229-242). Every successful load records a snapshot
+    manifest (``Warehouse.snapshot``).
     """
 
     path: str = "/tmp/spark_warehouse"
     fact_table: str = "fact_transactions"
-    partition_fact_by_month: bool = True
     # JDBC parity mode (reference loads into PostgreSQL). Optional — the
     # engine runs fully on parquet; set url to enable a JDBC sink.
     jdbc_url: str | None = None
     jdbc_properties: dict = field(default_factory=dict)
     jdbc_batchsize: int = 1000  # reference BATCH_SIZE, src/config.py:92
-    # dimension batches above this row count assign dense surrogate keys
-    # via the distributed two-phase rank (operators/ranking.py) instead
-    # of a bare row_number window — identical keys, no single-task sort.
-    # Small batches keep the window (one job, no offset-collect round).
-    large_dim_threshold: int = 1_000_000
-    # record a snapshot manifest after every successful load so past
-    # warehouse states stay readable (Warehouse.read_version) — the
-    # plain-parquet form of table-format time travel. Metadata-only
-    # (one JSON file listing the file set per table); disable for
-    # write-latency-critical loads.
-    snapshot_on_load: bool = True
 
 
 @dataclass(frozen=True)

@@ -1,57 +1,26 @@
-"""Dimension builds + surrogate keys + fact preparation.
+"""Dimension builds + fact preparation.
 
 Reference: D2 distinct-extraction src/transform.py:410-468, fact prep
-:591-605, surrogate keys from PostgreSQL SERIAL (sql/schema.sql:84...).
+:591-605.
 
-Surrogate keys without SERIAL (SURVEY §7.4-1), two strategies:
-
-- ``dense`` (default, reference-parity): ``row_number() OVER (ORDER BY
-  natural_key)``. The reference inserts the sorted distinct values into a
-  SERIAL column, so keys 1..n in natural-key order are EXACTLY what
-  PostgreSQL assigns on a fresh load. The global window here is a
-  single-task sort — fine for the builder's per-batch dimensional
-  cardinalities; warehouse.load_dimension switches the SAME key
-  assignment to the distributed two-phase rank (operators/ranking.py)
-  when a batch exceeds WarehouseConfig.large_dim_threshold, so huge
-  first loads never funnel through one task.
-- ``hash``: ``xxhash64(natural_key)`` — stateless, shuffle-free, stable
-  across incremental loads and cluster sizes. The 100 TB choice when a
-  dimension is itself huge (e.g. one row per document); collision chance
-  at 64-bit is ~n²/2⁶⁵ (≈3e-7 for 100M keys).
-
-Incremental appends keep ``dense`` keys stable by offsetting new keys
-with max(existing) — see warehouse.py.
+The dimension frames built here carry natural keys only. Surrogate keys
+are assigned at load time by ``Warehouse.load_dimension``, the way the
+reference's PostgreSQL SERIAL column assigns them on insert
+(sql/schema.sql:84...): ``row_number() OVER (ORDER BY natural_key)``
+offset past max(existing), so keys are 1..n in natural-key order on a
+fresh load and stay stable across incremental appends.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dates import build_dim_date_from_facts, date_key
 
 
-def assign_surrogate_key(
-    distinct_df: DataFrame,
-    natural_key: str,
-    surrogate_key: str,
-    strategy: str = "dense",
-    offset: int = 0,
-) -> DataFrame:
-    if strategy == "hash":
-        keyed = distinct_df.withColumn(
-            surrogate_key, F.xxhash64(F.col(natural_key).cast("string"))
-        )
-    else:
-        w = Window.orderBy(F.col(natural_key).asc())
-        keyed = distinct_df.withColumn(
-            surrogate_key, (F.row_number().over(w) + F.lit(offset)).cast("long")
-        )
-    return keyed.select(surrogate_key, natural_key)
-
-
-def build_dimensions(valid_df: DataFrame, key_strategy: str = "dense") -> dict:
-    """D2: one distinct+sort per dimension column, each with surrogate keys.
+def build_dimensions(valid_df: DataFrame) -> dict:
+    """D2: one distinct per dimension column.
 
     Returns the reference's IR contract — dict of 6 frames
     (src/transform.py:619-626): dim_date, dim_category, dim_merchant,
@@ -59,22 +28,21 @@ def build_dimensions(valid_df: DataFrame, key_strategy: str = "dense") -> dict:
 
     Scale note: each distinct is a partial-agg shuffle on a single narrow
     column; Catalyst prunes the scan to that column. The four distincts
-    run as independent jobs and can share the cached valid_df.
+    run as independent jobs and share the cached flagged frame.
     """
     dims = {}
     dims["dim_date"] = build_dim_date_from_facts(valid_df, "date")
-    for name, src_col, nk, sk in [
-        ("dim_category", "category", "category_name", "category_key"),
-        ("dim_merchant", "merchant", "merchant_name", "merchant_key"),
-        ("dim_payment_method", "payment_method", "payment_method_name", "payment_method_key"),
-        ("dim_user", "user_id", "user_id", "user_key"),
+    for name, src_col, nk in [
+        ("dim_category", "category", "category_name"),
+        ("dim_merchant", "merchant", "merchant_name"),
+        ("dim_payment_method", "payment_method", "payment_method_name"),
+        ("dim_user", "user_id", "user_id"),
     ]:
-        distinct = (
+        dims[name] = (
             valid_df.select(F.col(src_col).alias(nk))
             .filter(F.col(src_col).isNotNull())
             .distinct()
         )
-        dims[name] = assign_surrogate_key(distinct, nk, sk, key_strategy).orderBy(nk)
     return dims
 
 

@@ -167,8 +167,9 @@ def connected_components_star(
 
     Per-round lineage truncation shares `_lineage_truncator` (the
     SPARK_GRAFT_CC_CKPT_DIR knob applies here too). Convergence is an
-    exact symmetric-difference check (two anti-joins on the bounded
-    edge frame), not a hash that could collide."""
+    exact set-equality check on the bounded edge frame (equal counts of
+    two distinct frames plus one anti-join), not a hash that could
+    collide."""
     trunc = _lineage_truncator(vertices.sparkSession)
     e = (
         edges.select(F.col(src).alias("__u"), F.col(dst).alias("__v"))

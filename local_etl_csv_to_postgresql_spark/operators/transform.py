@@ -8,7 +8,9 @@ accounting the reference logs.
 
 The cleaned+flagged frame is the only thing persisted; everything
 downstream (4 distincts + fact projection) shares that cache so the raw
-input is scanned once per run, not once per output.
+input is scanned once per run, not once per output. The caller releases
+it with ``TransformResult.release()`` when the batch ends: a cache left
+behind would answer the next read of the same path with the old rows.
 """
 
 from __future__ import annotations
@@ -41,6 +43,12 @@ class TransformResult:
     valid_rows: int
     issue_counts: dict = field(default_factory=dict)
     invalid: "DataFrame | None" = None  # rejects with __failed_rules labels
+    cached: "DataFrame | None" = None  # the batch's one persisted frame
+
+    def release(self) -> None:
+        if self.cached is not None:
+            self.cached.unpersist()
+            self.cached = None
 
 
 def clean_transactions(df: DataFrame) -> DataFrame:
@@ -62,7 +70,6 @@ def clean_transactions(df: DataFrame) -> DataFrame:
 def transform_transactions(
     df: DataFrame | None,
     cfg: ValidationConfig | None = None,
-    key_strategy: str = "dense",
 ) -> TransformResult:
     """Full phase-2 transform (reference src/transform.py:522-626).
 
@@ -85,20 +92,17 @@ def transform_transactions(
     result: ValidationResult = validate_transactions(cleaned, cfg)
     input_rows = int(obs.get["n"])
     if input_rows == 0:
+        result.flagged.unpersist()
         raise TransformError("Input DataFrame is empty")
-    valid = result.valid.persist()
-    try:
-        tables = build_dimensions(valid, key_strategy=key_strategy)
-        tables["fact_data"] = prepare_fact(valid)
-        # deduped count: validation saw the post-dedup frame
-        return TransformResult(
-            tables=tables,
-            input_rows=input_rows,
-            deduped_rows=result.input_rows,
-            valid_rows=result.valid_rows,
-            issue_counts=result.issue_counts,
-            invalid=result.invalid,
-        )
-    except Exception:
-        valid.unpersist()
-        raise
+    tables = build_dimensions(result.valid)
+    tables["fact_data"] = prepare_fact(result.valid)
+    # deduped count: validation saw the post-dedup frame
+    return TransformResult(
+        tables=tables,
+        input_rows=input_rows,
+        deduped_rows=result.input_rows,
+        valid_rows=result.valid_rows,
+        issue_counts=result.issue_counts,
+        invalid=result.invalid,
+        cached=result.flagged,
+    )

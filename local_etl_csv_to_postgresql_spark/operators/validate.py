@@ -3,8 +3,9 @@
 Builds one boolean per rule as a column, accumulates an ``is_valid``
 conjunction, and computes the per-rule issue counts the reference logs
 (src/transform.py:212-304) in a SINGLE aggregation job over the flagged
-frame — not one count() per rule. The valid frame and the issue counts
-share the cached flagged lineage so the input is scanned once.
+frame — not one count() per rule. The valid and invalid frames are
+filters over the cached flagged frame, so the input is scanned once;
+the caller owns that cache and releases it with ``flagged.unpersist()``.
 
 Rules (executed semantics, which sometimes differ from the declared
 constants — see config.py notes):
@@ -40,6 +41,7 @@ class ValidationResult:
     issue_counts: dict  # rule name -> #rows violating
     input_rows: int
     valid_rows: int
+    flagged: DataFrame  # persisted; valid and invalid are filters over it
 
 
 def _rule_columns(cfg: ValidationConfig) -> dict:
@@ -140,4 +142,5 @@ def validate_transactions(
         issue_counts=issue_counts,
         input_rows=total,
         valid_rows=n_valid,
+        flagged=flagged,
     )

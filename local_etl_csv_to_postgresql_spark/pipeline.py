@@ -75,6 +75,7 @@ def run_etl_pipeline(
     cfg = cfg or EngineConfig()
     res = PipelineResult(file_path=file_path)
     t0 = time.time()
+    tr = None
     try:
         # PHASE 1 — extract
         t = time.time()
@@ -126,7 +127,6 @@ def run_etl_pipeline(
 
         if validate_only or dry_run:
             res.status = "dry_run" if dry_run else "validated"
-            res.total_time = time.time() - t0
             return res
 
         # PHASE 3 — load
@@ -158,7 +158,11 @@ def run_etl_pipeline(
         res.status = "failed"
         res.error = str(e)
         logger.error("pipeline failed: %s", e)
-    res.total_time = time.time() - t0
+    finally:
+        # the batch's cache goes with the batch, whatever its outcome
+        if tr is not None:
+            tr.release()
+        res.total_time = time.time() - t0
     return res
 
 

@@ -63,8 +63,8 @@ def _silence_bounded_window_warning(spark: SparkSession) -> None:
     "No Partition Defined for Window ... single partition", which fires
     for this engine exclusively on frames that are BOUNDED BY DESIGN —
     q17's ~80-row monthly aggregate, q32's ~2.4k-row daily aggregate,
-    and the small-dim surrogate path (guarded by large_dim_threshold
-    with a distributed-rank fallback above 1M rows). SCALE.md §windows
+    and the dimension surrogate-key window (bounded by one batch's new
+    dimension values). SCALE.md §windows
     documents each site; muting the known-benign noise keeps real
     regressions visible in bench output."""
     try:

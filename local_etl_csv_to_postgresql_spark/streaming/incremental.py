@@ -76,7 +76,10 @@ def start_incremental_load(
         if batch_df.isEmpty():
             return
         result = transform_transactions(batch_df, cfg.validation)
-        wh.load_warehouse(result.tables)
+        try:
+            wh.load_warehouse(result.tables)
+        finally:
+            result.release()
 
     stream = transactions_stream(spark, input_dir, max_files_per_trigger)
     writer = (

@@ -35,7 +35,7 @@ import os
 import shutil
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .config import WarehouseConfig
@@ -54,7 +54,6 @@ class LoadStats:
     fact_inserted: int = 0
     fact_skipped: int = 0
     status: str = "pending"
-    error: str | None = None
     snapshot_version: int | None = None
 
 
@@ -80,11 +79,6 @@ class Warehouse:
             raise LoadError(f"Table does not exist: {table}")
         return self.spark.read.parquet(self._path(table))
 
-    def read_or_empty(self, table: str, schema) -> DataFrame:
-        if self.exists(table):
-            return self.spark.read.parquet(self._path(table))
-        return self.spark.createDataFrame([], schema)
-
     def drop_all(self) -> None:
         if os.path.isdir(self.cfg.path):
             shutil.rmtree(self.cfg.path)
@@ -100,65 +94,45 @@ class Warehouse:
     def load_dimension(
         self, df: DataFrame, table: str, natural_key: str, surrogate_key: str | None = None
     ) -> int:
-        """Append rows whose natural key is not already present; new rows
-        get surrogate keys offset past max(existing) so keys are stable
-        across incremental loads (SURVEY §7.4-1).
+        """Append rows whose natural key is not already present and
+        return how many were appended (S5/S6, ON CONFLICT DO NOTHING).
 
-        Input ``df`` must already carry surrogate keys starting at 1
-        (dense strategy); on incremental loads the keys are reassigned
-        relative to the existing table.
+        ``df`` carries natural keys only. With ``surrogate_key`` set, new
+        rows get ``row_number()`` in natural-key order offset past
+        max(existing) — the keys PostgreSQL's SERIAL assigns to sorted
+        inserts, 1..n on a fresh table and stable across incremental
+        loads (SURVEY §7.4-1). The window is a single-task sort, bounded
+        by the batch's new dimension values.
         """
-        if not self.exists(table):
-            # piggyback the inserted-count on the write action itself
-            # (CollectMetrics above the writer): one job instead of
-            # write + a second read-the-footers count job per table —
-            # at 6 tables per load the extra jobs were the measured
-            # fixed cost of the load phase
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            self._write(df.observe(obs, F.count(F.lit(1)).alias("n")), table)
-            return int(obs.get["n"])
-
-        existing = self.read(table)
-        new_rows = df.join(
-            F.broadcast(existing.select(natural_key)), natural_key, "left_anti"
-        )
-        n_new = new_rows.count()
-        if n_new == 0:
-            return 0
+        n_new, offset = None, 0
+        if self.exists(table):
+            existing = self.read(table)
+            df = df.join(
+                F.broadcast(existing.select(natural_key)), natural_key, "left_anti"
+            )
+            # counted before the write: an empty append still writes a
+            # part file, so a load with no new rows must not write at all
+            n_new = df.count()
+            if n_new == 0:
+                return 0
+            if surrogate_key:
+                offset = existing.agg(F.max(surrogate_key)).first()[0] or 0
         if surrogate_key:
-            offset = existing.agg(F.max(surrogate_key)).first()[0] or 0
-            if n_new > self.cfg.large_dim_threshold:
-                # a huge dimension batch (first load of a document- or
-                # user-grain dim) must not funnel through one sort task;
-                # the distributed two-phase rank assigns the IDENTICAL
-                # dense keys (row_number in natural-key order)
-                from .operators.ranking import attach_global_row_number
-
-                new_rows = (
-                    attach_global_row_number(
-                        new_rows.drop(surrogate_key),
-                        order_by=[F.col(natural_key).asc()],
-                        rn_col="__rn",
-                    )
-                    .withColumn(
-                        surrogate_key,
-                        (F.col("__rn") + F.lit(offset)).cast("long"),
-                    )
-                    .drop("__rn")
-                )
-            else:
-                from pyspark.sql import Window
-
-                w = Window.orderBy(F.col(natural_key).asc())
-                new_rows = new_rows.drop(surrogate_key).withColumn(
-                    surrogate_key,
-                    (F.row_number().over(w) + F.lit(offset)).cast("long"),
-                )
-            new_rows = new_rows.select(existing.columns)
-        self._append(new_rows, table)
-        return n_new
+            w = Window.orderBy(F.col(natural_key).asc())
+            df = df.select(
+                (F.row_number().over(w) + F.lit(offset))
+                .cast("long")
+                .alias(surrogate_key),
+                natural_key,
+            )
+        if n_new is not None:
+            self._write(df, table, mode="append")
+            return n_new
+        # first write: the inserted count rides on the write job itself
+        # (CollectMetrics above the writer), not a second count job
+        obs = Observation()
+        self._write(df.observe(obs, F.count(F.lit(1)).alias("n")), table)
+        return int(obs.get["n"])
 
     def load_dim_date(self, df: DataFrame) -> int:
         """S6: dim_date idempotent append on date_key."""
@@ -174,9 +148,10 @@ class Warehouse:
 
     # -- key maps + fact enrichment (S9 + J1/J2) ---------------------------
 
-    def enrich_fact(self, fact_df: DataFrame) -> DataFrame:
+    def enrich_fact(self, fact_df: DataFrame) -> tuple[DataFrame, int]:
         """J1: replace natural keys with surrogate keys via 4 broadcast
-        joins + J2 date-key existence check.
+        joins + J2 date-key existence check. Returns the persisted
+        enriched batch and its row count; the caller unpersists it.
 
         Unmatched keys raise (reference src/load.py:461-466 errors on any
         unmapped value) — detected with left joins + ONE aggregation
@@ -200,61 +175,43 @@ class Warehouse:
             "__date_ok", F.lit(True)
         )
         out = out.join(F.broadcast(dim_date_keys), "date_key", "left")
-
-        # the joined frame backs three actions (this miss-check, the fact
-        # count, the fact write) — persist so the 5-join plan runs once;
-        # load_warehouse unpersists after the fact lands
-        out = out.persist()
-        self._enriched_cache = out
+        # an unknown date leaves date_key null, like the other keys; the
+        # batch backs three actions (this miss-check, the anti-join
+        # count, the fact write), so the 5-join plan runs once
+        keys = ["date_key", "category_key", "merchant_key", "payment_method_key", "user_key"]
+        out = out.select(
+            "transaction_id",
+            F.when(F.col("__date_ok"), F.col("date_key")).alias("date_key"),
+            *keys[1:],
+            "amount",
+        ).persist()
 
         missing = out.agg(
-            *[
-                F.sum(F.col(sk).isNull().cast("long")).alias(sk)
-                for _, (_, _, sk) in dims.items()
-            ],
-            F.sum((~F.coalesce(F.col("__date_ok"), F.lit(False))).cast("long")).alias(
-                "date_key"
-            ),
+            *[F.sum(F.col(k).isNull().cast("long")).alias(k) for k in keys],
             F.count(F.lit(1)).alias("__total"),
-        ).first()
-        total = int(missing["__total"])
-        problems = {
-            k: int(missing[k] or 0)
-            for k in missing.asDict()
-            if k != "__total" and missing[k]
-        }
+        ).first().asDict()
+        total = missing.pop("__total")
+        problems = {k: v for k, v in missing.items() if v}
         if problems:
+            out.unpersist()
             raise LoadError(f"Unmapped dimension keys in fact batch: {problems}")
-
-        result = out.select(
-            "transaction_id", "date_key", "category_key", "merchant_key",
-            "payment_method_key", "user_key", "amount",
-        )
-        # stash the batch size measured by the miss-check aggregation so
-        # load_fact skips its own count() job over the same frame
-        self._enriched_total = (id(result), total)
-        return result
+        return out, total
 
     # -- fact idempotent append (S7/J3) ------------------------------------
 
-    def load_fact(self, enriched: DataFrame) -> tuple[int, int]:
+    def load_fact(self, enriched: DataFrame, total: int) -> tuple[int, int]:
         """S7: anti-join on transaction_id then append; returns
         (inserted, skipped) like the reference (src/load.py:585-696).
+        ``total`` is the batch's row count from ``enrich_fact``.
 
         Scale note: the anti-join shuffles on transaction_id only when the
         existing side is large; Catalyst/AQE broadcasts the smaller side.
         At 100 TB the existing-key probe should be narrowed first — we
-        read only the transaction_id column (column pruning) and, when the
-        fact table is month-partitioned and the batch spans few months,
-        partition-prune via the batch's date_key range.
+        read only the transaction_id column (column pruning) and, since
+        the fact table is month-partitioned, partition-prune via the
+        batch's date_key range.
         """
         table = self.cfg.fact_table
-        stashed = getattr(self, "_enriched_total", None)
-        if stashed is not None and stashed[0] == id(enriched):
-            total = stashed[1]
-            self._enriched_total = None
-        else:
-            total = enriched.count()
         if not self.exists(table):
             self._write_fact(enriched)
             return total, 0
@@ -267,25 +224,18 @@ class Warehouse:
 
     # -- writers -----------------------------------------------------------
 
-    def _fact_with_partition(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "year_month", (F.col("date_key") / 100).cast("int")
-        )
-
     def _write_fact(self, df: DataFrame, mode: str = "overwrite") -> None:
-        out = self._fact_with_partition(df)
-        writer_df = out
-        if self.cfg.partition_fact_by_month:
-            # without this, every shuffle task writes a sliver into every
-            # month dir (tasks x months tiny files — 776 files for a 3k-row
-            # load). Repartitioning on the partition column yields one file
-            # per month per batch; at cluster scale use
-            # repartition(N, col) to balance file sizes instead.
-            writer_df = out.repartition(F.col("year_month"))
-        writer = writer_df.write.mode(mode)
-        if self.cfg.partition_fact_by_month:
-            writer = writer.partitionBy("year_month")
-        writer.parquet(self._path(self.cfg.fact_table))
+        # repartitioning on the partition column yields one file per
+        # month per batch; without it every shuffle task writes a sliver
+        # into every month dir (776 files for a 3k-row load). At cluster
+        # scale use repartition(N, col) to balance file sizes instead.
+        (
+            df.withColumn("year_month", (F.col("date_key") / 100).cast("int"))
+            .repartition(F.col("year_month"))
+            .write.mode(mode)
+            .partitionBy("year_month")
+            .parquet(self._path(self.cfg.fact_table))
+        )
         if self.cfg.jdbc_url:
             self._jdbc_write(df, self.cfg.fact_table, mode)
 
@@ -311,14 +261,9 @@ class Warehouse:
         before = count_files(path)
         df = self.read(self.cfg.fact_table)
         tmp = path + "__compacting"
-        writer_df = df
-        if self.cfg.partition_fact_by_month:
-            writer_df = df.repartition(F.col("year_month"))
-            writer_df.write.mode("overwrite").partitionBy(
-                "year_month"
-            ).parquet(tmp)
-        else:
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        df.repartition(F.col("year_month")).write.mode("overwrite").partitionBy(
+            "year_month"
+        ).parquet(tmp)
         old = path + "__old"
         shutil.move(path, old)
         shutil.move(tmp, path)
@@ -342,9 +287,6 @@ class Warehouse:
         df.write.mode(mode).parquet(self._path(table))
         if self.cfg.jdbc_url:
             self._jdbc_write(df, table, mode)
-
-    def _append(self, df: DataFrame, table: str) -> None:
-        self._write(df, table, mode="append")
 
     def _jdbc_write(self, df: DataFrame, table: str, mode: str) -> None:
         (
@@ -476,51 +418,43 @@ class Warehouse:
                 self.seed_dim_date(*seed_dates)
             return self.load_dim_date(tables["dim_date"])
 
-        try:
-            # the 5 dimension loads touch disjoint tables and share the
-            # persisted `valid` cache — run them as concurrent driver
-            # threads so their (small) Spark jobs overlap instead of
-            # queueing. Wall time drops from sum to max; on a cluster the
-            # same pattern keeps executors busy while tiny dim jobs
-            # round-trip the scheduler. Spark's job scheduler is
-            # thread-safe, and block-level locking makes the concurrent
-            # first touch of the cache compute each partition once.
-            from concurrent.futures import ThreadPoolExecutor
+        # the 5 dimension loads touch disjoint tables and share the
+        # batch's cached transform frame — run them as concurrent driver
+        # threads so their (small) Spark jobs overlap instead of
+        # queueing. Wall time drops from sum to max; on a cluster the
+        # same pattern keeps executors busy while tiny dim jobs
+        # round-trip the scheduler. Spark's job scheduler is
+        # thread-safe, and block-level locking makes the concurrent
+        # first touch of the cache compute each partition once.
+        from concurrent.futures import ThreadPoolExecutor
 
-            dim_jobs = {
-                "dim_date": _load_dim_date,
-                **{
-                    t: (
-                        lambda t=t: self.load_dimension(
-                            tables[t], t, NATURAL_KEYS[t], SURROGATE_KEYS[t]
-                        )
+        dim_jobs = {
+            "dim_date": _load_dim_date,
+            **{
+                t: (
+                    lambda t=t: self.load_dimension(
+                        tables[t], t, NATURAL_KEYS[t], SURROGATE_KEYS[t]
                     )
-                    for t in (
-                        "dim_category",
-                        "dim_merchant",
-                        "dim_payment_method",
-                        "dim_user",
-                    )
-                },
-            }
-            with ThreadPoolExecutor(max_workers=len(dim_jobs)) as pool:
-                futures = {t: pool.submit(fn) for t, fn in dim_jobs.items()}
-                for t, fut in futures.items():
-                    stats.dims_inserted[t] = fut.result()
-            enriched = self.enrich_fact(tables["fact_data"])
-            stats.fact_inserted, stats.fact_skipped = self.load_fact(enriched)
-            if self.cfg.snapshot_on_load:
-                stats.snapshot_version = self.snapshot()
-            stats.status = "success"
-        except Exception as e:  # noqa: BLE001
-            stats.status = "failed"
-            stats.error = str(e)
-            raise
+                )
+                for t in (
+                    "dim_category",
+                    "dim_merchant",
+                    "dim_payment_method",
+                    "dim_user",
+                )
+            },
+        }
+        with ThreadPoolExecutor(max_workers=len(dim_jobs)) as pool:
+            futures = {t: pool.submit(fn) for t, fn in dim_jobs.items()}
+            for t, fut in futures.items():
+                stats.dims_inserted[t] = fut.result()
+        enriched, total = self.enrich_fact(tables["fact_data"])
+        try:
+            stats.fact_inserted, stats.fact_skipped = self.load_fact(enriched, total)
         finally:
-            cached = getattr(self, "_enriched_cache", None)
-            if cached is not None:
-                cached.unpersist()
-                self._enriched_cache = None
+            enriched.unpersist()
+        stats.snapshot_version = self.snapshot()
+        stats.status = "success"
         return stats
 
     # -- schema verification (reference sql/verify_schema.sql) -------------

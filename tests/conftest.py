@@ -31,6 +31,11 @@ def rows_to_df(spark, rows):
     return spark.createDataFrame([tuple(r) for r in rows], COLUMNS)
 
 
+def cache_is_empty(spark) -> bool:
+    """True when the session holds no persisted frame."""
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 @pytest.fixture
 def valid_rows():
     return [

@@ -73,6 +73,52 @@ def test_pipeline_end_to_end_and_rerun(spark, csv_path, tmp_path):
     assert rerun.loaded_rows == 0 and rerun.skipped_rows == 297
 
 
+def test_rewritten_path_loads_its_new_rows(spark, tmp_path):
+    """Rewriting a loaded file in place and loading it again in the
+    same session reads the new rows, not a cache of the old ones, and
+    no load leaves a cached frame behind."""
+    from datetime import date
+
+    from tests.conftest import cache_is_empty
+
+    spark.catalog.clearCache()
+    p = str(tmp_path / "t.csv")
+    cfg = EngineConfig(warehouse=WarehouseConfig(path=str(tmp_path / "wh")))
+    end = date(2024, 6, 30)
+    write_transactions_csv(p, generate_transactions(500, 20, 1, seed=1, end_date=end))
+    first = run_etl_pipeline(spark, p, cfg)
+    assert (first.status, first.loaded_rows) == ("success", 500)
+    assert cache_is_empty(spark)
+
+    write_transactions_csv(p, generate_transactions(700, 20, 1, seed=2, end_date=end))
+    second = run_etl_pipeline(spark, p, cfg)
+    assert second.status == "success"
+    assert second.extracted_rows == second.transformed_rows == 700
+    assert (second.loaded_rows, second.skipped_rows) == (700, 0)
+    assert cache_is_empty(spark)
+
+
+def test_pipeline_releases_cache_when_it_stops_early(
+    spark, csv_path, tmp_path, monkeypatch
+):
+    from local_etl_csv_to_postgresql_spark.warehouse import LoadError, Warehouse
+    from tests.conftest import cache_is_empty
+
+    spark.catalog.clearCache()
+    cfg = EngineConfig(warehouse=WarehouseConfig(path=str(tmp_path / "wh")))
+    res = run_etl_pipeline(spark, csv_path, cfg, validate_only=True)
+    assert res.status == "validated"
+    assert cache_is_empty(spark)
+
+    def fail(self, enriched, total):
+        raise LoadError("fact write refused")
+
+    monkeypatch.setattr(Warehouse, "load_fact", fail)
+    res = run_etl_pipeline(spark, csv_path, cfg)
+    assert res.status == "failed" and "refused" in res.error
+    assert cache_is_empty(spark)
+
+
 def test_pipeline_dry_run_writes_nothing(spark, csv_path, tmp_path):
     wh_path = tmp_path / "wh_dry"
     cfg = EngineConfig(warehouse=WarehouseConfig(path=str(wh_path)))

@@ -247,7 +247,10 @@ def test_warehouse_enrichment_broadcasts_dims(spark, tmp_path):
     result = transform_transactions(raw, cfg.validation)
     wh = Warehouse(spark, cfg.warehouse)
     wh.load_warehouse(result.tables)
-    plan = plan_of(wh.enrich_fact(result.tables["fact_data"]))
+    enriched, _ = wh.enrich_fact(result.tables["fact_data"])
+    plan = plan_of(enriched)
+    enriched.unpersist()
+    result.release()
     # all four dim lookups are broadcast hash joins (the reference's
     # dict-map strategy, Spark-shaped); no shuffle on the fact side
     assert plan.count("BroadcastHashJoin") >= 4

@@ -4,6 +4,7 @@ across incremental loads, unmatched-key errors, load stats
 
 from __future__ import annotations
 
+import os
 from datetime import datetime
 
 import pytest
@@ -11,7 +12,7 @@ import pytest
 from local_etl_csv_to_postgresql_spark.config import ValidationConfig, WarehouseConfig
 from local_etl_csv_to_postgresql_spark.operators.transform import transform_transactions
 from local_etl_csv_to_postgresql_spark.warehouse import LoadError, Warehouse
-from tests.conftest import rows_to_df
+from tests.conftest import cache_is_empty, rows_to_df
 
 CFG = ValidationConfig(max_valid_ts=datetime(2024, 1, 1))
 
@@ -23,7 +24,10 @@ def wh(spark, tmp_path):
 
 def _load(spark, wh, rows):
     res = transform_transactions(rows_to_df(spark, rows), CFG)
-    return wh.load_warehouse(res.tables)
+    try:
+        return wh.load_warehouse(res.tables)
+    finally:
+        res.release()
 
 
 def test_fresh_load_counts(spark, wh, valid_rows):
@@ -32,6 +36,14 @@ def test_fresh_load_counts(spark, wh, valid_rows):
     assert stats.fact_inserted == 3 and stats.fact_skipped == 0
     assert stats.dims_inserted["dim_category"] == 3
     assert wh.read("fact_transactions").count() == 3
+    # the load assigns dense surrogate keys 1..n in natural-key order,
+    # as SERIAL does for sorted inserts
+    for table, nk, sk in (
+        ("dim_category", "category_name", "category_key"),
+        ("dim_user", "user_id", "user_key"),
+    ):
+        pairs = sorted((r[nk], r[sk]) for r in wh.read(table).collect())
+        assert [k for _, k in pairs] == list(range(1, len(pairs) + 1)), table
 
 
 def test_rerun_is_idempotent(spark, wh, valid_rows):
@@ -41,6 +53,25 @@ def test_rerun_is_idempotent(spark, wh, valid_rows):
     assert wh.read("fact_transactions").count() == 3
     # dims unchanged too
     assert wh.read("dim_category").count() == 3
+
+
+def test_rerun_writes_no_files(spark, wh, valid_rows):
+    """A batch that is already loaded appends nothing: every table's
+    file set is unchanged and only the new snapshot manifest appears."""
+    root = wh.cfg.path
+
+    def files():
+        return {
+            os.path.relpath(os.path.join(d, f), root)
+            for d, _, names in os.walk(root)
+            for f in names
+        }
+
+    _load(spark, wh, valid_rows)
+    before = files()
+    stats = _load(spark, wh, valid_rows)
+    assert stats.fact_inserted == 0
+    assert files() == before | {f"_snapshots/v{stats.snapshot_version}.json"}
 
 
 def test_incremental_appends_only_new(spark, wh, valid_rows):
@@ -73,14 +104,18 @@ def test_surrogate_keys_stable_across_loads(spark, wh, valid_rows):
 
 
 def test_unmapped_key_raises(spark, wh, valid_rows):
+    spark.catalog.clearCache()
     res = transform_transactions(rows_to_df(spark, valid_rows), CFG)
     wh.load_warehouse(res.tables)
+    res.release()
     # a fact batch referencing a category no dimension knows
     bad_fact = res.tables["fact_data"].withColumn(
         "category", res.tables["fact_data"].category.substr(1, 2)
     )
     with pytest.raises(LoadError, match="Unmapped"):
         wh.enrich_fact(bad_fact)
+    # a direct caller is not left holding the enriched batch's cache
+    assert cache_is_empty(spark)
 
 
 def test_enriched_fact_joins_back(spark, wh, valid_rows):
@@ -197,48 +232,6 @@ def test_quarantine_captures_rejects_with_rule_labels(spark, tmp_path):
     res2 = run_etl_pipeline(spark, str(p), cfg)
     assert res2.status == "success"
     assert spark.read.parquet(qdir).count() == 4
-
-
-def test_large_dim_batch_uses_distributed_rank_same_keys(spark, tmp_path):
-    """Above large_dim_threshold, load_dimension assigns dense surrogate
-    keys via the distributed two-phase rank — the keys must be
-    bit-identical to the window path (row_number in natural-key order,
-    offset past max existing), just without the one-task sort."""
-    from pyspark.sql import functions as F
-
-    from local_etl_csv_to_postgresql_spark.warehouse import Warehouse
-
-    def build(threshold):
-        wh = Warehouse(
-            spark,
-            WarehouseConfig(
-                path=str(tmp_path / f"wh_{threshold}"),
-                large_dim_threshold=threshold,
-            ),
-        )
-        seed = spark.createDataFrame(
-            [(1, "m_000")], ["merchant_key", "merchant_name"]
-        )
-        wh.load_dimension(seed, "dim_merchant", "merchant_name", "merchant_key")
-        batch = spark.range(200).select(
-            F.lit(0).cast("long").alias("merchant_key"),
-            F.format_string("m_%03d", (F.col("id") * 7 % 500) + 1).alias(
-                "merchant_name"
-            ),
-        ).distinct()
-        n = wh.load_dimension(batch, "dim_merchant", "merchant_name", "merchant_key")
-        assert n == 200
-        return sorted(
-            (r["merchant_name"], r["merchant_key"])
-            for r in wh.read("dim_merchant").collect()
-        )
-
-    via_window = build(threshold=10**9)   # always the window path
-    via_ranked = build(threshold=1)       # always the distributed path
-    assert via_window == via_ranked
-    # keys are dense, start past the seed's max, ordered by natural key
-    keys = [k for _, k in via_ranked]
-    assert keys == sorted(keys) and keys[0] == 1 and keys[-1] == 201
 
 
 def test_snapshot_time_travel_across_incremental_loads(spark, tmp_path):
