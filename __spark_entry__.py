@@ -78,39 +78,12 @@ def entry(spark: SparkSession) -> DataFrame:
 # hand-curated (r9 verdict task 1): queries() recomputes it from the
 # checked-in CORRECTNESS_r*.json records at call time, so a driver
 # record that lands after the builder's last commit can never leave the
-# committed window stale. The only judgment input is the bucket-2
-# promotion order, which lives next to the promotions themselves
-# (functions/entrypoints.ROUND10_PROMOTED — the r9 verdict's sequence:
-# cur03 first, warehouse layout, dedup audits, streaming sketches, the
-# business-analytics wave, then wave order). hll01 stays rows-only by
-# design (hll02/lc01 are its hash-certified deterministic siblings) and
-# sits outside the rotation entirely.
+# committed window stale. Every bucket is ordered by data and name
+# alone; there is no hand-kept input. hll01 stays rows-only by design
+# (hll02/lc01 are its hash-certified deterministic siblings) and sits
+# outside the rotation entirely.
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
-
-
-def _promotion_order() -> list[str]:
-    """Bucket-2 judgment order: the promotion lists, newest round last
-    (earlier rounds' promotions are already driver-certified, so only
-    the newest round's names are ever actually in bucket 2 — keeping
-    the older lists here makes the order stable if a record is lost).
-    Never-certified names absent from it fall back to name order."""
-    try:
-        from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-            ROUND10_PROMOTED,
-            ROUND11_PROMOTED,
-            ROUND12_PROMOTED,
-            ROUND13_PROMOTED,
-        )
-
-        return (
-            list(ROUND10_PROMOTED)
-            + list(ROUND11_PROMOTED)
-            + list(ROUND12_PROMOTED)
-            + list(ROUND13_PROMOTED)
-        )
-    except ImportError:
-        return []
 
 
 def _driver_history() -> tuple[dict[str, int], dict[str, int]]:
@@ -155,17 +128,16 @@ def _window_order(
     live: list[str],
     oracle_backed: set,
     history: tuple[dict, dict] | None = None,
-    promotion_order: list[str] | None = None,
 ) -> list[str]:
     """The rotation policy as code: the full certification-priority
     ordering of the oracle-backed live registry. Bucket 1 = last driver
-    row failed (name asc); bucket 2 = never driver-certified, in the
-    promotion order then name asc; bucket 3 = oldest last-green round
-    first, name asc within a round. scripts/refresh_queue.py reports
+    row failed (name asc); bucket 2 = never driver-certified (name
+    asc); bucket 3 = oldest last-green round first, name asc within a
+    round. scripts/refresh_queue.py reports
     the same buckets; tests/test_entry.py pins the two views together
     and tests/test_window_policy.py pins the policy on synthetic
-    histories. ``history``/``promotion_order`` exist for those unit
-    tests; production callers omit them."""
+    histories. ``history`` exists for those unit tests; production
+    callers omit it."""
     last_green, last_failed = (
         history if history is not None else _driver_history()
     )
@@ -174,13 +146,8 @@ def _window_order(
         n for n in rotatable
         if n in last_failed and last_failed[n] >= last_green.get(n, -1)
     )
-    promo = (
-        promotion_order if promotion_order is not None else _promotion_order()
-    )
-    promo_rank = {n: i for i, n in enumerate(promo)}
     never = sorted(
-        (n for n in rotatable if n not in last_green and n not in failed),
-        key=lambda n: (promo_rank.get(n, len(promo_rank)), n),
+        n for n in rotatable if n not in last_green and n not in failed
     )
     refresh = sorted(
         (n for n in rotatable if n in last_green and n not in failed),

@@ -5994,9 +5994,6 @@ def _pq_assigned(
         return out
 
     # one Lloyd refinement, both subspaces in one pass
-    cents = spark.createDataFrame(
-        [(m, cid, v) for (m, cid), v in sorted(state.items())], schema
-    )
     # means stay the posexplode -> (m, cid, dim) keyed aggregate: an
     # r13 A/B of the per-dimension COLUMN aggregate (sub_w decimal sum
     # buffers in one hash aggregate) measured 1.6-3.7x SLOWER — Spark's
@@ -6310,16 +6307,8 @@ def _es13_oracle_sql() -> str:
     )
 
 
-# Round-7 staged surface: implemented + locally certified NOW
-# (tests/test_staged_round7.py runs the pair through the same compare
-# harness as the driver gate), registered into queries()/oracle_sql()
-# next round when certification slots free up. NOT merged into
-# EXTENSION_* yet — the never-certified-in-window invariant
-# (tests/test_entry.py) requires every queries() entry without a
-# driver row to sit inside the 50-slot window, and round 6's ten
-# new-entry slots are spent.
-ROUND7_STAGED_QUERIES = {"es13_pq_adc_search": es13_pq_adc_search}
-ROUND7_STAGED_ORACLE = {"es13_pq_adc_search": _es13_oracle_sql()}
+EXTENSION_QUERIES["es13_pq_adc_search"] = es13_pq_adc_search
+EXTENSION_ORACLE["es13_pq_adc_search"] = _es13_oracle_sql()
 
 
 # --- round-6 additions -----------------------------------------------------
@@ -6851,7 +6840,7 @@ FROM c GROUP BY source ORDER BY source
 """
 
 
-# --- round-7 staged surface, wave 2 -----------------------------------------
+# --- round-7 wave 2 ----------------------------------------------------------
 # (dd13 SemDeDup, ir01 DSIR importance weights, q49 TPC-H Q7 shape)
 
 # SemDeDup knobs (dd13): cluster count and the within-cluster cosine
@@ -7270,14 +7259,14 @@ ORDER BY supp_nation, cust_nation, l_year
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "dd13_semantic_dedup": dd13_semantic_dedup,
         "ir01_dsir_importance": ir01_dsir_importance,
         "q49_nation_volume_shipping": q49_nation_volume_shipping,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "dd13_semantic_dedup": _dd13_oracle_sql(),
         "ir01_dsir_importance": _IR01_ORACLE,
@@ -7286,7 +7275,7 @@ ROUND7_STAGED_ORACLE.update(
 )
 
 
-# --- round-7 staged surface, wave 3 (sl01 split leakage, q50 TPC-H Q5) ------
+# --- round-7 wave 3 (sl01 split leakage, q50 TPC-H Q5) -----------------------
 
 def sl01_split_leakage(spark: SparkSession, sf: str) -> DataFrame:
     """Train/val/test split-leakage audit — the hygiene check every
@@ -7423,13 +7412,13 @@ GROUP BY n_name ORDER BY revenue DESC, n_name
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "sl01_split_leakage": sl01_split_leakage,
         "q50_local_supplier_revenue": q50_local_supplier_revenue,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "sl01_split_leakage": _SL01_ORACLE,
         "q50_local_supplier_revenue": _Q50_ORACLE,
@@ -7437,7 +7426,7 @@ ROUND7_STAGED_ORACLE.update(
 )
 
 
-# --- round-7 staged surface, wave 4 (xl01 cross-lingual near-dup) -----------
+# --- round-7 wave 4 (xl01 cross-lingual near-dup) ----------------------------
 
 def xl01_crosslingual_neardup(spark: SparkSession, sf: str) -> DataFrame:
     """Cross-lingual near-duplicate audit — the translated-duplicate
@@ -7519,26 +7508,11 @@ FROM pairs GROUP BY lang_lo, lang_hi ORDER BY lang_lo, lang_hi
 """
 
 
-ROUND7_STAGED_QUERIES["xl01_crosslingual_neardup"] = xl01_crosslingual_neardup
-ROUND7_STAGED_ORACLE["xl01_crosslingual_neardup"] = _XL01_ORACLE
+EXTENSION_QUERIES["xl01_crosslingual_neardup"] = xl01_crosslingual_neardup
+EXTENSION_ORACLE["xl01_crosslingual_neardup"] = _XL01_ORACLE
 
 
-# --- round-7 staged surface, wave 5 (st11 watermarked stream dedup) ---------
-
-def _register_staged_streaming() -> None:
-    """st11 lives with the streaming family (streaming/queries.py);
-    registered here so the staged harness certifies it with the rest
-    of the round-7 queue."""
-    from ..streaming.queries import ST11_STAGED_ORACLE, st11_watermarked_dedup
-
-    ROUND7_STAGED_QUERIES["st11_watermarked_dedup"] = st11_watermarked_dedup
-    ROUND7_STAGED_ORACLE["st11_watermarked_dedup"] = ST11_STAGED_ORACLE
-
-
-_register_staged_streaming()
-
-
-# --- round-7 staged surface, wave 6 (q51, ss04, gr02, st12) -----------------
+# --- round-7 wave 6 (q51, ss04, gr02, st12) ----------------------------------
 
 def q51_returned_item_revenue(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q10 shape (returned-item revenue): which customers sent
@@ -7827,14 +7801,14 @@ ORDER BY rank_units DESC, doc_id LIMIT {PR_TOPK}
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "q51_returned_item_revenue": q51_returned_item_revenue,
         "ss04_temporal_split_audit": ss04_temporal_split_audit,
         "gr02_candidate_pagerank": gr02_candidate_pagerank,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "q51_returned_item_revenue": _Q51_ORACLE,
         "ss04_temporal_split_audit": _SS04_ORACLE,
@@ -7843,19 +7817,7 @@ ROUND7_STAGED_ORACLE.update(
 )
 
 
-def _register_staged_streaming_wave6() -> None:
-    """st12 lives with the streaming family (streaming/queries.py),
-    same discipline as st11's registration above."""
-    from ..streaming.queries import ST12_STAGED_ORACLE, st12_foreachbatch_upsert
-
-    ROUND7_STAGED_QUERIES["st12_foreachbatch_upsert"] = st12_foreachbatch_upsert
-    ROUND7_STAGED_ORACLE["st12_foreachbatch_upsert"] = ST12_STAGED_ORACLE
-
-
-_register_staged_streaming_wave6()
-
-
-# --- round-7 staged surface, wave 7 (ct03, win04) ---------------------------
+# --- round-7 wave 7 (ct03, win04) --------------------------------------------
 
 CT03_EVAL_SOURCE = "src0"  # the source standing in for a benchmark suite
 CT03_THRESHOLD = 0.5  # dd06's verified-near-dup operating point
@@ -8132,13 +8094,13 @@ FROM w ORDER BY user_id, day
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "ct03_fuzzy_contamination": ct03_fuzzy_contamination,
         "win04_linear_interpolation": win04_linear_interpolation,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "ct03_fuzzy_contamination": _CT03_ORACLE,
         "win04_linear_interpolation": _WIN04_ORACLE,
@@ -8146,7 +8108,7 @@ ROUND7_STAGED_ORACLE.update(
 )
 
 
-# --- round-7 staged surface, wave 8 (hll02 deterministic HLL) ---------------
+# --- round-7 wave 8 (hll02 deterministic HLL) --------------------------------
 
 HLL_P = 8  # 2^8 = 256 registers; std err ~ 1.04/sqrt(256) = 6.5%
 HLL_M = 1 << HLL_P
@@ -8305,11 +8267,11 @@ FROM scored ORDER BY event_type
 """
 
 
-ROUND7_STAGED_QUERIES["hll02_deterministic_hll"] = hll02_deterministic_hll
-ROUND7_STAGED_ORACLE["hll02_deterministic_hll"] = _hll02_oracle_sql()
+EXTENSION_QUERIES["hll02_deterministic_hll"] = hll02_deterministic_hll
+EXTENSION_ORACLE["hll02_deterministic_hll"] = _hll02_oracle_sql()
 
 
-# --- round-7 staged surface, wave 11 (TPC-H Q3/Q4/Q12/Q14/Q18 shapes) -------
+# --- round-7 wave 11 (TPC-H Q3/Q4/Q12/Q14/Q18 shapes) ------------------------
 # The five remaining celebrated TPC-H patterns expressible on this
 # schema (no l_commitdate/l_receiptdate/l_shipmode/partsupp columns
 # exist in the driver tables, so Q4 and Q12 substitute the available
@@ -8587,7 +8549,7 @@ ORDER BY o_totalprice DESC, o_orderkey LIMIT 20
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "q52_shipping_priority": q52_shipping_priority,
         "q53_order_priority_check": q53_order_priority_check,
@@ -8596,7 +8558,7 @@ ROUND7_STAGED_QUERIES.update(
         "q58_large_volume_orders": q58_large_volume_orders,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "q52_shipping_priority": _Q52_ORACLE,
         "q53_order_priority_check": _Q53_ORACLE,
@@ -8607,7 +8569,7 @@ ROUND7_STAGED_ORACLE.update(
 )
 
 
-# --- round-7 staged surface, wave 12 (q54 TPC-H Q9, q57 TPC-H Q16) ----------
+# --- round-7 wave 12 (q54 TPC-H Q9, q57 TPC-H Q16) ---------------------------
 
 
 def q54_product_profit(spark: SparkSession, sf: str) -> DataFrame:
@@ -8731,13 +8693,13 @@ ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "q54_product_profit": q54_product_profit,
         "q57_supplier_part_counts": q57_supplier_part_counts,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "q54_product_profit": _Q54_ORACLE,
         "q57_supplier_part_counts": _Q57_ORACLE,
@@ -8745,7 +8707,7 @@ ROUND7_STAGED_ORACLE.update(
 )
 
 
-# --- round-7 staged surface, wave 13 (cm01 Count-Min, es14 truncation) ------
+# --- round-7 wave 13 (cm01 Count-Min, es14 truncation) -----------------------
 
 # Count-Min knobs (cm01): D hash rows × W buckets. The cell matrix is
 # D·W rows BY CONSTRUCTION regardless of corpus size — with the
@@ -8994,13 +8956,13 @@ ORDER BY query_id
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "cm01_countmin_heavy_hitters": cm01_countmin_heavy_hitters,
         "es14_truncated_dim_recall": es14_truncated_dim_recall,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "cm01_countmin_heavy_hitters": _cm01_oracle_sql(),
         "es14_truncated_dim_recall": _es14_oracle_sql(),
@@ -9008,7 +8970,7 @@ ROUND7_STAGED_ORACLE.update(
 )
 
 
-# --- round-7 staged surface, wave 14 (tx14, win05, ss05) --------------------
+# --- round-7 wave 14 (tx14, win05, ss05) -------------------------------------
 
 
 def _bigram_xent_per_doc(spark: SparkSession, sf: str) -> DataFrame:
@@ -9279,14 +9241,14 @@ FROM per ORDER BY shard
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "tx14_bigram_cross_entropy": tx14_bigram_cross_entropy,
         "win05_activity_streaks": win05_activity_streaks,
         "ss05_shard_balance_audit": ss05_shard_balance_audit,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "tx14_bigram_cross_entropy": _TX14_ORACLE,
         "win05_activity_streaks": _WIN05_ORACLE,
@@ -9295,7 +9257,7 @@ ROUND7_STAGED_ORACLE.update(
 )
 
 
-# --- round-7 staged surface, wave 15 (es15 JL random projection) ------------
+# --- round-7 wave 15 (es15 JL random projection) -----------------------------
 
 JL_OUT_DIMS = 16
 JL_IN_DIMS = 64
@@ -9438,11 +9400,11 @@ ORDER BY id_a
 """
 
 
-ROUND7_STAGED_QUERIES["es15_jl_projection_qc"] = es15_jl_projection_qc
-ROUND7_STAGED_ORACLE["es15_jl_projection_qc"] = _es15_oracle_sql()
+EXTENSION_QUERIES["es15_jl_projection_qc"] = es15_jl_projection_qc
+EXTENSION_ORACLE["es15_jl_projection_qc"] = _es15_oracle_sql()
 
 
-# --- round-7 staged surface, wave 16 (mm06 media payload dedup) -------------
+# --- round-7 wave 16 (mm06 media payload dedup) ------------------------------
 
 
 def mm06_payload_dedup_audit(spark: SparkSession, sf: str) -> DataFrame:
@@ -9505,28 +9467,11 @@ GROUP BY source ORDER BY source
 """
 
 
-ROUND7_STAGED_QUERIES["mm06_payload_dedup_audit"] = mm06_payload_dedup_audit
-ROUND7_STAGED_ORACLE["mm06_payload_dedup_audit"] = _MM06_ORACLE
+EXTENSION_QUERIES["mm06_payload_dedup_audit"] = mm06_payload_dedup_audit
+EXTENSION_ORACLE["mm06_payload_dedup_audit"] = _MM06_ORACLE
 
 
-def _register_staged_streaming_wave17() -> None:
-    """st13 lives with the streaming family (streaming/queries.py),
-    same discipline as st11/st12's registrations above."""
-    from ..streaming.queries import (
-        ST13_STAGED_ORACLE,
-        st13_left_outer_attribution,
-    )
-
-    ROUND7_STAGED_QUERIES["st13_left_outer_attribution"] = (
-        st13_left_outer_attribution
-    )
-    ROUND7_STAGED_ORACLE["st13_left_outer_attribution"] = ST13_STAGED_ORACLE
-
-
-_register_staged_streaming_wave17()
-
-
-# --- round-7 staged surface, wave 18 (fz01, pa01, ii01, rs01, cr01, win06) --
+# --- round-7 wave 18 (fz01, pa01, ii01, rs01, cr01, win06) -------------------
 
 
 def fz01_fuzzy_name_pairs(spark: SparkSession, sf: str) -> DataFrame:
@@ -9984,7 +9929,7 @@ ORDER BY event_type, day
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "fz01_fuzzy_name_pairs": fz01_fuzzy_name_pairs,
         "pa01_k_anonymity_audit": pa01_k_anonymity_audit,
@@ -9994,7 +9939,7 @@ ROUND7_STAGED_QUERIES.update(
         "win06_daily_ohlc": win06_daily_ohlc,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "fz01_fuzzy_name_pairs": _FZ01_ORACLE,
         "pa01_k_anonymity_audit": _PA01_ORACLE,
@@ -10006,7 +9951,7 @@ ROUND7_STAGED_ORACLE.update(
 )
 
 
-# --- round-7 staged surface, wave 19 (q59, tx15, pa02) ----------------------
+# --- round-7 wave 19 (q59, tx15, pa02) ---------------------------------------
 
 
 def q59_forecast_revenue(spark: SparkSession, sf: str) -> DataFrame:
@@ -10172,14 +10117,14 @@ FROM classes GROUP BY l ORDER BY l_distinct
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "q59_forecast_revenue": q59_forecast_revenue,
         "tx15_heaps_vocab_growth": tx15_heaps_vocab_growth,
         "pa02_l_diversity_audit": pa02_l_diversity_audit,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "q59_forecast_revenue": _Q59_ORACLE,
         "tx15_heaps_vocab_growth": _TX15_ORACLE,
@@ -10188,22 +10133,7 @@ ROUND7_STAGED_ORACLE.update(
 )
 
 
-# --- round-7 staged surface, wave 20 (st14) ---------------------------------
-
-
-def _register_staged_streaming_wave20() -> None:
-    """st14 lives with the streaming family (streaming/queries.py),
-    same discipline as st11-st13's registrations above."""
-    from ..streaming.queries import ST14_STAGED_ORACLE, st14_content_dedup
-
-    ROUND7_STAGED_QUERIES["st14_content_dedup"] = st14_content_dedup
-    ROUND7_STAGED_ORACLE["st14_content_dedup"] = ST14_STAGED_ORACLE
-
-
-_register_staged_streaming_wave20()
-
-
-# --- round-7 staged surface, wave 21 (hq02, inc03) --------------------------
+# --- round-7 wave 21 (hq02, inc03) -------------------------------------------
 
 
 def hq02_mergeable_histogram(spark: SparkSession, sf: str) -> DataFrame:
@@ -10463,7 +10393,7 @@ ORDER BY m.event_type
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "hq02_mergeable_histogram": hq02_mergeable_histogram,
         "inc03_incremental_rollup_maintenance": (
@@ -10471,7 +10401,7 @@ ROUND7_STAGED_QUERIES.update(
         ),
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "hq02_mergeable_histogram": _HQ02_ORACLE,
         "inc03_incremental_rollup_maintenance": _INC03_ORACLE,
@@ -10479,7 +10409,7 @@ ROUND7_STAGED_ORACLE.update(
 )
 
 
-# --- round-7 staged surface, wave 22 (tx16) ---------------------------------
+# --- round-7 wave 22 (tx16) --------------------------------------------------
 
 
 def tx16_trigram_nb_langid(spark: SparkSession, sf: str) -> DataFrame:
@@ -10674,11 +10604,11 @@ FROM pred WHERE rk = 1 GROUP BY 1, 2 ORDER BY lang_true, lang_pred
 """
 
 
-ROUND7_STAGED_QUERIES["tx16_trigram_nb_langid"] = tx16_trigram_nb_langid
-ROUND7_STAGED_ORACLE["tx16_trigram_nb_langid"] = _TX16_ORACLE
+EXTENSION_QUERIES["tx16_trigram_nb_langid"] = tx16_trigram_nb_langid
+EXTENSION_ORACLE["tx16_trigram_nb_langid"] = _TX16_ORACLE
 
 
-# --- round-7 staged surface, wave 23 (ts01) ---------------------------------
+# --- round-7 wave 23 (ts01) --------------------------------------------------
 
 
 def ts01_seasonal_naive_error(spark: SparkSession, sf: str) -> DataFrame:
@@ -10789,11 +10719,11 @@ ORDER BY e24.event_type
 """
 
 
-ROUND7_STAGED_QUERIES["ts01_seasonal_naive_error"] = ts01_seasonal_naive_error
-ROUND7_STAGED_ORACLE["ts01_seasonal_naive_error"] = _TS01_ORACLE
+EXTENSION_QUERIES["ts01_seasonal_naive_error"] = ts01_seasonal_naive_error
+EXTENSION_ORACLE["ts01_seasonal_naive_error"] = _TS01_ORACLE
 
 
-# --- round-7 staged surface, wave 24 (cur02) --------------------------------
+# --- round-7 wave 24 (cur02) -------------------------------------------------
 
 
 def _label_centroid_sqdist(spark: SparkSession, sf: str) -> DataFrame:
@@ -10969,13 +10899,13 @@ ORDER BY e.label
 """
 
 
-ROUND7_STAGED_QUERIES["cur02_embedding_curation_funnel"] = (
+EXTENSION_QUERIES["cur02_embedding_curation_funnel"] = (
     cur02_embedding_curation_funnel
 )
-ROUND7_STAGED_ORACLE["cur02_embedding_curation_funnel"] = _CUR02_ORACLE
+EXTENSION_ORACLE["cur02_embedding_curation_funnel"] = _CUR02_ORACLE
 
 
-# --- round-7 staged surface, wave 25 (dd14) ---------------------------------
+# --- round-7 wave 25 (dd14) --------------------------------------------------
 
 
 def dd14_rolling_hash_signature(spark: SparkSession, sf: str) -> DataFrame:
@@ -11085,13 +11015,13 @@ GROUP BY source ORDER BY source
 """
 
 
-ROUND7_STAGED_QUERIES["dd14_rolling_hash_signature"] = (
+EXTENSION_QUERIES["dd14_rolling_hash_signature"] = (
     dd14_rolling_hash_signature
 )
-ROUND7_STAGED_ORACLE["dd14_rolling_hash_signature"] = _DD14_ORACLE
+EXTENSION_ORACLE["dd14_rolling_hash_signature"] = _DD14_ORACLE
 
 
-# --- round-7 staged surface, wave 26 (bm01, dd15) ----------------------------
+# --- round-7 wave 26 (bm01, dd15) --------------------------------------------
 
 
 _BM01_TERMS = ("spark", "query", "window", "merge")
@@ -11244,8 +11174,8 @@ LIMIT 15
 """
 
 
-ROUND7_STAGED_QUERIES["bm01_bm25_retrieval"] = bm01_bm25_retrieval
-ROUND7_STAGED_ORACLE["bm01_bm25_retrieval"] = _BM01_ORACLE
+EXTENSION_QUERIES["bm01_bm25_retrieval"] = bm01_bm25_retrieval
+EXTENSION_ORACLE["bm01_bm25_retrieval"] = _BM01_ORACLE
 
 
 def dd15_duplicated_gram_fraction(spark: SparkSession, sf: str) -> DataFrame:
@@ -11333,13 +11263,13 @@ GROUP BY source ORDER BY source
 """
 
 
-ROUND7_STAGED_QUERIES["dd15_duplicated_gram_fraction"] = (
+EXTENSION_QUERIES["dd15_duplicated_gram_fraction"] = (
     dd15_duplicated_gram_fraction
 )
-ROUND7_STAGED_ORACLE["dd15_duplicated_gram_fraction"] = _DD15_ORACLE
+EXTENSION_ORACLE["dd15_duplicated_gram_fraction"] = _DD15_ORACLE
 
 
-# --- round-7 staged surface, wave 27 (tc01, pa03) ----------------------------
+# --- round-7 wave 27 (tc01, pa03) --------------------------------------------
 
 
 def tc01_neardup_triangles(spark: SparkSession, sf: str) -> DataFrame:
@@ -11437,8 +11367,8 @@ FROM s, e, t
 """
 
 
-ROUND7_STAGED_QUERIES["tc01_neardup_triangles"] = tc01_neardup_triangles
-ROUND7_STAGED_ORACLE["tc01_neardup_triangles"] = _tc01_oracle_sql()
+EXTENSION_QUERIES["tc01_neardup_triangles"] = tc01_neardup_triangles
+EXTENSION_ORACLE["tc01_neardup_triangles"] = _tc01_oracle_sql()
 
 
 def pa03_t_closeness_audit(spark: SparkSession, sf: str) -> DataFrame:
@@ -11547,11 +11477,11 @@ LIMIT 20
 """
 
 
-ROUND7_STAGED_QUERIES["pa03_t_closeness_audit"] = pa03_t_closeness_audit
-ROUND7_STAGED_ORACLE["pa03_t_closeness_audit"] = _PA03_ORACLE
+EXTENSION_QUERIES["pa03_t_closeness_audit"] = pa03_t_closeness_audit
+EXTENSION_ORACLE["pa03_t_closeness_audit"] = _PA03_ORACLE
 
 
-# --- round-7 staged surface, wave 28 (ts02, sync01) --------------------------
+# --- round-7 wave 28 (ts02, sync01) ------------------------------------------
 
 
 def ts02_cusum_level_shift(spark: SparkSession, sf: str) -> DataFrame:
@@ -11689,8 +11619,8 @@ ORDER BY event_type
 """
 
 
-ROUND7_STAGED_QUERIES["ts02_cusum_level_shift"] = ts02_cusum_level_shift
-ROUND7_STAGED_ORACLE["ts02_cusum_level_shift"] = _TS02_ORACLE
+EXTENSION_QUERIES["ts02_cusum_level_shift"] = ts02_cusum_level_shift
+EXTENSION_ORACLE["ts02_cusum_level_shift"] = _TS02_ORACLE
 
 
 def sync01_bucket_checksum_diff(spark: SparkSession, sf: str) -> DataFrame:
@@ -11803,13 +11733,13 @@ ORDER BY bucket
 """
 
 
-ROUND7_STAGED_QUERIES["sync01_bucket_checksum_diff"] = (
+EXTENSION_QUERIES["sync01_bucket_checksum_diff"] = (
     sync01_bucket_checksum_diff
 )
-ROUND7_STAGED_ORACLE["sync01_bucket_checksum_diff"] = _SYNC01_ORACLE
+EXTENSION_ORACLE["sync01_bucket_checksum_diff"] = _SYNC01_ORACLE
 
 
-# --- round-7 staged surface, wave 29 (fs01) ----------------------------------
+# --- round-7 wave 29 (fs01) --------------------------------------------------
 
 
 def fs01_fellegi_sunter_scores(spark: SparkSession, sf: str) -> DataFrame:
@@ -12000,13 +11930,13 @@ LIMIT 25
 """
 
 
-ROUND7_STAGED_QUERIES["fs01_fellegi_sunter_scores"] = (
+EXTENSION_QUERIES["fs01_fellegi_sunter_scores"] = (
     fs01_fellegi_sunter_scores
 )
-ROUND7_STAGED_ORACLE["fs01_fellegi_sunter_scores"] = _FS01_ORACLE
+EXTENSION_ORACLE["fs01_fellegi_sunter_scores"] = _FS01_ORACLE
 
 
-# --- round-7 staged surface, wave 30 (dp01, fd01) ----------------------------
+# --- round-7 wave 30 (dp01, fd01) --------------------------------------------
 
 
 def dp01_contribution_bounding(spark: SparkSession, sf: str) -> DataFrame:
@@ -12119,10 +12049,10 @@ ORDER BY s.event_type
 """
 
 
-ROUND7_STAGED_QUERIES["dp01_contribution_bounding"] = (
+EXTENSION_QUERIES["dp01_contribution_bounding"] = (
     dp01_contribution_bounding
 )
-ROUND7_STAGED_ORACLE["dp01_contribution_bounding"] = _DP01_ORACLE
+EXTENSION_ORACLE["dp01_contribution_bounding"] = _DP01_ORACLE
 
 
 _FD01_CANDIDATES = (
@@ -12206,13 +12136,13 @@ FROM (
     return " UNION ALL ".join(legs) + " ORDER BY fd"
 
 
-ROUND7_STAGED_QUERIES["fd01_functional_dependencies"] = (
+EXTENSION_QUERIES["fd01_functional_dependencies"] = (
     fd01_functional_dependencies
 )
-ROUND7_STAGED_ORACLE["fd01_functional_dependencies"] = _fd01_oracle_sql()
+EXTENSION_ORACLE["fd01_functional_dependencies"] = _fd01_oracle_sql()
 
 
-# --- round-7 staged surface, wave 31 (rk01, tx17) ----------------------------
+# --- round-7 wave 31 (rk01, tx17) --------------------------------------------
 
 
 def rk01_rank_agreement(spark: SparkSession, sf: str) -> DataFrame:
@@ -12339,8 +12269,8 @@ FROM pairs
 """
 
 
-ROUND7_STAGED_QUERIES["rk01_rank_agreement"] = rk01_rank_agreement
-ROUND7_STAGED_ORACLE["rk01_rank_agreement"] = _RK01_ORACLE
+EXTENSION_QUERIES["rk01_rank_agreement"] = rk01_rank_agreement
+EXTENSION_ORACLE["rk01_rank_agreement"] = _RK01_ORACLE
 
 
 def tx17_bigram_continuations(spark: SparkSession, sf: str) -> DataFrame:
@@ -12429,13 +12359,13 @@ LIMIT 20
 """
 
 
-ROUND7_STAGED_QUERIES["tx17_bigram_continuations"] = (
+EXTENSION_QUERIES["tx17_bigram_continuations"] = (
     tx17_bigram_continuations
 )
-ROUND7_STAGED_ORACLE["tx17_bigram_continuations"] = _TX17_ORACLE
+EXTENSION_ORACLE["tx17_bigram_continuations"] = _TX17_ORACLE
 
 
-# --- round-7 staged surface, wave 32 (imb01) ---------------------------------
+# --- round-7 wave 32 (imb01) -------------------------------------------------
 
 
 def imb01_label_imbalance(spark: SparkSession, sf: str) -> DataFrame:
@@ -12518,81 +12448,12 @@ ORDER BY a.source
 """
 
 
-ROUND7_STAGED_QUERIES["imb01_label_imbalance"] = imb01_label_imbalance
-ROUND7_STAGED_ORACLE["imb01_label_imbalance"] = _IMB01_ORACLE
+EXTENSION_QUERIES["imb01_label_imbalance"] = imb01_label_imbalance
+EXTENSION_ORACLE["imb01_label_imbalance"] = _IMB01_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-7 promotion (VERDICT r6 task 1): graduate 50 staged queries into the
-# live EXTENSION registries, in the verdict's priority order — hll02 first
-# (retires hll01's rows-only asterisk), then the TPC-H shape closeout
-# q49–q59, dd13/dd14/dd15, pa01–pa03, bm01/ii01, st11–st14, then the rest.
-# The remaining 8 (win05/win06/rs01/cr01/ts01/hq02/sync01/tx17) stay staged
-# for the round-8 window — all are locally certified at sf0.001+sf0.01 in
-# tests/test_staged_round7.py, so their graduation is again a dict move.
-ROUND7_PROMOTED: list[str] = [
-    "hll02_deterministic_hll",
-    "q49_nation_volume_shipping",
-    "q50_local_supplier_revenue",
-    "q51_returned_item_revenue",
-    "q52_shipping_priority",
-    "q53_order_priority_check",
-    "q54_product_profit",
-    "q55_priority_pivot_by_status",
-    "q56_promo_revenue_share",
-    "q57_supplier_part_counts",
-    "q58_large_volume_orders",
-    "q59_forecast_revenue",
-    "dd13_semantic_dedup",
-    "dd14_rolling_hash_signature",
-    "dd15_duplicated_gram_fraction",
-    "pa01_k_anonymity_audit",
-    "pa02_l_diversity_audit",
-    "pa03_t_closeness_audit",
-    "bm01_bm25_retrieval",
-    "ii01_inverted_index",
-    "st11_watermarked_dedup",
-    "st12_foreachbatch_upsert",
-    "st13_left_outer_attribution",
-    "st14_content_dedup",
-    # the rest, near-dup/graph family kept adjacent so the shared
-    # edge/cluster intermediates build once and attribute cleanly
-    "gr02_candidate_pagerank",
-    "tc01_neardup_triangles",
-    "ct03_fuzzy_contamination",
-    "xl01_crosslingual_neardup",
-    "es13_pq_adc_search",
-    "es14_truncated_dim_recall",
-    "es15_jl_projection_qc",
-    "ir01_dsir_importance",
-    "sl01_split_leakage",
-    "ss04_temporal_split_audit",
-    "ss05_shard_balance_audit",
-    "win04_linear_interpolation",
-    "cm01_countmin_heavy_hitters",
-    "tx14_bigram_cross_entropy",
-    "tx15_heaps_vocab_growth",
-    "tx16_trigram_nb_langid",
-    "mm06_payload_dedup_audit",
-    "fz01_fuzzy_name_pairs",
-    "inc03_incremental_rollup_maintenance",
-    "ts02_cusum_level_shift",
-    "cur02_embedding_curation_funnel",
-    "fs01_fellegi_sunter_scores",
-    "dp01_contribution_bounding",
-    "fd01_functional_dependencies",
-    "rk01_rank_agreement",
-    "imb01_label_imbalance",
-]
-
-for _name in ROUND7_PROMOTED:
-    EXTENSION_QUERIES[_name] = ROUND7_STAGED_QUERIES.pop(_name)
-    EXTENSION_ORACLE[_name] = ROUND7_STAGED_ORACLE.pop(_name)
-del _name
-
-
-# ---------------------------------------------------------------------------
-# Round-8 staging, wave 33: mw01 Mann-Whitney U drift, tx18 Flesch
+# Round-8, wave 33: mw01 Mann-Whitney U drift, tx18 Flesch
 # readability, tx19 lexical richness.
 
 
@@ -12852,14 +12713,14 @@ FROM wc GROUP BY lang ORDER BY lang
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "mw01_mann_whitney_drift": mw01_mann_whitney_drift,
         "tx18_flesch_readability": tx18_flesch_readability,
         "tx19_lexical_richness": tx19_lexical_richness,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "mw01_mann_whitney_drift": _MW01_ORACLE,
         "tx18_flesch_readability": _TX18_ORACLE,
@@ -12869,7 +12730,7 @@ ROUND7_STAGED_ORACLE.update(
 
 
 # ---------------------------------------------------------------------------
-# Round-8 staging, wave 34: qf03 C4 heuristic filters, ret01 weekly
+# Round-8, wave 34: qf03 C4 heuristic filters, ret01 weekly
 # cohort retention, zo01 z-order locality audit.
 
 
@@ -13146,14 +13007,14 @@ FROM spans GROUP BY layout ORDER BY layout
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "qf03_c4_heuristic_filters": qf03_c4_heuristic_filters,
         "ret01_weekly_cohort_retention": ret01_weekly_cohort_retention,
         "zo01_zorder_locality": zo01_zorder_locality,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "qf03_c4_heuristic_filters": _QF03_ORACLE,
         "ret01_weekly_cohort_retention": _RET01_ORACLE,
@@ -13163,7 +13024,7 @@ ROUND7_STAGED_ORACLE.update(
 
 
 # ---------------------------------------------------------------------------
-# Round-8 staging, wave 35: ln01 near-dup source-conflict audit, ts03
+# Round-8, wave 35: ln01 near-dup source-conflict audit, ts03
 # revenue autocorrelation table.
 
 
@@ -13329,13 +13190,13 @@ FROM mom ORDER BY lag
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "ln01_neardup_source_conflict": ln01_neardup_source_conflict,
         "ts03_revenue_autocorrelation": ts03_revenue_autocorrelation,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "ln01_neardup_source_conflict": _ln01_oracle_sql(),
         "ts03_revenue_autocorrelation": _TS03_ORACLE,
@@ -13344,7 +13205,7 @@ ROUND7_STAGED_ORACLE.update(
 
 
 # ---------------------------------------------------------------------------
-# Round-8 staging, wave 36: dd16 winnowing fingerprints, mm07 magic-byte
+# Round-8, wave 36: dd16 winnowing fingerprints, mm07 magic-byte
 # container sniffing.
 
 
@@ -13572,13 +13433,13 @@ FROM sniffed GROUP BY 1, 2 ORDER BY source, sniffed_mime
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "dd16_winnowing_fingerprints": dd16_winnowing_fingerprints,
         "mm07_magic_byte_sniffing": mm07_magic_byte_sniffing,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "dd16_winnowing_fingerprints": _DD16_ORACLE,
         "mm07_magic_byte_sniffing": _MM07_ORACLE,
@@ -13586,18 +13447,8 @@ ROUND7_STAGED_ORACLE.update(
 )
 
 
-def _register_staged_streaming_wave37() -> None:
-    from ..streaming.queries import ST15_STAGED_ORACLE, st15_scd_asof_enrich
-
-    ROUND7_STAGED_QUERIES["st15_scd_asof_enrich"] = st15_scd_asof_enrich
-    ROUND7_STAGED_ORACLE["st15_scd_asof_enrich"] = ST15_STAGED_ORACLE
-
-
-_register_staged_streaming_wave37()
-
-
 # ---------------------------------------------------------------------------
-# Round-8 staging, wave 38: hll03 HLL merge certification, mi01
+# Round-8, wave 38: hll03 HLL merge certification, mi01
 # lang-source mutual information, ab01 two-proportion drift z-test.
 
 
@@ -13889,7 +13740,7 @@ ORDER BY source_a, source_b
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "hll03_hll_mergeability": hll03_hll_mergeability,
         "mi01_label_source_mutual_information": (
@@ -13898,7 +13749,7 @@ ROUND7_STAGED_QUERIES.update(
         "ab01_proportion_drift": ab01_proportion_drift,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "hll03_hll_mergeability": _hll03_oracle_sql(),
         "mi01_label_source_mutual_information": _MI01_ORACLE,
@@ -13908,7 +13759,7 @@ ROUND7_STAGED_ORACLE.update(
 
 
 # ---------------------------------------------------------------------------
-# Round-8 staging, wave 39: gr03 star-contraction connected components,
+# Round-8, wave 39: gr03 star-contraction connected components,
 # en01 per-source character entropy.
 
 
@@ -14016,13 +13867,13 @@ FROM cells GROUP BY source ORDER BY source
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "gr03_cc_star_contraction": gr03_cc_star_contraction,
         "en01_char_entropy": en01_char_entropy,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "gr03_cc_star_contraction": EXTENSION_ORACLE[
             "dd06_neardup_clusters"
@@ -14033,7 +13884,7 @@ ROUND7_STAGED_ORACLE.update(
 
 
 # ---------------------------------------------------------------------------
-# Round-8 staging, wave 40: tx20 stupid-backoff LM scoring, ev01 ANN
+# Round-8, wave 40: tx20 stupid-backoff LM scoring, ev01 ANN
 # ranking-quality metrics (MRR / nDCG@10).
 
 
@@ -14379,13 +14230,13 @@ ORDER BY query_id
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "tx20_stupid_backoff_scoring": tx20_stupid_backoff_scoring,
         "ev01_ann_ranking_quality": ev01_ann_ranking_quality,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "tx20_stupid_backoff_scoring": _TX20_ORACLE,
         "ev01_ann_ranking_quality": _EV01_ORACLE.format(
@@ -14398,7 +14249,7 @@ ROUND7_STAGED_ORACLE.update(
 
 
 # ---------------------------------------------------------------------------
-# Round-8 staging, wave 41: bj01 bucketed co-located star join.
+# Round-8, wave 41: bj01 bucketed co-located star join.
 
 _BJ01_TABLES: dict = {}
 
@@ -14493,14 +14344,14 @@ GROUP BY 1 ORDER BY o_orderpriority
 """
 
 
-ROUND7_STAGED_QUERIES["bj01_bucketed_colocated_join"] = (
+EXTENSION_QUERIES["bj01_bucketed_colocated_join"] = (
     bj01_bucketed_colocated_join
 )
-ROUND7_STAGED_ORACLE["bj01_bucketed_colocated_join"] = _BJ01_ORACLE
+EXTENSION_ORACLE["bj01_bucketed_colocated_join"] = _BJ01_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-8 staging, wave 42: ss06 k-fold cross-validation assignment audit.
+# Round-8, wave 42: ss06 k-fold cross-validation assignment audit.
 
 
 def ss06_kfold_assignment_audit(spark: SparkSession, sf: str) -> DataFrame:
@@ -14604,66 +14455,14 @@ FROM x GROUP BY fold ORDER BY fold
 """
 
 
-ROUND7_STAGED_QUERIES["ss06_kfold_assignment_audit"] = (
+EXTENSION_QUERIES["ss06_kfold_assignment_audit"] = (
     ss06_kfold_assignment_audit
 )
-ROUND7_STAGED_ORACLE["ss06_kfold_assignment_audit"] = _ss06_oracle_sql()
+EXTENSION_ORACLE["ss06_kfold_assignment_audit"] = _ss06_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
-# Round-8 promotion (VERDICT r7 task 1): graduate all 28 staged queries into
-# the live EXTENSION registries, in the verdict's priority order — the r6
-# holdovers first (staged two rounds is too long), then gr03/hll03 (the
-# algorithm- and merge-equivalence certifications), bj01 (the fact↔fact
-# bucketed-join strategy), then waves 33–42. Every name below has a recorded
-# sf0.1 wall in scripts/staged_sf01_walls.json (the dd14-lesson promotion
-# precondition, swept 2026-08-15 at loadavg <0.3 — worst case gr03 6.95 s,
-# which pays the shared CC-base rebuild per isolated run; it rides the
-# ccbase carrier slot in the bench) — pinned by
-# tests/test_staged_round7.py::test_promoted_queries_were_sf01_swept.
-ROUND8_PROMOTED: list[str] = [
-    # r6 holdovers
-    "win05_activity_streaks",
-    "win06_daily_ohlc",
-    "rs01_mad_outliers",
-    "cr01_value_time_correlation",
-    "ts01_seasonal_naive_error",
-    "hq02_mergeable_histogram",
-    "sync01_bucket_checksum_diff",
-    "tx17_bigram_continuations",
-    # algorithm-equivalence certifications
-    "gr03_cc_star_contraction",
-    "hll03_hll_mergeability",
-    # the fact↔fact bucketed co-located join strategy
-    "bj01_bucketed_colocated_join",
-    # waves 33–42
-    "mw01_mann_whitney_drift",
-    "tx18_flesch_readability",
-    "tx19_lexical_richness",
-    "qf03_c4_heuristic_filters",
-    "ret01_weekly_cohort_retention",
-    "zo01_zorder_locality",
-    "ln01_neardup_source_conflict",
-    "ts03_revenue_autocorrelation",
-    "dd16_winnowing_fingerprints",
-    "mm07_magic_byte_sniffing",
-    "st15_scd_asof_enrich",
-    "mi01_label_source_mutual_information",
-    "ab01_proportion_drift",
-    "en01_char_entropy",
-    "tx20_stupid_backoff_scoring",
-    "ev01_ann_ranking_quality",
-    "ss06_kfold_assignment_audit",
-]
-
-for _name in ROUND8_PROMOTED:
-    EXTENSION_QUERIES[_name] = ROUND7_STAGED_QUERIES.pop(_name)
-    EXTENSION_ORACLE[_name] = ROUND7_STAGED_ORACLE.pop(_name)
-del _name
-
-
-# ---------------------------------------------------------------------------
-# Round-9 staging, wave 43: mk01 Markov transitions, kl01 per-source
+# Round-9, wave 43: mk01 Markov transitions, kl01 per-source
 # unigram KL divergence, nv01 n-gram novelty (memorization audit).
 
 
@@ -14896,14 +14695,14 @@ GROUP BY v.lang ORDER BY v.lang
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "mk01_event_markov_transitions": mk01_event_markov_transitions,
         "kl01_source_unigram_kl": kl01_source_unigram_kl,
         "nv01_ngram_novelty": nv01_ngram_novelty,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "mk01_event_markov_transitions": _MK01_ORACLE,
         "kl01_source_unigram_kl": _KL01_ORACLE,
@@ -14913,7 +14712,7 @@ ROUND7_STAGED_ORACLE.update(
 
 
 # ---------------------------------------------------------------------------
-# Round-9 staging, wave 44: wz01 winsorized value stats, qf04 Gopher
+# Round-9, wave 44: wz01 winsorized value stats, qf04 Gopher
 # quality rules, gr04 event-type co-presence projection.
 
 
@@ -15207,14 +15006,14 @@ ORDER BY p.type_a, p.type_b
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "wz01_winsorized_value_stats": wz01_winsorized_value_stats,
         "qf04_gopher_quality_rules": qf04_gopher_quality_rules,
         "gr04_event_type_copresence": gr04_event_type_copresence,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "wz01_winsorized_value_stats": _WZ01_ORACLE,
         "qf04_gopher_quality_rules": _QF04_ORACLE,
@@ -15224,9 +15023,8 @@ ROUND7_STAGED_ORACLE.update(
 
 
 # ---------------------------------------------------------------------------
-# Round-9 staging, wave 45: es16 bound-certified pruned exact search,
-# st16 streaming binned-quantile rollup (registered below via the
-# streaming shim).
+# Round-9, wave 45: es16 bound-certified pruned exact search,
+# st16 streaming binned-quantile rollup (streaming/queries.py).
 
 
 def es16_bound_pruned_search(spark: SparkSession, sf: str) -> DataFrame:
@@ -15356,29 +15154,12 @@ ORDER BY dot_score DESC, vec_id
 """
 
 
-ROUND7_STAGED_QUERIES["es16_bound_pruned_search"] = es16_bound_pruned_search
-ROUND7_STAGED_ORACLE["es16_bound_pruned_search"] = _ES16_ORACLE
-
-
-def _register_staged_streaming_wave45() -> None:
-    from ..streaming.queries import (
-        ST16_STAGED_ORACLE,
-        st16_streaming_binned_quantiles,
-    )
-
-    ROUND7_STAGED_QUERIES["st16_streaming_binned_quantiles"] = (
-        st16_streaming_binned_quantiles
-    )
-    ROUND7_STAGED_ORACLE["st16_streaming_binned_quantiles"] = (
-        ST16_STAGED_ORACLE
-    )
-
-
-_register_staged_streaming_wave45()
+EXTENSION_QUERIES["es16_bound_pruned_search"] = es16_bound_pruned_search
+EXTENSION_ORACLE["es16_bound_pruned_search"] = _ES16_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-9 staging, wave 46: tx21 Kneser-Ney smoothing, lb01 centroid
+# Round-9, wave 46: tx21 Kneser-Ney smoothing, lb01 centroid
 # label-confusion audit, mmd01 moment-closure MMD.
 
 
@@ -15641,14 +15422,14 @@ FROM diff GROUP BY label ORDER BY label
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "tx21_kneser_ney_bigrams": tx21_kneser_ney_bigrams,
         "lb01_label_confusion_audit": lb01_label_confusion_audit,
         "mmd01_label_mmd_audit": mmd01_label_mmd_audit,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "tx21_kneser_ney_bigrams": _TX21_ORACLE,
         "lb01_label_confusion_audit": _LB01_ORACLE,
@@ -15658,7 +15439,7 @@ ROUND7_STAGED_ORACLE.update(
 
 
 # ---------------------------------------------------------------------------
-# Round-9 staging, wave 47: gr05 Adamic-Adar missed-pair suggestions,
+# Round-9, wave 47: gr05 Adamic-Adar missed-pair suggestions,
 # tk01 tokenizer fertility, tx22 word burstiness.
 
 
@@ -15978,14 +15759,14 @@ ORDER BY total_count DESC, word LIMIT 20
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "gr05_adamic_adar_links": gr05_adamic_adar_links,
         "tk01_token_fertility": tk01_token_fertility,
         "tx22_word_burstiness": tx22_word_burstiness,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "gr05_adamic_adar_links": _gr05_oracle_sql(),
         "tk01_token_fertility": _TK01_ORACLE,
@@ -15995,7 +15776,7 @@ ROUND7_STAGED_ORACLE.update(
 
 
 # ---------------------------------------------------------------------------
-# Round-9 staging, wave 48: imb02 effective-number class reweighting,
+# Round-9, wave 48: imb02 effective-number class reweighting,
 # mm08 aspect-ratio bucket packing.
 
 
@@ -16129,13 +15910,13 @@ FROM b GROUP BY aspect_bucket ORDER BY aspect_bucket
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "imb02_effective_number_weights": imb02_effective_number_weights,
         "mm08_aspect_bucket_packing": mm08_aspect_bucket_packing,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "imb02_effective_number_weights": _IMB02_ORACLE,
         "mm08_aspect_bucket_packing": _MM08_ORACLE,
@@ -16144,7 +15925,7 @@ ROUND7_STAGED_ORACLE.update(
 
 
 # ---------------------------------------------------------------------------
-# Round-9 staging, wave 49: sv01 Kaplan-Meier conversion curve, tx23
+# Round-9, wave 49: sv01 Kaplan-Meier conversion curve, tx23
 # PMI collocations.
 
 
@@ -16386,13 +16167,13 @@ ORDER BY pmi DESC, p.w1, p.w2 LIMIT 20
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "sv01_conversion_survival_curve": sv01_conversion_survival_curve,
         "tx23_pmi_collocations": tx23_pmi_collocations,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "sv01_conversion_survival_curve": _SV01_ORACLE,
         "tx23_pmi_collocations": _TX23_ORACLE,
@@ -16401,7 +16182,7 @@ ROUND7_STAGED_ORACLE.update(
 
 
 # ---------------------------------------------------------------------------
-# Round-9 staging, wave 50: dd18 MinHash sketch-size sweep, es17 IVF
+# Round-9, wave 50: dd18 MinHash sketch-size sweep, es17 IVF
 # nprobe recall/cost sweep.
 
 
@@ -16691,13 +16472,13 @@ ORDER BY nprobe
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "dd18_minhash_k_sweep": dd18_minhash_k_sweep,
         "es17_ivf_nprobe_sweep": es17_ivf_nprobe_sweep,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "dd18_minhash_k_sweep": _DD18_ORACLE,
         "es17_ivf_nprobe_sweep": _ES17_ORACLE,
@@ -16706,7 +16487,7 @@ ROUND7_STAGED_ORACLE.update(
 
 
 # ---------------------------------------------------------------------------
-# Round-9 staging, wave 51: ct04 contamination n-gram-order sensitivity.
+# Round-9, wave 51: ct04 contamination n-gram-order sensitivity.
 
 
 def ct04_contamination_ngram_sensitivity(
@@ -16779,62 +16560,14 @@ ORDER BY ngram_order
 """
 
 
-ROUND7_STAGED_QUERIES["ct04_contamination_ngram_sensitivity"] = (
+EXTENSION_QUERIES["ct04_contamination_ngram_sensitivity"] = (
     ct04_contamination_ngram_sensitivity
 )
-ROUND7_STAGED_ORACLE["ct04_contamination_ngram_sensitivity"] = _CT04_ORACLE
+EXTENSION_ORACLE["ct04_contamination_ngram_sensitivity"] = _CT04_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-9 promotion: the r8 verdict's task 1, verbatim — graduate all 21
-# round-9 staged queries (waves 43-51) into the live EXTENSION registries,
-# in the verdict's priority order: es16 first (the exactness-under-pruning
-# certification), then st16/dd18/es17 (the tuning + merge certifications),
-# then the waves in order. Every name below has BOTH gate-scale
-# certifications in tests/test_staged_round9.py AND a recorded sf0.1 wall
-# in scripts/staged_sf01_walls.json (worst case gr05 6.75 s isolated,
-# re-swept after the hub-degree guard landed) — pinned by
-# tests/test_staged_round7.py::test_promoted_queries_were_sf01_swept.
-ROUND9_PROMOTED: list[str] = [
-    # the strongest new claims first
-    "es16_bound_pruned_search",
-    "st16_streaming_binned_quantiles",
-    "dd18_minhash_k_sweep",
-    "es17_ivf_nprobe_sweep",
-    # wave 43: sequence, divergence, and memorization audits
-    "mk01_event_markov_transitions",
-    "kl01_source_unigram_kl",
-    "nv01_ngram_novelty",
-    # wave 44: robust stats, Gopher rules, bipartite projection
-    "wz01_winsorized_value_stats",
-    "qf04_gopher_quality_rules",
-    "gr04_event_type_copresence",
-    # wave 46: smoothing, label noise, the pairs-free kernel statistic
-    "tx21_kneser_ney_bigrams",
-    "lb01_label_confusion_audit",
-    "mmd01_label_mmd_audit",
-    # wave 47: link prediction (hub-guarded), fertility, burstiness
-    "gr05_adamic_adar_links",
-    "tk01_token_fertility",
-    "tx22_word_burstiness",
-    # wave 48: long-tail reweighting and multimodal batch packing
-    "imb02_effective_number_weights",
-    "mm08_aspect_bucket_packing",
-    # wave 49: survival analysis and collocation mining
-    "sv01_conversion_survival_curve",
-    "tx23_pmi_collocations",
-    # wave 51: contamination order sensitivity
-    "ct04_contamination_ngram_sensitivity",
-]
-
-for _name in ROUND9_PROMOTED:
-    EXTENSION_QUERIES[_name] = ROUND7_STAGED_QUERIES.pop(_name)
-    EXTENSION_ORACLE[_name] = ROUND7_STAGED_ORACLE.pop(_name)
-del _name
-
-
-# ---------------------------------------------------------------------------
-# Round-10 staging, wave 52: qf05 CCNet perplexity buckets, tx24 vocabulary
+# Round-10, wave 52: qf05 CCNet perplexity buckets, tx24 vocabulary
 # mass-coverage curve, dq02 FK orphan matrix.
 
 
@@ -16909,10 +16642,10 @@ GROUP BY source, bucket
 ORDER BY source, bucket
 """
 
-ROUND7_STAGED_QUERIES["qf05_ccnet_perplexity_buckets"] = (
+EXTENSION_QUERIES["qf05_ccnet_perplexity_buckets"] = (
     qf05_ccnet_perplexity_buckets
 )
-ROUND7_STAGED_ORACLE["qf05_ccnet_perplexity_buckets"] = _QF05_ORACLE
+EXTENSION_ORACLE["qf05_ccnet_perplexity_buckets"] = _QF05_ORACLE
 
 
 def tx24_vocab_mass_coverage(spark: SparkSession, sf: str) -> DataFrame:
@@ -17016,8 +16749,8 @@ GROUP BY p
 ORDER BY coverage_pct
 """
 
-ROUND7_STAGED_QUERIES["tx24_vocab_mass_coverage"] = tx24_vocab_mass_coverage
-ROUND7_STAGED_ORACLE["tx24_vocab_mass_coverage"] = _TX24_ORACLE
+EXTENSION_QUERIES["tx24_vocab_mass_coverage"] = tx24_vocab_mass_coverage
+EXTENSION_ORACLE["tx24_vocab_mass_coverage"] = _TX24_ORACLE
 
 
 #: The warehouse's declared FK edges: (child table, fk column, parent
@@ -17102,12 +16835,12 @@ LEFT JOIN (SELECT DISTINCT {pk} AS k, 1 AS hit FROM {parent}) p
     )
 
 
-ROUND7_STAGED_QUERIES["dq02_fk_orphan_matrix"] = dq02_fk_orphan_matrix
-ROUND7_STAGED_ORACLE["dq02_fk_orphan_matrix"] = _dq02_oracle_sql()
+EXTENSION_QUERIES["dq02_fk_orphan_matrix"] = dq02_fk_orphan_matrix
+EXTENSION_ORACLE["dq02_fk_orphan_matrix"] = _dq02_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
-# Round-10 staging, wave 53: cal01 calibration/Brier audit, sk02 hash
+# Round-10, wave 53: cal01 calibration/Brier audit, sk02 hash
 # partition-balance audit, dm02 DoReMi-style domain reweighting step.
 
 
@@ -17244,8 +16977,8 @@ GROUP BY bin
 ORDER BY bin
 """
 
-ROUND7_STAGED_QUERIES["cal01_brier_calibration"] = cal01_brier_calibration
-ROUND7_STAGED_ORACLE["cal01_brier_calibration"] = _CAL01_ORACLE
+EXTENSION_QUERIES["cal01_brier_calibration"] = cal01_brier_calibration
+EXTENSION_ORACLE["cal01_brier_calibration"] = _CAL01_ORACLE
 
 
 #: Modulus for sk02's shuffle-partition simulation — matches the test
@@ -17336,10 +17069,10 @@ FROM (
     )
 
 
-ROUND7_STAGED_QUERIES["sk02_hash_partition_balance"] = (
+EXTENSION_QUERIES["sk02_hash_partition_balance"] = (
     sk02_hash_partition_balance
 )
-ROUND7_STAGED_ORACLE["sk02_hash_partition_balance"] = _sk02_oracle_sql()
+EXTENSION_ORACLE["sk02_hash_partition_balance"] = _sk02_oracle_sql()
 
 
 #: dm02's exponentiated-gradient step size (DoReMi's η) — module-level
@@ -17480,12 +17213,12 @@ FROM terms
 ORDER BY source
 """
 
-ROUND7_STAGED_QUERIES["dm02_domain_reweight_step"] = dm02_domain_reweight_step
-ROUND7_STAGED_ORACLE["dm02_domain_reweight_step"] = _DM02_ORACLE
+EXTENSION_QUERIES["dm02_domain_reweight_step"] = dm02_domain_reweight_step
+EXTENSION_ORACLE["dm02_domain_reweight_step"] = _DM02_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-10 staging, wave 54: ts04 classical seasonal decomposition, zo02
+# Round-10, wave 54: ts04 classical seasonal decomposition, zo02
 # min/max file-skipping audit, rk02 Spearman rank agreement.
 
 
@@ -17614,10 +17347,10 @@ FROM seasonal s JOIN rem r ON s.iso_dow = r.iso_dow
 ORDER BY s.iso_dow
 """
 
-ROUND7_STAGED_QUERIES["ts04_seasonal_decomposition"] = (
+EXTENSION_QUERIES["ts04_seasonal_decomposition"] = (
     ts04_seasonal_decomposition
 )
-ROUND7_STAGED_ORACLE["ts04_seasonal_decomposition"] = _TS04_ORACLE
+EXTENSION_ORACLE["ts04_seasonal_decomposition"] = _TS04_ORACLE
 
 
 #: zo02's simulated row-group size and audit predicate (month window) —
@@ -17732,8 +17465,8 @@ FROM (
     )
 
 
-ROUND7_STAGED_QUERIES["zo02_minmax_pruning_audit"] = zo02_minmax_pruning_audit
-ROUND7_STAGED_ORACLE["zo02_minmax_pruning_audit"] = _zo02_oracle_sql()
+EXTENSION_QUERIES["zo02_minmax_pruning_audit"] = zo02_minmax_pruning_audit
+EXTENSION_ORACLE["zo02_minmax_pruning_audit"] = _zo02_oracle_sql()
 
 
 #: rk02's head size: the agreement statistic runs on the top-K revenue
@@ -17828,41 +17561,14 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_suppliers,
 FROM ranked
 """
 
-ROUND7_STAGED_QUERIES["rk02_spearman_rank_agreement"] = (
+EXTENSION_QUERIES["rk02_spearman_rank_agreement"] = (
     rk02_spearman_rank_agreement
 )
-ROUND7_STAGED_ORACLE["rk02_spearman_rank_agreement"] = _RK02_ORACLE
+EXTENSION_ORACLE["rk02_spearman_rank_agreement"] = _RK02_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-10 staging, wave 55: st17 streaming Count-Min cells, st18 streaming
-# HLL registers — the streamed-sketch additivity triple completed (st16
-# merged histogram sums; these merge CM sums and HLL maxes). Registered via
-# the staged-streaming shim so environments without a streaming-capable
-# session still import this module.
-
-
-def _register_staged_streaming_wave55() -> None:
-    from local_etl_csv_to_postgresql_spark.streaming.queries import (
-        ST17_STAGED_ORACLE,
-        ST18_STAGED_ORACLE,
-        st17_streaming_countmin,
-        st18_streaming_hll_registers,
-    )
-
-    ROUND7_STAGED_QUERIES["st17_streaming_countmin"] = st17_streaming_countmin
-    ROUND7_STAGED_ORACLE["st17_streaming_countmin"] = ST17_STAGED_ORACLE
-    ROUND7_STAGED_QUERIES["st18_streaming_hll_registers"] = (
-        st18_streaming_hll_registers
-    )
-    ROUND7_STAGED_ORACLE["st18_streaming_hll_registers"] = ST18_STAGED_ORACLE
-
-
-_register_staged_streaming_wave55()
-
-
-# ---------------------------------------------------------------------------
-# Round-10 staging, wave 56: ss07 stratified hash reservoir, en02 bigram
+# Round-10, wave 56: ss07 stratified hash reservoir, en02 bigram
 # conditional entropy, scd02 point-in-time dimension join.
 
 
@@ -17939,10 +17645,10 @@ FROM ranked WHERE rn <= {SS07_RESERVOIR_K}
 GROUP BY lang ORDER BY lang
 """
 
-ROUND7_STAGED_QUERIES["ss07_stratified_reservoir"] = (
+EXTENSION_QUERIES["ss07_stratified_reservoir"] = (
     ss07_stratified_reservoir
 )
-ROUND7_STAGED_ORACLE["ss07_stratified_reservoir"] = _SS07_ORACLE
+EXTENSION_ORACLE["ss07_stratified_reservoir"] = _SS07_ORACLE
 
 
 def en02_bigram_conditional_entropy(spark: SparkSession, sf: str) -> DataFrame:
@@ -18087,10 +17793,10 @@ FROM uni u JOIN cond c ON u.lang = c.lang
 ORDER BY u.lang
 """
 
-ROUND7_STAGED_QUERIES["en02_bigram_conditional_entropy"] = (
+EXTENSION_QUERIES["en02_bigram_conditional_entropy"] = (
     en02_bigram_conditional_entropy
 )
-ROUND7_STAGED_ORACLE["en02_bigram_conditional_entropy"] = _EN02_ORACLE
+EXTENSION_ORACLE["en02_bigram_conditional_entropy"] = _EN02_ORACLE
 
 
 #: scd02's version-2 effective date and the re-price factor — shared by
@@ -18200,12 +17906,12 @@ GROUP BY version, (s_suppkey % 7 = 0)
 ORDER BY version, repriced_cohort
 """
 
-ROUND7_STAGED_QUERIES["scd02_point_in_time_join"] = scd02_point_in_time_join
-ROUND7_STAGED_ORACLE["scd02_point_in_time_join"] = _SCD02_ORACLE
+EXTENSION_QUERIES["scd02_point_in_time_join"] = scd02_point_in_time_join
+EXTENSION_ORACLE["scd02_point_in_time_join"] = _SCD02_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-10 staging, wave 57: es18 IVF cell-balance audit, dd20 near-dup
+# Round-10, wave 57: es18 IVF cell-balance audit, dd20 near-dup
 # cluster-size histogram, ct05 span-level decontamination exposure.
 
 
@@ -18304,8 +18010,8 @@ FROM assigned
 GROUP BY cell ORDER BY cell
 """
 
-ROUND7_STAGED_QUERIES["es18_ivf_cell_balance"] = es18_ivf_cell_balance
-ROUND7_STAGED_ORACLE["es18_ivf_cell_balance"] = _ES18_ORACLE
+EXTENSION_QUERIES["es18_ivf_cell_balance"] = es18_ivf_cell_balance
+EXTENSION_ORACLE["es18_ivf_cell_balance"] = _ES18_ORACLE
 
 
 def dd20_cluster_size_histogram(spark: SparkSession, sf: str) -> DataFrame:
@@ -18383,10 +18089,10 @@ FROM sizes
 GROUP BY sz ORDER BY cluster_size
 """
 
-ROUND7_STAGED_QUERIES["dd20_cluster_size_histogram"] = (
+EXTENSION_QUERIES["dd20_cluster_size_histogram"] = (
     dd20_cluster_size_histogram
 )
-ROUND7_STAGED_ORACLE["dd20_cluster_size_histogram"] = _DD20_ORACLE
+EXTENSION_ORACLE["dd20_cluster_size_histogram"] = _DD20_ORACLE
 
 
 def ct05_span_decontamination_exposure(
@@ -18471,30 +18177,15 @@ FROM base b LEFT JOIN bad d ON b.doc_id = d.doc_id
 GROUP BY b.source ORDER BY b.source
 """
 
-ROUND7_STAGED_QUERIES["ct05_span_decontamination_exposure"] = (
+EXTENSION_QUERIES["ct05_span_decontamination_exposure"] = (
     ct05_span_decontamination_exposure
 )
-ROUND7_STAGED_ORACLE["ct05_span_decontamination_exposure"] = _CT05_ORACLE
+EXTENSION_ORACLE["ct05_span_decontamination_exposure"] = _CT05_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-10 staging, wave 58: st19 streaming Bloom filter, cm02 Count-Min
-# width sweep, pk03 packing context-length curve.
-
-
-def _register_staged_streaming_wave58() -> None:
-    from local_etl_csv_to_postgresql_spark.streaming.queries import (
-        ST19_STAGED_ORACLE,
-        st19_streaming_bloom_filter,
-    )
-
-    ROUND7_STAGED_QUERIES["st19_streaming_bloom_filter"] = (
-        st19_streaming_bloom_filter
-    )
-    ROUND7_STAGED_ORACLE["st19_streaming_bloom_filter"] = ST19_STAGED_ORACLE
-
-
-_register_staged_streaming_wave58()
+# Round-10, wave 58: cm02 Count-Min width sweep, pk03 packing
+# context-length curve (st19 streaming Bloom filter: streaming/queries.py).
 
 
 #: cm02's width sweep grid (depth fixed at cm01's 4 rows). The widths
@@ -18619,8 +18310,8 @@ SELECT * FROM ({" UNION ALL ".join(legs)}) ORDER BY width
 """
 
 
-ROUND7_STAGED_QUERIES["cm02_countmin_width_sweep"] = cm02_countmin_width_sweep
-ROUND7_STAGED_ORACLE["cm02_countmin_width_sweep"] = _cm02_oracle_sql()
+EXTENSION_QUERIES["cm02_countmin_width_sweep"] = cm02_countmin_width_sweep
+EXTENSION_ORACLE["cm02_countmin_width_sweep"] = _cm02_oracle_sql()
 
 
 #: pk03's context-length grid — the budgets a training run actually
@@ -18716,12 +18407,12 @@ SELECT * FROM ({" UNION ALL ".join(legs)}) ORDER BY context_len
 """
 
 
-ROUND7_STAGED_QUERIES["pk03_context_length_curve"] = pk03_context_length_curve
-ROUND7_STAGED_ORACLE["pk03_context_length_curve"] = _pk03_oracle_sql()
+EXTENSION_QUERIES["pk03_context_length_curve"] = pk03_context_length_curve
+EXTENSION_ORACLE["pk03_context_length_curve"] = _pk03_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
-# Round-10 staging, wave 59: dd21 LSH band-geometry sweep, px02 PII
+# Round-10, wave 59: dd21 LSH band-geometry sweep, px02 PII
 # injection roundtrip, dp02 DP clip-bound sweep.
 
 
@@ -18840,8 +18531,8 @@ SELECT * FROM ({' UNION ALL '.join(legs)}) ORDER BY n_bands
 """
 
 
-ROUND7_STAGED_QUERIES["dd21_lsh_band_sweep"] = dd21_lsh_band_sweep
-ROUND7_STAGED_ORACLE["dd21_lsh_band_sweep"] = _dd21_oracle_sql()
+EXTENSION_QUERIES["dd21_lsh_band_sweep"] = dd21_lsh_band_sweep
+EXTENSION_ORACLE["dd21_lsh_band_sweep"] = _dd21_oracle_sql()
 
 
 #: px02 injects one synthetic email into every PX02_EVERY-th document —
@@ -18938,10 +18629,10 @@ FROM scanned
 GROUP BY source ORDER BY source
 """
 
-ROUND7_STAGED_QUERIES["px02_pii_injection_roundtrip"] = (
+EXTENSION_QUERIES["px02_pii_injection_roundtrip"] = (
     px02_pii_injection_roundtrip
 )
-ROUND7_STAGED_ORACLE["px02_pii_injection_roundtrip"] = _PX02_ORACLE
+EXTENSION_ORACLE["px02_pii_injection_roundtrip"] = _PX02_ORACLE
 
 
 #: dp02's clip-bound multipliers (bound = m × per-type mean user
@@ -19043,12 +18734,12 @@ ORDER BY event_type, bound_multiplier
 """
 
 
-ROUND7_STAGED_QUERIES["dp02_clip_bound_sweep"] = dp02_clip_bound_sweep
-ROUND7_STAGED_ORACLE["dp02_clip_bound_sweep"] = _dp02_oracle_sql()
+EXTENSION_QUERIES["dp02_clip_bound_sweep"] = dp02_clip_bound_sweep
+EXTENSION_ORACLE["dp02_clip_bound_sweep"] = _dp02_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
-# Round-10 staging, wave 60: ret02 fixed-horizon retention, es19
+# Round-10, wave 60: ret02 fixed-horizon retention, es19
 # quantization bit-width sweep, aj03 nearest as-of join.
 
 
@@ -19138,10 +18829,10 @@ FROM flags
 GROUP BY d0 ORDER BY cohort_day
 """
 
-ROUND7_STAGED_QUERIES["ret02_fixed_horizon_retention"] = (
+EXTENSION_QUERIES["ret02_fixed_horizon_retention"] = (
     ret02_fixed_horizon_retention
 )
-ROUND7_STAGED_ORACLE["ret02_fixed_horizon_retention"] = _RET02_ORACLE
+EXTENSION_ORACLE["ret02_fixed_horizon_retention"] = _RET02_ORACLE
 
 
 #: es19's bit-width grid: symmetric levels 2^(b-1)-1 per width.
@@ -19231,10 +18922,10 @@ SELECT * FROM ({' UNION ALL '.join(legs)}) ORDER BY bits
 """
 
 
-ROUND7_STAGED_QUERIES["es19_quantization_bit_sweep"] = (
+EXTENSION_QUERIES["es19_quantization_bit_sweep"] = (
     es19_quantization_bit_sweep
 )
-ROUND7_STAGED_ORACLE["es19_quantization_bit_sweep"] = _es19_oracle_sql()
+EXTENSION_ORACLE["es19_quantization_bit_sweep"] = _es19_oracle_sql()
 
 
 #: aj03's symmetric tolerance (seconds) — nearest click within ±300 s.
@@ -19354,12 +19045,12 @@ LEFT JOIN (SELECT * FROM cand WHERE rn = 1) c
 ORDER BY p.purchase_id
 """
 
-ROUND7_STAGED_QUERIES["aj03_asof_nearest_join"] = aj03_asof_nearest_join
-ROUND7_STAGED_ORACLE["aj03_asof_nearest_join"] = _AJ03_ORACLE
+EXTENSION_QUERIES["aj03_asof_nearest_join"] = aj03_asof_nearest_join
+EXTENSION_ORACLE["aj03_asof_nearest_join"] = _AJ03_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-10 staging, wave 61: cur03 perplexity-led curation funnel, gr07
+# Round-10, wave 61: cur03 perplexity-led curation funnel, gr07
 # co-purchase communities.
 
 
@@ -19543,10 +19234,10 @@ LEFT JOIN (SELECT source, COUNT(*) AS n FROM final GROUP BY source) f
 ORDER BY b.source
 """
 
-ROUND7_STAGED_QUERIES["cur03_perplexity_curation_funnel"] = (
+EXTENSION_QUERIES["cur03_perplexity_curation_funnel"] = (
     cur03_perplexity_curation_funnel
 )
-ROUND7_STAGED_ORACLE["cur03_perplexity_curation_funnel"] = _CUR03_ORACLE
+EXTENSION_ORACLE["cur03_perplexity_curation_funnel"] = _CUR03_ORACLE
 
 
 def gr07_copurchase_communities(spark: SparkSession, sf: str) -> DataFrame:
@@ -19614,14 +19305,14 @@ FROM sizes
 GROUP BY sz ORDER BY community_size
 """
 
-ROUND7_STAGED_QUERIES["gr07_copurchase_communities"] = (
+EXTENSION_QUERIES["gr07_copurchase_communities"] = (
     gr07_copurchase_communities
 )
-ROUND7_STAGED_ORACLE["gr07_copurchase_communities"] = _GR07_ORACLE
+EXTENSION_ORACLE["gr07_copurchase_communities"] = _GR07_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-10 staging, wave 62: mm09 modality byte-budget manifest, inc04
+# Round-10, wave 62: mm09 modality byte-budget manifest, inc04
 # small-file compaction audit.
 
 
@@ -19741,10 +19432,10 @@ FROM per_mime
 ORDER BY total_bytes DESC, sniffed_mime
 """
 
-ROUND7_STAGED_QUERIES["mm09_modality_budget_manifest"] = (
+EXTENSION_QUERIES["mm09_modality_budget_manifest"] = (
     mm09_modality_budget_manifest
 )
-ROUND7_STAGED_ORACLE["mm09_modality_budget_manifest"] = _MM09_ORACLE
+EXTENSION_ORACLE["mm09_modality_budget_manifest"] = _MM09_ORACLE
 
 
 #: inc04's layout constants: arrival batches of INC04_BATCH_ROWS order
@@ -19867,8 +19558,8 @@ FROM compact_agg
 """
 
 
-ROUND7_STAGED_QUERIES["inc04_compaction_audit"] = inc04_compaction_audit
-ROUND7_STAGED_ORACLE["inc04_compaction_audit"] = _inc04_oracle_sql()
+EXTENSION_QUERIES["inc04_compaction_audit"] = inc04_compaction_audit
+EXTENSION_ORACLE["inc04_compaction_audit"] = _inc04_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -19994,8 +19685,8 @@ GROUP BY change_type
 ORDER BY change_type
 """
 
-ROUND7_STAGED_QUERIES["cdc01_snapshot_diff"] = cdc01_snapshot_diff
-ROUND7_STAGED_ORACLE["cdc01_snapshot_diff"] = _CDC01_ORACLE
+EXTENSION_QUERIES["cdc01_snapshot_diff"] = cdc01_snapshot_diff
+EXTENSION_ORACLE["cdc01_snapshot_diff"] = _CDC01_ORACLE
 
 
 def lr01_ols_regression(spark: SparkSession, sf: str) -> DataFrame:
@@ -20066,8 +19757,8 @@ FROM stats
 ORDER BY l_returnflag
 """
 
-ROUND7_STAGED_QUERIES["lr01_ols_regression"] = lr01_ols_regression
-ROUND7_STAGED_ORACLE["lr01_ols_regression"] = _LR01_ORACLE
+EXTENSION_QUERIES["lr01_ols_regression"] = lr01_ols_regression
+EXTENSION_ORACLE["lr01_ols_regression"] = _LR01_ORACLE
 
 
 def gini01_revenue_concentration(spark: SparkSession, sf: str) -> DataFrame:
@@ -20155,14 +19846,14 @@ FROM agg
 ORDER BY mktsegment
 """
 
-ROUND7_STAGED_QUERIES["gini01_revenue_concentration"] = (
+EXTENSION_QUERIES["gini01_revenue_concentration"] = (
     gini01_revenue_concentration
 )
-ROUND7_STAGED_ORACLE["gini01_revenue_concentration"] = _GINI01_ORACLE
+EXTENSION_ORACLE["gini01_revenue_concentration"] = _GINI01_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-10 staged wave 64: gap sessionization, brand association rules,
+# Round-10, wave 64: gap sessionization, brand association rules,
 # Benford first-digit audit.
 # ---------------------------------------------------------------------------
 
@@ -20274,8 +19965,8 @@ SELECT CASE WHEN n = 1 THEN '1' WHEN n <= 3 THEN '2-3'
 FROM per_sess GROUP BY 1 ORDER BY 1
 """
 
-ROUND7_STAGED_QUERIES["ses01_gap_sessionization"] = ses01_gap_sessionization
-ROUND7_STAGED_ORACLE["ses01_gap_sessionization"] = _SES01_ORACLE
+EXTENSION_QUERIES["ses01_gap_sessionization"] = ses01_gap_sessionization
+EXTENSION_ORACLE["ses01_gap_sessionization"] = _SES01_ORACLE
 
 
 def ar01_brand_association_rules(spark: SparkSession, sf: str) -> DataFrame:
@@ -20386,10 +20077,10 @@ CROSS JOIN tot t
 ORDER BY pr.brand_a, pr.brand_b
 """
 
-ROUND7_STAGED_QUERIES["ar01_brand_association_rules"] = (
+EXTENSION_QUERIES["ar01_brand_association_rules"] = (
     ar01_brand_association_rules
 )
-ROUND7_STAGED_ORACLE["ar01_brand_association_rules"] = _AR01_ORACLE
+EXTENSION_ORACLE["ar01_brand_association_rules"] = _AR01_ORACLE
 
 
 def dq03_benford_digit_audit(spark: SparkSession, sf: str) -> DataFrame:
@@ -20484,12 +20175,12 @@ SELECT column_name, digit,
 FROM wt ORDER BY column_name, digit
 """
 
-ROUND7_STAGED_QUERIES["dq03_benford_digit_audit"] = dq03_benford_digit_audit
-ROUND7_STAGED_ORACLE["dq03_benford_digit_audit"] = _DQ03_ORACLE
+EXTENSION_QUERIES["dq03_benford_digit_audit"] = dq03_benford_digit_audit
+EXTENSION_ORACLE["dq03_benford_digit_audit"] = _DQ03_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-10 staged wave 65: explicit-values pivot, dyadic-weight EWMA
+# Round-10, wave 65: explicit-values pivot, dyadic-weight EWMA
 # smoothing, spend-decile migration matrix.
 # ---------------------------------------------------------------------------
 
@@ -20559,8 +20250,8 @@ GROUP BY o_orderpriority
 ORDER BY priority
 """
 
-ROUND7_STAGED_QUERIES["pv01_status_pivot"] = pv01_status_pivot
-ROUND7_STAGED_ORACLE["pv01_status_pivot"] = _PV01_ORACLE
+EXTENSION_QUERIES["pv01_status_pivot"] = pv01_status_pivot
+EXTENSION_ORACLE["pv01_status_pivot"] = _PV01_ORACLE
 
 
 #: ewma01's smoothing window: W trailing months with dyadic weights
@@ -20677,8 +20368,8 @@ FROM smoothed ORDER BY month
 """
 
 
-ROUND7_STAGED_QUERIES["ewma01_revenue_smoothing"] = ewma01_revenue_smoothing
-ROUND7_STAGED_ORACLE["ewma01_revenue_smoothing"] = _ewma01_oracle_sql()
+EXTENSION_QUERIES["ewma01_revenue_smoothing"] = ewma01_revenue_smoothing
+EXTENSION_ORACLE["ewma01_revenue_smoothing"] = _ewma01_oracle_sql()
 
 
 def tm01_spend_decile_migration(spark: SparkSession, sf: str) -> DataFrame:
@@ -20781,14 +20472,14 @@ FROM matrix
 ORDER BY decile_1996, decile_1997
 """
 
-ROUND7_STAGED_QUERIES["tm01_spend_decile_migration"] = (
+EXTENSION_QUERIES["tm01_spend_decile_migration"] = (
     tm01_spend_decile_migration
 )
-ROUND7_STAGED_ORACLE["tm01_spend_decile_migration"] = _TM01_ORACLE
+EXTENSION_ORACLE["tm01_spend_decile_migration"] = _TM01_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-10 staged wave 66: schema-evolution merged read, cross-fact
+# Round-10, wave 66: schema-evolution merged read, cross-fact
 # order-total reconciliation, temporal anti-pattern detection.
 # ---------------------------------------------------------------------------
 
@@ -20881,10 +20572,10 @@ FROM merged
 GROUP BY 1 ORDER BY priority
 """
 
-ROUND7_STAGED_QUERIES["se01_schema_evolution_read"] = (
+EXTENSION_QUERIES["se01_schema_evolution_read"] = (
     se01_schema_evolution_read
 )
-ROUND7_STAGED_ORACLE["se01_schema_evolution_read"] = _SE01_ORACLE
+EXTENSION_ORACLE["se01_schema_evolution_read"] = _SE01_ORACLE
 
 
 def dq04_order_total_reconciliation(spark: SparkSession, sf: str) -> DataFrame:
@@ -20982,10 +20673,10 @@ GROUP BY o_orderpriority, band
 ORDER BY o_orderpriority, band
 """
 
-ROUND7_STAGED_QUERIES["dq04_order_total_reconciliation"] = (
+EXTENSION_QUERIES["dq04_order_total_reconciliation"] = (
     dq04_order_total_reconciliation
 )
-ROUND7_STAGED_ORACLE["dq04_order_total_reconciliation"] = _DQ04_ORACLE
+EXTENSION_ORACLE["dq04_order_total_reconciliation"] = _DQ04_ORACLE
 
 
 #: pat01's lookback horizon: a purchase is "error-shadowed" when the
@@ -21083,14 +20774,14 @@ FROM flagged
 GROUP BY day ORDER BY day
 """
 
-ROUND7_STAGED_QUERIES["pat01_error_shadowed_purchases"] = (
+EXTENSION_QUERIES["pat01_error_shadowed_purchases"] = (
     pat01_error_shadowed_purchases
 )
-ROUND7_STAGED_ORACLE["pat01_error_shadowed_purchases"] = _PAT01_ORACLE
+EXTENSION_ORACLE["pat01_error_shadowed_purchases"] = _PAT01_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-10 staged wave 67: calendar-function parity report,
+# Round-10, wave 67: calendar-function parity report,
 # approx-quantile calibration, normalization-lift dedup audit.
 # ---------------------------------------------------------------------------
 
@@ -21153,8 +20844,8 @@ SELECT month, n_orders, revenue,
 FROM monthly ORDER BY month
 """
 
-ROUND7_STAGED_QUERIES["dt01_calendar_features"] = dt01_calendar_features
-ROUND7_STAGED_ORACLE["dt01_calendar_features"] = _DT01_ORACLE
+EXTENSION_QUERIES["dt01_calendar_features"] = dt01_calendar_features
+EXTENSION_ORACLE["dt01_calendar_features"] = _DT01_ORACLE
 
 
 #: ap01's sketch knob: percentile_approx's accuracy parameter. The
@@ -21252,10 +20943,10 @@ def _ap01_oracle_sql() -> str:
     return f"SELECT * FROM ({rows}) ORDER BY p"
 
 
-ROUND7_STAGED_QUERIES["ap01_approx_quantile_calibration"] = (
+EXTENSION_QUERIES["ap01_approx_quantile_calibration"] = (
     ap01_approx_quantile_calibration
 )
-ROUND7_STAGED_ORACLE["ap01_approx_quantile_calibration"] = _ap01_oracle_sql()
+EXTENSION_ORACLE["ap01_approx_quantile_calibration"] = _ap01_oracle_sql()
 
 
 def dd22_normalization_lift(spark: SparkSession, sf: str) -> DataFrame:
@@ -21321,12 +21012,12 @@ FROM keyed
 GROUP BY source ORDER BY source
 """
 
-ROUND7_STAGED_QUERIES["dd22_normalization_lift"] = dd22_normalization_lift
-ROUND7_STAGED_ORACLE["dd22_normalization_lift"] = _DD22_ORACLE
+EXTENSION_QUERIES["dd22_normalization_lift"] = dd22_normalization_lift
+EXTENSION_ORACLE["dd22_normalization_lift"] = _DD22_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-10 staged wave 68: cohort LTV curve, RFM segmentation,
+# Round-10, wave 68: cohort LTV curve, RFM segmentation,
 # brand-concentration HHI.
 # ---------------------------------------------------------------------------
 
@@ -21423,10 +21114,10 @@ FROM curve
 ORDER BY cohort_day, week_offset
 """
 
-ROUND7_STAGED_QUERIES["ltv01_cohort_revenue_curve"] = (
+EXTENSION_QUERIES["ltv01_cohort_revenue_curve"] = (
     ltv01_cohort_revenue_curve
 )
-ROUND7_STAGED_ORACLE["ltv01_cohort_revenue_curve"] = _LTV01_ORACLE
+EXTENSION_ORACLE["ltv01_cohort_revenue_curve"] = _LTV01_ORACLE
 
 
 def rfm01_rfm_segmentation(spark: SparkSession, sf: str) -> DataFrame:
@@ -21512,8 +21203,8 @@ GROUP BY r, f, m
 ORDER BY r, f, m
 """
 
-ROUND7_STAGED_QUERIES["rfm01_rfm_segmentation"] = rfm01_rfm_segmentation
-ROUND7_STAGED_ORACLE["rfm01_rfm_segmentation"] = _RFM01_ORACLE
+EXTENSION_QUERIES["rfm01_rfm_segmentation"] = rfm01_rfm_segmentation
+EXTENSION_ORACLE["rfm01_rfm_segmentation"] = _RFM01_ORACLE
 
 
 def hhi01_brand_concentration(spark: SparkSession, sf: str) -> DataFrame:
@@ -21596,85 +21287,12 @@ FROM scored
 GROUP BY mktsegment ORDER BY mktsegment
 """
 
-ROUND7_STAGED_QUERIES["hhi01_brand_concentration"] = hhi01_brand_concentration
-ROUND7_STAGED_ORACLE["hhi01_brand_concentration"] = _HHI01_ORACLE
+EXTENSION_QUERIES["hhi01_brand_concentration"] = hhi01_brand_concentration
+EXTENSION_ORACLE["hhi01_brand_concentration"] = _HHI01_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-10 promotions (r9 verdict tasks 1+2): all 48 staged round-10
-# queries enter the live registry. The list order is the certification
-# order the r9 verdict asked for — cur03 first (the slowest staged
-# sf0.1 wall; its promotion confirms the ccbase carrier attribution in
-# the main bench), then the warehouse-layout family, the dedup audits,
-# the streaming sketch-maintenance trio, the business-analytics wave,
-# and the remainder in staging-wave order (waves 52 -> 68).
-# __spark_entry__ consumes this list as the bucket-2 (never-certified)
-# judgment order inside its executable window policy.
-
-ROUND10_PROMOTED: list[str] = [
-    "cur03_perplexity_curation_funnel",
-    # warehouse-layout family
-    "cdc01_snapshot_diff",
-    "scd02_point_in_time_join",
-    "se01_schema_evolution_read",
-    "zo02_minmax_pruning_audit",
-    # dedup audits
-    "dd20_cluster_size_histogram",
-    "dd21_lsh_band_sweep",
-    "dd22_normalization_lift",
-    # streaming sketch maintenance
-    "st17_streaming_countmin",
-    "st18_streaming_hll_registers",
-    "st19_streaming_bloom_filter",
-    # business-analytics wave
-    "ltv01_cohort_revenue_curve",
-    "rfm01_rfm_segmentation",
-    "gini01_revenue_concentration",
-    "hhi01_brand_concentration",
-    "ar01_brand_association_rules",
-    "ses01_gap_sessionization",
-    "ewma01_revenue_smoothing",
-    "pv01_status_pivot",
-    "tm01_spend_decile_migration",
-    "ret02_fixed_horizon_retention",
-    "aj03_asof_nearest_join",
-    "pat01_error_shadowed_purchases",
-    # remainder, staging-wave order (52 -> 68)
-    "qf05_ccnet_perplexity_buckets",
-    "tx24_vocab_mass_coverage",
-    "dq02_fk_orphan_matrix",
-    "cal01_brier_calibration",
-    "sk02_hash_partition_balance",
-    "dm02_domain_reweight_step",
-    "ts04_seasonal_decomposition",
-    "rk02_spearman_rank_agreement",
-    "ss07_stratified_reservoir",
-    "en02_bigram_conditional_entropy",
-    "es18_ivf_cell_balance",
-    "ct05_span_decontamination_exposure",
-    "cm02_countmin_width_sweep",
-    "pk03_context_length_curve",
-    "px02_pii_injection_roundtrip",
-    "dp02_clip_bound_sweep",
-    "es19_quantization_bit_sweep",
-    "gr07_copurchase_communities",
-    "mm09_modality_budget_manifest",
-    "inc04_compaction_audit",
-    "lr01_ols_regression",
-    "dq03_benford_digit_audit",
-    "dq04_order_total_reconciliation",
-    "dt01_calendar_features",
-    "ap01_approx_quantile_calibration",
-]
-
-for _name in ROUND10_PROMOTED:
-    EXTENSION_QUERIES[_name] = ROUND7_STAGED_QUERIES.pop(_name)
-    EXTENSION_ORACLE[_name] = ROUND7_STAGED_ORACLE.pop(_name)
-del _name
-
-
-# ---------------------------------------------------------------------------
-# Round-11 staging, wave 69: mix01 mixture-temperature sweep, tx25
+# Round-11, wave 69: mix01 mixture-temperature sweep, tx25
 # lexical-diversity panel, gr08 degree-ordered triangle census, ss08
 # weighted sample (Efraimidis-Spirakis).
 # ---------------------------------------------------------------------------
@@ -21775,8 +21393,8 @@ FROM shares s JOIN eff e ON s.alpha = e.alpha
 ORDER BY s.alpha, s.source
 """
 
-ROUND7_STAGED_QUERIES["mix01_temperature_sweep"] = mix01_temperature_sweep
-ROUND7_STAGED_ORACLE["mix01_temperature_sweep"] = _MIX01_ORACLE
+EXTENSION_QUERIES["mix01_temperature_sweep"] = mix01_temperature_sweep
+EXTENSION_ORACLE["mix01_temperature_sweep"] = _MIX01_ORACLE
 
 
 def tx25_lexical_diversity(spark: SparkSession, sf: str) -> DataFrame:
@@ -21849,8 +21467,8 @@ SELECT lang,
 FROM vocab GROUP BY lang ORDER BY lang
 """
 
-ROUND7_STAGED_QUERIES["tx25_lexical_diversity"] = tx25_lexical_diversity
-ROUND7_STAGED_ORACLE["tx25_lexical_diversity"] = _TX25_ORACLE
+EXTENSION_QUERIES["tx25_lexical_diversity"] = tx25_lexical_diversity
+EXTENSION_ORACLE["tx25_lexical_diversity"] = _TX25_ORACLE
 
 
 def gr08_triangle_census(spark: SparkSession, sf: str) -> DataFrame:
@@ -21976,8 +21594,8 @@ FROM stats s CROSS JOIN tri t
 """
 
 
-ROUND7_STAGED_QUERIES["gr08_triangle_census"] = gr08_triangle_census
-ROUND7_STAGED_ORACLE["gr08_triangle_census"] = _gr08_oracle_sql()
+EXTENSION_QUERIES["gr08_triangle_census"] = gr08_triangle_census
+EXTENSION_ORACLE["gr08_triangle_census"] = _gr08_oracle_sql()
 
 
 #: ss08's per-source sample size. Fixed-K like ss07's reservoir — the
@@ -22108,29 +21726,12 @@ FROM pop p JOIN samp s ON p.source = s.source
 ORDER BY p.source
 """
 
-ROUND7_STAGED_QUERIES["ss08_weighted_sample"] = ss08_weighted_sample
-ROUND7_STAGED_ORACLE["ss08_weighted_sample"] = _SS08_ORACLE
-
-
-def _register_staged_streaming_wave69() -> None:
-    from local_etl_csv_to_postgresql_spark.streaming.queries import (
-        ST20_STAGED_ORACLE,
-        st20_streaming_bottomk_sample,
-    )
-
-    ROUND7_STAGED_QUERIES["st20_streaming_bottomk_sample"] = (
-        st20_streaming_bottomk_sample
-    )
-    ROUND7_STAGED_ORACLE["st20_streaming_bottomk_sample"] = (
-        ST20_STAGED_ORACLE
-    )
-
-
-_register_staged_streaming_wave69()
+EXTENSION_QUERIES["ss08_weighted_sample"] = ss08_weighted_sample
+EXTENSION_ORACLE["ss08_weighted_sample"] = _SS08_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-11 staging, wave 70: qf06 Gopher repetition filters, ts05
+# Round-11, wave 70: qf06 Gopher repetition filters, ts05
 # changepoint scan.
 # ---------------------------------------------------------------------------
 
@@ -22273,8 +21874,8 @@ SELECT source,
 FROM per GROUP BY source ORDER BY source
 """
 
-ROUND7_STAGED_QUERIES["qf06_gopher_repetition"] = qf06_gopher_repetition
-ROUND7_STAGED_ORACLE["qf06_gopher_repetition"] = _QF06_ORACLE
+EXTENSION_QUERIES["qf06_gopher_repetition"] = qf06_gopher_repetition
+EXTENSION_ORACLE["qf06_gopher_repetition"] = _QF06_ORACLE
 
 
 #: ts05 report size: the top changepoint candidates by the scan
@@ -22372,12 +21973,12 @@ WHERE t < n_all
 ORDER BY g_stat DESC, day LIMIT {TS05_TOP}
 """
 
-ROUND7_STAGED_QUERIES["ts05_changepoint_scan"] = ts05_changepoint_scan
-ROUND7_STAGED_ORACLE["ts05_changepoint_scan"] = _TS05_ORACLE
+EXTENSION_QUERIES["ts05_changepoint_scan"] = ts05_changepoint_scan
+EXTENSION_ORACLE["ts05_changepoint_scan"] = _TS05_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-11 staging, wave 71: pv02 unpivot round-trip, dq05 functional-
+# Round-11, wave 71: pv02 unpivot round-trip, dq05 functional-
 # dependency audit.
 # ---------------------------------------------------------------------------
 
@@ -22435,8 +22036,8 @@ LEFT JOIN counts c ON c.priority = r.priority AND c.status = s.status
 ORDER BY r.priority, s.status
 """
 
-ROUND7_STAGED_QUERIES["pv02_status_unpivot"] = pv02_status_unpivot
-ROUND7_STAGED_ORACLE["pv02_status_unpivot"] = _PV02_ORACLE
+EXTENSION_QUERIES["pv02_status_unpivot"] = pv02_status_unpivot
+EXTENSION_ORACLE["pv02_status_unpivot"] = _PV02_ORACLE
 
 
 #: dq05's audited dependency candidates: (table, determinant,
@@ -22516,14 +22117,14 @@ FROM (
     )
 
 
-ROUND7_STAGED_QUERIES["dq05_functional_dependencies"] = (
+EXTENSION_QUERIES["dq05_functional_dependencies"] = (
     dq05_functional_dependencies
 )
-ROUND7_STAGED_ORACLE["dq05_functional_dependencies"] = _dq05_oracle_sql()
+EXTENSION_ORACLE["dq05_functional_dependencies"] = _dq05_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
-# Round-11 staging, wave 72: es20 covariance power-iteration step.
+# Round-11, wave 72: es20 covariance power-iteration step.
 # ---------------------------------------------------------------------------
 
 
@@ -22662,14 +22263,14 @@ FROM stepped CROSS JOIN nrm
 ORDER BY dim
 """
 
-ROUND7_STAGED_QUERIES["es20_power_iteration_step"] = (
+EXTENSION_QUERIES["es20_power_iteration_step"] = (
     es20_power_iteration_step
 )
-ROUND7_STAGED_ORACLE["es20_power_iteration_step"] = _ES20_ORACLE
+EXTENSION_ORACLE["es20_power_iteration_step"] = _ES20_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-11 staging, wave 73: gr09 k-core summary.
+# Round-11, wave 73: gr09 k-core summary.
 # ---------------------------------------------------------------------------
 
 #: gr09's core order: k = 3 keeps the kernel strictly denser than the
@@ -22802,12 +22403,12 @@ FROM core"""
     )
 
 
-ROUND7_STAGED_QUERIES["gr09_kcore_summary"] = gr09_kcore_summary
-ROUND7_STAGED_ORACLE["gr09_kcore_summary"] = _gr09_oracle_sql()
+EXTENSION_QUERIES["gr09_kcore_summary"] = gr09_kcore_summary
+EXTENSION_ORACLE["gr09_kcore_summary"] = _gr09_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
-# Round-11 staging, wave 74: ss09 greedy k-center coreset seeding.
+# Round-11, wave 74: ss09 greedy k-center coreset seeding.
 # ---------------------------------------------------------------------------
 
 #: ss09's coreset size (Gonzalez greedy rounds). 8 keeps the unrolled
@@ -22937,12 +22538,12 @@ def _ss09_oracle_sql() -> str:
     )
 
 
-ROUND7_STAGED_QUERIES["ss09_kcenter_coreset"] = ss09_kcenter_coreset
-ROUND7_STAGED_ORACLE["ss09_kcenter_coreset"] = _ss09_oracle_sql()
+EXTENSION_QUERIES["ss09_kcenter_coreset"] = ss09_kcenter_coreset
+EXTENSION_ORACLE["ss09_kcenter_coreset"] = _ss09_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
-# Round-11 staging, wave 75: ij01 interval-overlap attribution join.
+# Round-11, wave 75: ij01 interval-overlap attribution join.
 # ---------------------------------------------------------------------------
 
 #: ij01's promo calendar: six fixed two-week windows spread across the
@@ -23073,14 +22674,14 @@ FROM credited GROUP BY promo_id ORDER BY promo_id
 """
 
 
-ROUND7_STAGED_QUERIES["ij01_interval_attribution"] = (
+EXTENSION_QUERIES["ij01_interval_attribution"] = (
     ij01_interval_attribution
 )
-ROUND7_STAGED_ORACLE["ij01_interval_attribution"] = _ij01_oracle_sql()
+EXTENSION_ORACLE["ij01_interval_attribution"] = _ij01_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
-# Round-11 staging, wave 76: hll04 cross-source overlap by sketch
+# Round-11, wave 76: hll04 cross-source overlap by sketch
 # inclusion-exclusion.
 # ---------------------------------------------------------------------------
 
@@ -23310,54 +22911,14 @@ FROM scored ORDER BY source_a, source_b
 """
 
 
-ROUND7_STAGED_QUERIES["hll04_cross_source_overlap"] = (
+EXTENSION_QUERIES["hll04_cross_source_overlap"] = (
     hll04_cross_source_overlap
 )
-ROUND7_STAGED_ORACLE["hll04_cross_source_overlap"] = _hll04_oracle_sql()
+EXTENSION_ORACLE["hll04_cross_source_overlap"] = _hll04_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
-# Round-11 promotion: the 14 wave-69–76 queries staged during round 10
-# graduate into the live registry (r10 verdict task 1). Order = staging
-# wave order (69 -> 76); __spark_entry__._window_order consumes this as
-# the bucket-2 (never-certified) judgment order, so the driver's next
-# 50-slot window certifies these 14 first and fills the remaining 36
-# slots from the r5-era refresh-queue head.
-# ---------------------------------------------------------------------------
-
-ROUND11_PROMOTED: list[str] = [
-    # wave 69
-    "mix01_temperature_sweep",
-    "tx25_lexical_diversity",
-    "gr08_triangle_census",
-    "ss08_weighted_sample",
-    "st20_streaming_bottomk_sample",
-    # wave 70
-    "qf06_gopher_repetition",
-    "ts05_changepoint_scan",
-    # wave 71
-    "pv02_status_unpivot",
-    "dq05_functional_dependencies",
-    # wave 72
-    "es20_power_iteration_step",
-    # wave 73
-    "gr09_kcore_summary",
-    # wave 74
-    "ss09_kcenter_coreset",
-    # wave 75
-    "ij01_interval_attribution",
-    # wave 76
-    "hll04_cross_source_overlap",
-]
-
-for _name in ROUND11_PROMOTED:
-    EXTENSION_QUERIES[_name] = ROUND7_STAGED_QUERIES.pop(_name)
-    EXTENSION_ORACLE[_name] = ROUND7_STAGED_ORACLE.pop(_name)
-del _name
-
-
-# ---------------------------------------------------------------------------
-# Round-12 staging, wave 77: gr10 k-truss summary, rs02 Theil-Sen trend.
+# Round-12, wave 77: gr10 k-truss summary, rs02 Theil-Sen trend.
 # ---------------------------------------------------------------------------
 
 #: gr10's truss order: k = 3 keeps exactly the edges that close at
@@ -23485,8 +23046,8 @@ FROM truss"""
     )
 
 
-ROUND7_STAGED_QUERIES["gr10_ktruss_summary"] = gr10_ktruss_summary
-ROUND7_STAGED_ORACLE["gr10_ktruss_summary"] = _gr10_oracle_sql()
+EXTENSION_QUERIES["gr10_ktruss_summary"] = gr10_ktruss_summary
+EXTENSION_ORACLE["gr10_ktruss_summary"] = _gr10_oracle_sql()
 
 
 #: rs02's slope rounding (10 dp before ranking, the en01 rule: round
@@ -23680,58 +23241,12 @@ FROM dm CROSS JOIN mo CROSS JOIN ts
 """
 
 
-ROUND7_STAGED_QUERIES["rs02_theil_sen_trend"] = rs02_theil_sen_trend
-ROUND7_STAGED_ORACLE["rs02_theil_sen_trend"] = _RS02_ORACLE
+EXTENSION_QUERIES["rs02_theil_sen_trend"] = rs02_theil_sen_trend
+EXTENSION_ORACLE["rs02_theil_sen_trend"] = _RS02_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Round-12 staging, wave 78: st21 streaming MinHash resemblance.
-# ---------------------------------------------------------------------------
-
-
-def _register_staged_streaming_wave78() -> None:
-    from ..streaming.queries import (
-        ST21_STAGED_ORACLE,
-        st21_streaming_minhash_resemblance,
-    )
-
-    ROUND7_STAGED_QUERIES["st21_streaming_minhash_resemblance"] = (
-        st21_streaming_minhash_resemblance
-    )
-    ROUND7_STAGED_ORACLE["st21_streaming_minhash_resemblance"] = (
-        ST21_STAGED_ORACLE
-    )
-
-
-_register_staged_streaming_wave78()
-
-
-# ---------------------------------------------------------------------------
-# Round-12 promotion: the 3 queries staged during round 11 graduate
-# into the live registry (r11 verdict task 1). Order = staging wave
-# order (77 -> 78); __spark_entry__._window_order consumes this as the
-# bucket-2 (never-certified) judgment order, so the driver's next
-# 50-slot window certifies these 3 first and fills the remaining 47
-# slots from the refresh-queue head (the 11 r5-era rows, then 36 of
-# the 50 r6-era rows).
-# ---------------------------------------------------------------------------
-
-ROUND12_PROMOTED: list[str] = [
-    # wave 77
-    "gr10_ktruss_summary",
-    "rs02_theil_sen_trend",
-    # wave 78
-    "st21_streaming_minhash_resemblance",
-]
-
-for _name in ROUND12_PROMOTED:
-    EXTENSION_QUERIES[_name] = ROUND7_STAGED_QUERIES.pop(_name)
-    EXTENSION_ORACLE[_name] = ROUND7_STAGED_ORACLE.pop(_name)
-del _name
-
-
-# ---------------------------------------------------------------------------
-# Round-13 staging, wave 79: gr11 local clustering profile, tx26 Zipf
+# Round-13, wave 79: gr11 local clustering profile, tx26 Zipf
 # rank-frequency slope.
 # ---------------------------------------------------------------------------
 
@@ -24031,13 +23546,13 @@ FROM m CROSS JOIN mass
 """
 
 
-ROUND7_STAGED_QUERIES.update(
+EXTENSION_QUERIES.update(
     {
         "gr11_local_clustering": gr11_local_clustering,
         "tx26_zipf_slope": tx26_zipf_slope,
     }
 )
-ROUND7_STAGED_ORACLE.update(
+EXTENSION_ORACLE.update(
     {
         "gr11_local_clustering": _gr11_oracle_sql(),
         "tx26_zipf_slope": _tx26_oracle_sql(),
@@ -24046,7 +23561,7 @@ ROUND7_STAGED_ORACLE.update(
 
 
 # ---------------------------------------------------------------------------
-# Round-13 staging, wave 80: ss10 Neyman-allocation stratified sample.
+# Round-13, wave 80: ss10 Neyman-allocation stratified sample.
 # ---------------------------------------------------------------------------
 
 #: ss10's total sample budget across all strata. Fixed like ss08's
@@ -24242,36 +23757,12 @@ ORDER BY a.source, a.lang
 """
 
 
-ROUND7_STAGED_QUERIES["ss10_neyman_allocation"] = ss10_neyman_allocation
-ROUND7_STAGED_ORACLE["ss10_neyman_allocation"] = _ss10_oracle_sql()
+EXTENSION_QUERIES["ss10_neyman_allocation"] = ss10_neyman_allocation
+EXTENSION_ORACLE["ss10_neyman_allocation"] = _ss10_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
-# Round-13 promotions: the wave-79/80 queries graduate into the live
-# registry after sf0.001+sf0.01 oracle certification, sf0.1 sweep walls
-# (3.50/1.36/1.54 s), scale-curve probes, plan audit, degenerate-shape
-# parity, and full-pipeline Python replay tests. The driver's round-13
-# 50-slot window certifies these 3 first and fills the remaining 47
-# slots from the refresh-queue head (the 14 r6-era rows, then 33 of
-# the 50 r7-era rows).
-# ---------------------------------------------------------------------------
-
-ROUND13_PROMOTED: list[str] = [
-    # wave 79
-    "gr11_local_clustering",
-    "tx26_zipf_slope",
-    # wave 80
-    "ss10_neyman_allocation",
-]
-
-for _name in ROUND13_PROMOTED:
-    EXTENSION_QUERIES[_name] = ROUND7_STAGED_QUERIES.pop(_name)
-    EXTENSION_ORACLE[_name] = ROUND7_STAGED_ORACLE.pop(_name)
-del _name
-
-
-# ---------------------------------------------------------------------------
-# Round-14 staging, wave 81: pv03 dynamic-values pivot, fi01 mergeable
+# Round-14, wave 81: pv03 dynamic-values pivot, fi01 mergeable
 # Misra-Gries heavy hitters.
 # ---------------------------------------------------------------------------
 
@@ -24344,8 +23835,8 @@ def _pv03_oracle_sql() -> str:
     )
 
 
-ROUND7_STAGED_QUERIES["pv03_dynamic_lang_pivot"] = pv03_dynamic_lang_pivot
-ROUND7_STAGED_ORACLE["pv03_dynamic_lang_pivot"] = _pv03_oracle_sql()
+EXTENSION_QUERIES["pv03_dynamic_lang_pivot"] = pv03_dynamic_lang_pivot
+EXTENSION_ORACLE["pv03_dynamic_lang_pivot"] = _pv03_oracle_sql()
 
 
 #: fi01's Misra-Gries counter budget: any token with corpus frequency
@@ -24437,5 +23928,5 @@ WHERE cnt * {FI01_K + 1} > n
 ORDER BY cnt DESC, token
 """
 
-ROUND7_STAGED_QUERIES["fi01_heavy_hitter_tokens"] = fi01_heavy_hitter_tokens
-ROUND7_STAGED_ORACLE["fi01_heavy_hitter_tokens"] = FI01_ORACLE
+EXTENSION_QUERIES["fi01_heavy_hitter_tokens"] = fi01_heavy_hitter_tokens
+EXTENSION_ORACLE["fi01_heavy_hitter_tokens"] = FI01_ORACLE

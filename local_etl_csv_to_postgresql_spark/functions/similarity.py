@@ -38,37 +38,6 @@ def norm(a: Column) -> Column:
     )
 
 
-def dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """``dot`` unrolled for a statically-known dimension — BIT-IDENTICAL
-    to the fold by construction: the same ``((0.0 + p_0) + p_1) + ...``
-    left-to-right double additions over the same per-element products,
-    just spelled as a static expression tree instead of a higher-order
-    ``aggregate()``. HOFs are codegen-fallback (interpreted, one lambda
-    frame per element); the unrolled tree rides whole-stage codegen,
-    which is the difference between ~16M interpreted lambda steps and a
-    JIT'd loop on a 250k-pair scoring stage (r14, dd13).
-
-    Caller contract: both arrays hold EXACTLY ``dim`` elements (the
-    embedding schema's fixed width). A shorter array would make
-    ``F.get`` return NULL past the end and poison the sum where the
-    fold would sum fewer terms; never pass variable-length arrays."""
-    acc: Column = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + F.get(a, i).cast("double") * F.get(b, i).cast("double")
-    return acc
-
-
-def norm_fixed(a: Column, dim: int) -> Column:
-    """``norm`` unrolled for a statically-known dimension — same
-    bit-identical-order construction and caller contract as
-    ``dot_fixed``."""
-    acc: Column = F.lit(0.0)
-    for i in range(dim):
-        x = F.get(a, i).cast("double")
-        acc = acc + x * x
-    return F.sqrt(acc)
-
-
 def cosine(a: Column, b: Column, nd: int = 4) -> Column:
     return F.round(dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0)), nd)
 

@@ -73,8 +73,9 @@ def transform_transactions(
 ) -> TransformResult:
     """Full phase-2 transform (reference src/transform.py:522-626).
 
-    Raises TransformError on None/empty input or when validation leaves
-    zero rows (reference :540-551, :582-585).
+    Raises TransformError on None/empty input (reference :540-551) and
+    validate.ValidationError when every row fails validation
+    (reference :582-585).
     """
     if df is None:
         raise TransformError("Input DataFrame is None")

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from .config import EngineConfig
 from .operators.transform import TransformError, transform_transactions
+from .operators.validate import ValidationError
 from .sources.extract import ExtractError, extract_any
 from .warehouse import LoadError, Warehouse
 
@@ -94,7 +95,7 @@ def run_etl_pipeline(
         t = time.time()
         try:
             tr = transform_transactions(raw, cfg.validation)
-        except TransformError as e:
+        except (TransformError, ValidationError) as e:
             raise PipelineTransformError(str(e)) from e
         res.transformed_rows = tr.valid_rows
         res.issue_counts = tr.issue_counts

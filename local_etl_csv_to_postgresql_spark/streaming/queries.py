@@ -434,11 +434,13 @@ def st11_watermarked_dedup(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+STREAMING_QUERIES["st11_watermarked_dedup"] = st11_watermarked_dedup
+
 # DuckDB twin of st11: emitted = on-time batch ∪ stragglers still at or
 # above the watermark the on-time batch established (one scalar
 # watermark; re-deliveries drop either as late rows or as duplicates
 # against live state, so they never appear).
-ST11_STAGED_ORACLE = """
+STREAMING_ORACLE["st11_watermarked_dedup"] = """
 WITH e AS (
   SELECT event_id, event_type, ts FROM events
 ), a AS (
@@ -484,11 +486,13 @@ def st12_foreachbatch_upsert(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+STREAMING_QUERIES["st12_foreachbatch_upsert"] = st12_foreachbatch_upsert
+
 # DuckDB twin of st12: the idempotent sink's final state equals the
 # distinct input corpus (event_id is the key; the replay re-delivers
 # but never fabricates), so the oracle aggregates the events table
 # directly — engine-neutral, batching-independent.
-ST12_STAGED_ORACLE = """
+STREAMING_ORACLE["st12_foreachbatch_upsert"] = """
 SELECT event_type,
        CAST(COUNT(*) AS BIGINT) AS n_events,
        CAST(SUM(event_id) AS BIGINT) AS id_sum,
@@ -537,7 +541,9 @@ def st13_left_outer_attribution(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-ST13_STAGED_ORACLE = """
+STREAMING_QUERIES["st13_left_outer_attribution"] = st13_left_outer_attribution
+
+STREAMING_ORACLE["st13_left_outer_attribution"] = """
 WITH v AS (
   SELECT event_id AS v_id, user_id, ts AS v_ts
   FROM events WHERE event_type = 'view'
@@ -612,10 +618,12 @@ def st14_content_dedup(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+STREAMING_QUERIES["st14_content_dedup"] = st14_content_dedup
+
 # batch distinct-content rollup — exactly what the stream must emit;
 # DuckDB md5 over VARCHAR hashes the same utf-8 bytes Spark's
 # md5(text-as-binary) does (the mm06 rule)
-ST14_STAGED_ORACLE = """
+STREAMING_ORACLE["st14_content_dedup"] = """
 WITH d AS (
   SELECT lang,
          CAST(('0x' || substr(md5(text), 1, 15)) AS BIGINT) AS fp,
@@ -630,7 +638,7 @@ FROM d GROUP BY lang ORDER BY lang
 """
 
 
-# --- round-8 staged streaming surface (wave 37) -----------------------------
+# --- round-8 streaming surface (wave 37) -------------------------------------
 
 def st15_scd_asof_enrich(spark: SparkSession, sf: str) -> DataFrame:
     """SCD-type-2 as-of enrichment from an actual Structured Streaming
@@ -671,7 +679,9 @@ def st15_scd_asof_enrich(spark: SparkSession, sf: str) -> DataFrame:
     ).orderBy("version_no")
 
 
-ST15_STAGED_ORACLE = """
+STREAMING_QUERIES["st15_scd_asof_enrich"] = st15_scd_asof_enrich
+
+STREAMING_ORACLE["st15_scd_asof_enrich"] = """
 WITH ver AS (
   SELECT user_id,
          ROW_NUMBER() OVER (PARTITION BY user_id
@@ -732,7 +742,9 @@ def st16_streaming_binned_quantiles(
     )
 
 
-ST16_STAGED_ORACLE = """
+STREAMING_QUERIES["st16_streaming_binned_quantiles"] = st16_streaming_binned_quantiles
+
+STREAMING_ORACLE["st16_streaming_binned_quantiles"] = """
 WITH ev AS (
   SELECT event_type,
          LEAST(CAST(FLOOR(value) AS INT), 511) AS bin
@@ -758,7 +770,7 @@ FROM cum GROUP BY event_type ORDER BY event_type
 """
 
 
-# --- round-10 staged: st17 streaming Count-Min, st18 streaming HLL --------
+# --- round-10: st17 streaming Count-Min, st18 streaming HLL ------------------
 
 # Sketch geometry for the STREAMING sketch twins. Structural constants
 # (not env-tunable) so the oracle SQL below and the Spark plan cannot
@@ -846,7 +858,9 @@ def st17_streaming_countmin(spark: SparkSession, sf: str) -> DataFrame:
 
 _ST17_H = _H60_SQL.format(x="'cm' || CAST(d AS VARCHAR) || ':' || k")
 
-ST17_STAGED_ORACLE = f"""
+STREAMING_QUERIES["st17_streaming_countmin"] = st17_streaming_countmin
+
+STREAMING_ORACLE["st17_streaming_countmin"] = f"""
 WITH keyed AS (
   SELECT CAST(user_id AS VARCHAR) AS k, d
   FROM events
@@ -918,7 +932,9 @@ def st18_streaming_hll_registers(spark: SparkSession, sf: str) -> DataFrame:
 _ST18_H = _H60_SQL.format(x="CAST(user_id AS VARCHAR)")
 _ST18_REST_ZERO = ST18_REST_BITS + 1
 
-ST18_STAGED_ORACLE = f"""
+STREAMING_QUERIES["st18_streaming_hll_registers"] = st18_streaming_hll_registers
+
+STREAMING_ORACLE["st18_streaming_hll_registers"] = f"""
 WITH hashed AS (
   SELECT event_type,
          ({_ST18_H}) % {ST18_HLL_M} AS b,
@@ -940,7 +956,7 @@ ORDER BY event_type
 """
 
 
-# --- round-10 staged: st19 streaming Bloom filter --------------------------
+# --- round-10: st19 streaming Bloom filter -----------------------------------
 
 ST19_M_BITS = 1024
 ST19_K = 3
@@ -975,7 +991,9 @@ def st19_streaming_bloom_filter(spark: SparkSession, sf: str) -> DataFrame:
 
 _ST19_FP = "md5(regexp_replace(lower(text), '[^a-z0-9]+', '', 'g'))"
 
-ST19_STAGED_ORACLE = f"""
+STREAMING_QUERIES["st19_streaming_bloom_filter"] = st19_streaming_bloom_filter
+
+STREAMING_ORACLE["st19_streaming_bloom_filter"] = f"""
 WITH fp AS (
   SELECT {_ST19_FP} AS f FROM documents
 ), contribs AS (
@@ -998,7 +1016,7 @@ ORDER BY word_index
 """
 
 
-# --- round-11 staged: st20 streaming bottom-k (KMV) sample ----------------
+# --- round-11: st20 streaming bottom-k (KMV) sample --------------------------
 
 #: st20's per-type sample size (the KMV k). 32 keeps the state string
 #: ~1 KB per group and the estimate's relative error ~1/sqrt(k-1) ≈ 18%
@@ -1059,7 +1077,9 @@ def st20_streaming_bottomk_sample(spark: SparkSession, sf: str) -> DataFrame:
 
 _ST20_H = _H60_SQL.format(x="CAST(user_id AS VARCHAR)")
 
-ST20_STAGED_ORACLE = f"""
+STREAMING_QUERIES["st20_streaming_bottomk_sample"] = st20_streaming_bottomk_sample
+
+STREAMING_ORACLE["st20_streaming_bottomk_sample"] = f"""
 WITH hashed AS (
   SELECT event_type, user_id, ({_ST20_H}) AS h FROM events
 ), per AS (
@@ -1092,7 +1112,7 @@ ORDER BY p.event_type
 """
 
 
-# --- round-12 staged: st21 streaming MinHash resemblance -------------------
+# --- round-12: st21 streaming MinHash resemblance ----------------------------
 
 #: st21's signature width (the MinHash k). 16 mirrors the batch dedup
 #: family's MINHASH_K so the streamed sketch is the same artifact the
@@ -1213,7 +1233,9 @@ def st21_streaming_minhash_resemblance(
 _ST21_FP = "md5(regexp_replace(lower(text), '[^a-z0-9]+', '', 'g'))"
 _ST21_H0 = f"({_H60_SQL.format(x='f')}) % 2147483648"
 
-ST21_STAGED_ORACLE = f"""
+STREAMING_QUERIES["st21_streaming_minhash_resemblance"] = st21_streaming_minhash_resemblance
+
+STREAMING_ORACLE["st21_streaming_minhash_resemblance"] = f"""
 WITH dfp AS (
   SELECT DISTINCT source, {_ST21_FP} AS f FROM documents
 ), h AS (

@@ -146,9 +146,6 @@ def collect(record_files: list[str] | None = None) -> str:
     (registries, record_files) — byte-reproducible regardless of what
     the driver has landed since."""
     import __spark_entry__ as ep
-    from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-        ROUND7_STAGED_QUERIES,
-    )
 
     if record_files is None:
         record_files = records_on_disk()
@@ -192,8 +189,8 @@ def collect(record_files: list[str] | None = None) -> str:
         "# Coverage matrix",
         "",
         "Generated by `scripts/coverage_matrix.py` from the live registry",
-        "(`__spark_entry__.queries()`/`oracle_sql()`), the staged registry,",
-        "and the driver `CORRECTNESS_r*.json` records named on the",
+        "(`__spark_entry__.queries()`/`oracle_sql()`) and the driver",
+        "`CORRECTNESS_r*.json` records named on the",
         "`Records:` line below. Do not edit by hand —",
         "`tests/test_entry.py::test_coverage_matrix_fresh` asserts this",
         "file regenerates byte-identical AGAINST THAT PINNED RECORD LIST",
@@ -205,7 +202,6 @@ def collect(record_files: list[str] | None = None) -> str:
         f"- **Live queries:** {len(live)}"
         f" ({sum(1 for n in live if n in oracles)} with a DuckDB oracle"
         " twin; the remainder are rows-only by design)",
-        f"- **Staged queries:** {len(ROUND7_STAGED_QUERIES)}",
         f"- **Driver-certified green (any round):** "
         f"{sum(1 for n in live if n in last_green)}",
         f"- **In the current 50-slot certification window:** "
@@ -214,13 +210,13 @@ def collect(record_files: list[str] | None = None) -> str:
         "Legend — oracle: `hash` = full rows+schema+value-hash twin;"
         " `rows` = rows-only by design (no SQL-expressible twin)."
         " last-green: the most recent driver CORRECTNESS round whose row"
-        " was fully green; `staged`/`pending` = awaiting first driver"
+        " was fully green; `pending` = awaiting first driver"
         " window.",
         "",
     ]
 
     fams: dict[str, list[str]] = {}
-    for name in sorted(live) + sorted(ROUND7_STAGED_QUERIES):
+    for name in sorted(live):
         fams.setdefault(_family(name), []).append(name)
 
     lines += ["| query | family | oracle | last green | sf0.1 wall (s) |",
@@ -228,15 +224,8 @@ def collect(record_files: list[str] | None = None) -> str:
     for fam in sorted(fams):
         label = FAMILY_LABELS.get(fam, fam)
         for name in fams[fam]:
-            staged = name in ROUND7_STAGED_QUERIES
-            oracle = (
-                "hash"
-                if name in oracles or staged
-                else "rows"
-            )
-            if staged:
-                green = "staged"
-            elif name in last_green:
+            oracle = "hash" if name in oracles else "rows"
+            if name in last_green:
                 green = f"r{last_green[name]}"
             else:
                 green = "pending (in window)" if name in window else "pending"

@@ -50,18 +50,8 @@ def audit(plan: str) -> dict:
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("plan_audit")
-    from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-        ROUND7_STAGED_QUERIES,
-    )
-
-    targets = dict(entrypoint.queries())
-    # staged next-round surface is plan-audited under the same rules,
-    # tagged so the table reads honestly
-    targets.update(
-        {f"{n} (staged)": fn for n, fn in ROUND7_STAGED_QUERIES.items()}
-    )
     rows = []
-    for name, fn in targets.items():
+    for name, fn in entrypoint.queries().items():
         if name.startswith("st") and name[2:3].isdigit():
             continue  # streaming replay: plan is per-micro-batch
         try:

@@ -7,10 +7,8 @@ recomputes its ordering from the checked-in ``CORRECTNESS_r*.json``
 records at call time —
 
 1. any live query whose most recent driver row FAILED;
-2. queries that have NEVER been driver-certified (promotions — a stale
-   green row beats no row at all), in the promotion order declared next
-   to the promotions (``functions/entrypoints.ROUND13_PROMOTED``,
-   concatenated after the earlier rounds' lists);
+2. queries that have NEVER been driver-certified (new queries — a
+   stale green row beats no row at all), name-ascending;
 3. the remaining slots by OLDEST last-green round, name-ascending
    within a round.
 

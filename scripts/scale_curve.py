@@ -40,20 +40,20 @@ PROBES = [
     ("dd03_minhash_lsh_pairs", "MinHash-LSH candidate join"),
     ("gr03_cc_star_contraction", "iterative connected components"),
     ("dq04_order_total_reconciliation", "co-keyed fact-fact reconcile"),
-    # round-10 promoted shapes
+    # round-10 shapes
     ("ses01_gap_sessionization", "single-shuffle sessionization (LAG+sum+rollup)"),
     ("rfm01_rfm_segmentation", "three-pass two-phase ranking census"),
     ("st17_streaming_countmin", "streaming sketch maintenance (availableNow)"),
-    # round-11 promoted / round-12 staged shapes
+    # round-11 / round-12 shapes
     ("gr09_kcore_summary", "iterative vertex peeling (k-core fixpoint)"),
     ("gr10_ktruss_summary", "iterative edge peeling (per-round triangle enumeration)"),
     ("rs02_theil_sen_trend", "calendar-bounded pair grid + rank selection"),
     ("st21_streaming_minhash_resemblance", "multi-batch streamed sketch (MIN lattice)"),
-    # round-13 staged shapes
+    # round-13 shapes
     ("gr11_local_clustering", "one-shot triangle enumeration + vertex explode rollup"),
     ("tx26_zipf_slope", "rank-cut to bounded table + integer-scaled OLS moments"),
     ("ss10_neyman_allocation", "bounded-strata allocation + per-stratum variable-k pick"),
-    # round-14 staged shapes
+    # round-14 shapes
     ("pv03_dynamic_lang_pivot", "dynamic-values pivot (distinct scan + bounded groupBy)"),
     ("fi01_heavy_hitter_tokens", "mergeable per-partition sketch + exact candidate recount"),
 ]
@@ -62,13 +62,11 @@ PROBES = [
 def main() -> None:
     import __spark_entry__ as entry
     from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-        ROUND7_STAGED_QUERIES,
         reset_shared_intermediates,
     )
     from local_etl_csv_to_postgresql_spark.session import get_spark
 
-    registry = dict(entry.queries())
-    registry.update(ROUND7_STAGED_QUERIES)
+    registry = entry.queries()
     spark = get_spark("scale_curve")
     # warm the JVM/session so probe 1 doesn't pay session start
     registry["q00_pricing_summary"](spark, SFS[0]).collect()

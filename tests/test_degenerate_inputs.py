@@ -15,15 +15,10 @@ import os
 
 import pytest
 
-from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-    EXTENSION_ORACLE,
-    EXTENSION_QUERIES,
-    ROUND7_STAGED_ORACLE,
-    ROUND7_STAGED_QUERIES,
-)
+import __spark_entry__ as ep
 
-QUERIES = {**EXTENSION_QUERIES, **ROUND7_STAGED_QUERIES}
-ORACLES = {**EXTENSION_ORACLE, **ROUND7_STAGED_ORACLE}
+QUERIES = ep.queries()
+ORACLES = ep.oracle_sql()
 
 #: every query whose input is ONLY the lineitem-derived co-purchase
 #: graph (oracle references no other table), swept over both shapes

@@ -4,6 +4,7 @@ coverage (the full value-equivalence gate runs in scripts/check_oracle.py)."""
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 import pytest
 
@@ -31,6 +32,27 @@ def test_every_query_has_oracle():
     q, o = ep.queries(), ep.oracle_sql()
     assert set(o) == set(q) - NO_ORACLE
     assert len(q) >= 35
+
+
+def test_no_name_in_two_registries():
+    """queries() merges the three registries with dict.update, so a
+    name registered twice would silently shadow one of the queries."""
+    from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
+        EXTENSION_QUERIES,
+    )
+    from local_etl_csv_to_postgresql_spark.plans.analytics import (
+        RELATIONAL_QUERIES,
+    )
+    from local_etl_csv_to_postgresql_spark.streaming.queries import (
+        STREAMING_QUERIES,
+    )
+
+    registries = [RELATIONAL_QUERIES, EXTENSION_QUERIES, STREAMING_QUERIES]
+    seen = Counter(["q00_pricing_summary"])
+    for reg in registries:
+        seen.update(list(reg))
+    assert [n for n, c in seen.items() if c > 1] == []
+    assert len(ep.queries()) == len(seen)
 
 
 @pytest.mark.skipif(not os.path.isdir(SF), reason="driver testdata not present")
@@ -90,17 +112,12 @@ def test_window_covers_all_never_certified_queries():
 def test_readme_counts():
     """README registry counts are generated-not-hand-counted (r7 verdict
     task 6): the bolded counts line must match the computed registry
-    sizes exactly, so any future staging wave that forgets the README
-    fails the suite instead of shipping a stale count."""
-    from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-        ROUND7_STAGED_QUERIES,
-    )
-
+    size exactly, so a query added without a README update fails the
+    suite instead of shipping a stale count."""
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(here, "README.md")) as fh:
         readme = fh.read()
-    live, staged = len(ep.queries()), len(ROUND7_STAGED_QUERIES)
-    expected = f"**{live} live queries, {staged} staged**"
+    expected = f"**{len(ep.queries())} live queries**"
     assert expected in readme, (
         f"README counts line out of date: expected {expected!r}"
     )

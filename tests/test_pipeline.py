@@ -119,6 +119,22 @@ def test_pipeline_releases_cache_when_it_stops_early(
     assert cache_is_empty(spark)
 
 
+def test_pipeline_fails_when_every_row_is_invalid(spark, tmp_path):
+    from tests.conftest import cache_is_empty
+
+    spark.catalog.clearCache()
+    p = tmp_path / "bad_rows.csv"
+    rows = generate_transactions(2, 2, 1, seed=3)
+    for r in rows:
+        r["amount"] = "not_a_number"
+    write_transactions_csv(str(p), rows)
+    cfg = EngineConfig(warehouse=WarehouseConfig(path=str(tmp_path / "wh")))
+    res = run_etl_pipeline(spark, str(p), cfg)
+    assert res.status == "failed"
+    assert "All rows failed validation" in res.error
+    assert cache_is_empty(spark)
+
+
 def test_pipeline_dry_run_writes_nothing(spark, csv_path, tmp_path):
     wh_path = tmp_path / "wh_dry"
     cfg = EngineConfig(warehouse=WarehouseConfig(path=str(wh_path)))

@@ -75,7 +75,7 @@ BNLJ_ALLOWED = {
     "q46_part_value_share",  # 1-row broadcast (total, count) threshold
     "tx12_bpe_iterated_merges",  # 1-row broadcast top merge pair
     "rrf01_hybrid_rank_fusion",  # 1-row broadcast query vector (dense leg)
-    # staged round-7 surface (swept below so graduation can't trip this)
+    # round-7 surface
     "dd13_semantic_dedup",  # k-row broadcast Lloyd's centroid list
     "ir01_dsir_importance",  # bounded bucket-model / 1-row total broadcasts
     "win04_linear_interpolation",  # day spine × broadcast tracked-user roster
@@ -89,11 +89,11 @@ BNLJ_ALLOWED = {
     "pa03_t_closeness_audit",  # ≤5-row segment roster + 1-row corpus total
     "fs01_fellegi_sunter_scores",  # 1-row u-stat / weight scalar frames
     "rk01_rank_agreement",  # 20-row ranking-head pair comparison
-    # staged round-8 surface
+    # round-8 surface
     "mw01_mann_whitney_drift",  # value grid × ≤5-row source roster fill
     "ab01_proportion_drift",  # ≤5-row per-source (n, k) self-pairing
     "ev01_ann_ranking_quality",  # 10-row broadcast query-vector panel
-    # staged round-9 surface
+    # round-9 surface
     "kl01_source_unigram_kl",  # 1-row broadcast corpus-token total
     "es16_bound_pruned_search",  # 1-row query vector + two 1-row certificates
     "tx21_kneser_ney_bigrams",  # 1-row broadcast bigram-type total
@@ -101,7 +101,7 @@ BNLJ_ALLOWED = {
     "sv01_conversion_survival_curve",  # 1-row broadcast cohort size
     "tx23_pmi_collocations",  # 1-row broadcast corpus-token total
     "es17_ivf_nprobe_sweep",  # 16-row centroid panel + 1-row certificates
-    # staged round-10 surface
+    # round-10 surface
     "tx24_vocab_mass_coverage",  # 1-row broadcast token-mass scalar
     "es18_ivf_cell_balance",  # 1-row broadcast embedding total
     "dm02_domain_reweight_step",  # 1-row broadcast corpus-token total
@@ -111,7 +111,7 @@ BNLJ_ALLOWED = {
     # shared bigram-LM kernel (tx14's allowlisted broadcast, composed)
     "ar01_brand_association_rules",  # 1-row broadcast order-total scalar
     "ap01_approx_quantile_calibration",  # 5-row approx panel + 1-row total
-    # staged round-11 surface
+    # round-11 surface
     "mix01_temperature_sweep",  # |alphas|-row grid + per-alpha totals,
     # all bounded by the MIX01_ALPHAS constant
     "gr08_triangle_census",  # 1-row census scalars (stats × tri)
@@ -122,18 +122,18 @@ BNLJ_ALLOWED = {
     "ij01_interval_attribution",  # literal |windows|-row promo calendar
     "hll04_cross_source_overlap",  # |sources|-roster pair grid over the
     # bounded register table
-    # staged round-12 surface
+    # round-12 surface
     "gr10_ktruss_summary",  # 1-row summary x 1-row truss-node count
     "rs02_theil_sen_trend",  # calendar-bounded day-pair grid (~2.4k
     # days at ANY sf — grows with the date range, never the data) +
     # 1-row moment/median scalars
     "st21_streaming_minhash_resemblance",  # |sources| roster pair grid
     # over the bounded signature table
-    # staged round-13 surface
+    # round-13 surface
     "tx26_zipf_slope",  # 1-row OLS-moment frame x 1-row token-mass scalar
     "ss10_neyman_allocation",  # 1-row weight-total scalar over the
     # |sources|x|langs|-bounded strata table
-    # staged round-14 surface
+    # round-14 surface
     "fi01_heavy_hitter_tokens",  # 1-row token-mass scalar against the
     # O(K·P)-bounded candidate recount
 }
@@ -141,18 +141,11 @@ BNLJ_ALLOWED = {
 
 @needs_testdata
 def test_no_query_degrades_to_unbounded_cross_joins(spark):
-    """Sweep every query in the library — registered AND staged, so a
-    bad plan never graduates: no CartesianProduct anywhere, and
+    """Sweep every query in the library: no CartesianProduct anywhere, and
     BroadcastNestedLoopJoin only where a bounded broadcast side is
     the point (see BNLJ_ALLOWED). Catches the classic silent failure
     where a refactor turns an equi-join into a cross product."""
-    from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-        ROUND7_STAGED_QUERIES,
-    )
-
-    targets = dict(ep.queries())
-    targets.update(ROUND7_STAGED_QUERIES)
-    for name, fn in targets.items():
+    for name, fn in ep.queries().items():
         # streaming replays (st01..st99): plan not static
         if name.startswith("st") and name[2:3].isdigit():
             continue
@@ -327,9 +320,9 @@ BROADCAST_HINT_ALLOWED_EXT = {
     "weights",     # 1-row Fellegi-Sunter weight frame (fs01)
     "rhs",         # LIMIT-20 ranking head — bounded by construction (rk01)
     "nn",          # 1-row vertex-count scalar (gr02 integer PageRank)
-    # staged round-9 surface
+    # round-9 surface
     "qrow",        # 1-row query vector + prefix/tail-norm projection (es16)
-    # staged round-10 surface
+    # round-10 surface
     "mass",        # 1-row token-mass scalar (tx24)
     "probes",      # LIMIT-10 heavy-hitter panel (cm02)
     "occ",         # 1-row occupied-cell count (cm02)
@@ -339,20 +332,20 @@ BROADCAST_HINT_ALLOWED_EXT = {
     "n_docs",      # 1-row corpus doc total (tx22)
     "n_total",     # 1-row cohort / token totals (sv01, tx23)
     "probes",      # <=4-row probed-centroid cell list (es17)
-    # staged round-11 surface
+    # round-11 surface
     "alphas",      # fixed |MIX01_ALPHAS|-row exponent grid (mix01)
     "eff",         # per-alpha effective-source-count table (mix01)
     "m0",          # 1-row mu-dot-v0 scalar (es20)
     "nrm",         # 1-row step-norm scalar (es20)
     "core_edges",  # 1-row core-edge-count scalar (gr09)
     "promos",      # literal |IJ01_PROMO_WINDOWS|-row calendar (ij01)
-    # staged round-12 surface
+    # round-12 surface
     "nodes",       # 1-row truss-node-count scalar (gr10)
     "sxy",         # 1-row OLS moment scalars (rs02)
     "ts",          # 1-row Theil-Sen median scalar (rs02)
-    # staged round-13 surface
+    # round-13 surface
     "alloc",       # |sources|x|langs|-bounded allocation table (ss10)
-    # staged round-14 surface
+    # round-14 surface
     "cand",        # O(K·P)-bounded Misra-Gries candidate roster (fi01)
 }
 
@@ -385,7 +378,7 @@ def test_no_broadcast_hint_on_sf_proportional_frames():
 
 def test_no_broadcast_hint_on_sf_proportional_frames_extensions():
     """The same pin for the extension library — a new operator in
-    functions/entrypoints.py (where the staged TPC-H shapes and the
+    functions/entrypoints.py (where the round-7 TPC-H shapes and the
     LLM-pipeline queries live) cannot force-broadcast an
     SF-proportional frame without updating the audited allowlist."""
     offenders = _hint_offenders(

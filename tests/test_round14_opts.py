@@ -1,14 +1,11 @@
 """Round-14 optimization invariants.
 
-1. The dd13 vectorized pair kernel (_dd13_cluster_pair_dots) must be
-   BIT-identical to the certified join+fold shape it replaced: same
-   pair set, same raw dot and norm-product doubles (the per-dimension
-   Gram accumulation reproduces the fold's left-to-right order).
-2. sim.dot_fixed / norm_fixed (the unrolled codegen forms) must be
-   bit-identical to the higher-order folds. They are currently unused
-   in query paths — a kernel A/B measured the unrolled GetArrayItem
-   chain 2.4x SLOWER than the interpreted fold (r14) — but the
-   equivalence is pinned so a future round can reach for them safely.
+The dd13 vectorized pair kernel (_dd13_cluster_pair_dots) must be
+BIT-identical to the certified join+fold shape it replaced: same pair
+set, same raw dot and norm-product doubles (the per-dimension Gram
+accumulation reproduces the fold's left-to-right order). The
+mapInArrow centroid assignment must pick the fold's winner on every
+row.
 """
 
 from __future__ import annotations
@@ -171,32 +168,3 @@ def test_assignment_arrow_kernel_matches_fold(spark):
     assert (
         _assign_via_fold(df, empty, "vec_id", "embedding", None).count() == 0
     )
-
-
-def test_unrolled_dot_norm_bit_identical_to_fold(spark):
-    df = spark.range(2_000).select(
-        "id",
-        F.transform(
-            F.sequence(F.lit(1), F.lit(16)),
-            lambda i: ((i * (F.col("id") % 97 + 1)).cast("double") / 9.7)
-            - F.lit(50.0),
-        ).alias("a"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(16)),
-            lambda i: ((i * (F.col("id") % 89 + 2)).cast("double") / 8.9)
-            - F.lit(60.0),
-        ).alias("b"),
-    )
-    bad = df.select(
-        (
-            (
-                sim.dot(F.col("a"), F.col("b"))
-                != sim.dot_fixed(F.col("a"), F.col("b"), 16)
-            )
-            | (
-                sim.norm(F.col("a"))
-                != sim.norm_fixed(F.col("a"), 16)
-            )
-        ).cast("int").alias("__bad")
-    ).agg(F.sum("__bad")).collect()[0][0]
-    assert bad == 0

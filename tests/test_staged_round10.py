@@ -1,11 +1,6 @@
-"""Round-10 staged surface invariants: operators implemented during
-round 9 and registered into ``ROUND7_STAGED_QUERIES`` AFTER the
-round-9 promotion block, awaiting the round-10 certification window.
-
-Oracle certification at sf0.001 AND sf0.01 rides the shared
-parametrized harness in tests/test_staged_round7.py (which sweeps the
-staged dict); this file pins the semantic invariants the hash compare
-alone can't express."""
+"""Round-10 query invariants: semantic properties the hash compare
+alone can't express. Oracle certification runs in
+tests/test_oracle_gate.py with every other queries() entry."""
 
 from __future__ import annotations
 
@@ -14,14 +9,9 @@ import os
 
 import pytest
 
-from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-    EXTENSION_QUERIES,
-    ROUND7_STAGED_QUERIES,
-)
+import __spark_entry__ as ep
 
-# Promoted queries move to EXTENSION_QUERIES at round boundaries; the
-# ones still staged stay in ROUND7_STAGED_QUERIES — look up in either.
-QUERIES = {**EXTENSION_QUERIES, **ROUND7_STAGED_QUERIES}
+QUERIES = ep.queries()
 
 SF = "/root/testdata/sf0.001"
 
@@ -1785,31 +1775,3 @@ def test_ses01_tied_timestamps_share_a_session(spark, mini_sf):
     assert rows["2-3"]["n_events"] == 8
     assert rows["1"]["n_sessions"] == 2
     assert rows["1"]["n_events"] == 2
-
-
-def test_every_staged_query_has_an_invariant_test():
-    """Discipline lock: the staging contract is oracle certification
-    (test_staged_round7's sweep) + a recorded sf0.1 wall (also pinned
-    there) + at least one SEMANTIC invariant test. The first two are
-    already structural; this pins the third — a staged query whose
-    full name never appears in any staged-round test file has no
-    invariant coverage and fails here instead of slipping through a
-    promotion."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    src = ""
-    for f in (
-        "test_staged_round7.py",
-        "test_staged_round8.py",
-        "test_staged_round9.py",
-        "test_staged_round10.py",
-        "test_staged_round11.py",
-        "test_staged_round12.py",
-        "test_staged_round13.py",
-        "test_staged_round14.py",
-    ):
-        with open(os.path.join(here, f)) as fh:
-            src += fh.read()
-    missing = [n for n in ROUND7_STAGED_QUERIES if n not in src]
-    assert missing == [], (
-        "staged queries with no invariant test mention: " f"{missing}"
-    )

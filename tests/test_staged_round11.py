@@ -1,7 +1,6 @@
-"""Round-11 staged surface invariants (wave 69): semantic properties
-the hash compare alone can't express. Oracle certification at
-sf0.001+sf0.01 rides the shared parametrized harness in
-tests/test_staged_round7.py (which sweeps the staged dict)."""
+"""Round-11 query invariants (wave 69): semantic properties
+the hash compare alone can't express. Oracle certification runs
+in tests/test_oracle_gate.py with every other queries() entry."""
 
 from __future__ import annotations
 
@@ -12,14 +11,9 @@ import re
 
 import pytest
 
-from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-    EXTENSION_QUERIES,
-    ROUND7_STAGED_QUERIES,
-)
+import __spark_entry__ as ep
 
-# Promoted queries move to EXTENSION_QUERIES at round boundaries; the
-# ones still staged stay in ROUND7_STAGED_QUERIES — look up in either.
-QUERIES = {**EXTENSION_QUERIES, **ROUND7_STAGED_QUERIES}
+QUERIES = ep.queries()
 
 SF = "/root/testdata/sf0.001"
 

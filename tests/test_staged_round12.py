@@ -1,7 +1,6 @@
-"""Round-12 staged surface invariants (waves 77-78): semantic
-properties the hash compare alone can't express. Oracle certification
-at sf0.001+sf0.01 rides the shared parametrized harness in
-tests/test_staged_round7.py (which sweeps the staged dict)."""
+"""Round-12 query invariants (waves 77-78): semantic properties
+the hash compare alone can't express. Oracle certification runs
+in tests/test_oracle_gate.py with every other queries() entry."""
 
 from __future__ import annotations
 
@@ -10,14 +9,9 @@ import os
 
 import pytest
 
-from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-    EXTENSION_QUERIES,
-    ROUND7_STAGED_QUERIES,
-)
+import __spark_entry__ as ep
 
-# Promoted queries move to EXTENSION_QUERIES at round boundaries; the
-# ones still staged stay in ROUND7_STAGED_QUERIES — look up in either.
-QUERIES = {**EXTENSION_QUERIES, **ROUND7_STAGED_QUERIES}
+QUERIES = ep.queries()
 
 SF = "/root/testdata/sf0.001"
 
@@ -260,11 +254,10 @@ def test_gr10_empty_truss_oracle_agreement(spark, tmp_path):
     duckdb = pytest.importorskip("duckdb")
     from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
         EXTENSION_ORACLE,
-        ROUND7_STAGED_ORACLE,
     )
     from scripts.check_oracle import compare
 
-    oracle = {**EXTENSION_ORACLE, **ROUND7_STAGED_ORACLE}[
+    oracle = EXTENSION_ORACLE[
         "gr10_ktruss_summary"
     ]
     # two orders sharing parts {1, 2}: one co-purchase edge (>= 2
@@ -307,11 +300,10 @@ def test_rs02_degenerate_single_day_series(spark, tmp_path):
     duckdb = pytest.importorskip("duckdb")
     from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
         EXTENSION_ORACLE,
-        ROUND7_STAGED_ORACLE,
     )
     from scripts.check_oracle import compare
 
-    oracle = {**EXTENSION_ORACLE, **ROUND7_STAGED_ORACLE}[
+    oracle = EXTENSION_ORACLE[
         "rs02_theil_sen_trend"
     ]
     pd.DataFrame(

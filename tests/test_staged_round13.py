@@ -1,7 +1,6 @@
-"""Round-13 staged surface invariants (waves 79-80): semantic
-properties the hash compare alone can't express. Oracle certification
-at sf0.001+sf0.01 rides the shared parametrized harness in
-tests/test_staged_round7.py (which sweeps the staged dict)."""
+"""Round-13 query invariants (waves 79-80): semantic properties
+the hash compare alone can't express. Oracle certification runs
+in tests/test_oracle_gate.py with every other queries() entry."""
 
 from __future__ import annotations
 
@@ -13,14 +12,9 @@ from collections import Counter
 
 import pytest
 
-from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-    EXTENSION_QUERIES,
-    ROUND7_STAGED_QUERIES,
-)
+import __spark_entry__ as ep
 
-# Promoted queries move to EXTENSION_QUERIES at round boundaries; the
-# ones still staged stay in ROUND7_STAGED_QUERIES — look up in either.
-QUERIES = {**EXTENSION_QUERIES, **ROUND7_STAGED_QUERIES}
+QUERIES = ep.queries()
 
 SF = "/root/testdata/sf0.001"
 
@@ -224,11 +218,10 @@ def test_tx26_degenerate_single_type_corpus(spark, tmp_path):
     duckdb = pytest.importorskip("duckdb")
     from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
         EXTENSION_ORACLE,
-        ROUND7_STAGED_ORACLE,
     )
     from scripts.check_oracle import compare
 
-    oracle = {**EXTENSION_ORACLE, **ROUND7_STAGED_ORACLE}["tx26_zipf_slope"]
+    oracle = EXTENSION_ORACLE["tx26_zipf_slope"]
     pd.DataFrame(
         {
             "doc_id": [0, 1],
@@ -272,11 +265,10 @@ def test_ss10_huge_chars_no_bigint_overflow(spark, tmp_path):
     duckdb = pytest.importorskip("duckdb")
     from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
         EXTENSION_ORACLE,
-        ROUND7_STAGED_ORACLE,
     )
     from scripts.check_oracle import compare
 
-    oracle = {**EXTENSION_ORACLE, **ROUND7_STAGED_ORACLE}[
+    oracle = EXTENSION_ORACLE[
         "ss10_neyman_allocation"
     ]
     xs = [4_000_000_000, 5_000_000_000, 6_000_000_000]  # x*x > Long.MAX

@@ -1,7 +1,7 @@
-"""Round-14 staged surface invariants (wave 81): semantic properties
-the hash compare alone can't express. Oracle certification at
-sf0.001+sf0.01 rides the shared parametrized harness in
-tests/test_staged_round7.py (which sweeps the staged dict)."""
+"""Round-14 query invariants (wave 81): semantic properties the hash
+compare alone can't express. Oracle certification runs in
+tests/test_oracle_gate.py (sf0.001) and in
+tests/test_staged_round7.py's driver-scale harness (sf0.01)."""
 
 from __future__ import annotations
 
@@ -11,14 +11,9 @@ from collections import Counter
 
 import pytest
 
-from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-    EXTENSION_QUERIES,
-    ROUND7_STAGED_QUERIES,
-)
+import __spark_entry__ as ep
 
-# Promoted queries move to EXTENSION_QUERIES at round boundaries; the
-# ones still staged stay in ROUND7_STAGED_QUERIES — look up in either.
-QUERIES = {**EXTENSION_QUERIES, **ROUND7_STAGED_QUERIES}
+QUERIES = ep.queries()
 
 SF = "/root/testdata/sf0.001"
 
@@ -150,8 +145,8 @@ def test_fi01_eviction_path_parity(spark, tmp_path):
 
     duckdb = pytest.importorskip("duckdb")
     from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
+        EXTENSION_ORACLE,
         FI01_K,
-        ROUND7_STAGED_ORACLE,
     )
     from scripts.check_oracle import compare
 
@@ -188,7 +183,7 @@ def test_fi01_eviction_path_parity(spark, tmp_path):
             f"'{tmp_path}/documents.parquet'"
         )
         odf = con.execute(
-            ROUND7_STAGED_ORACLE["fi01_heavy_hitter_tokens"]
+            EXTENSION_ORACLE["fi01_heavy_hitter_tokens"]
         ).fetchdf()
     finally:
         con.close()

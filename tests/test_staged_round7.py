@@ -1,32 +1,25 @@
-"""Round-7 staged surface: operators implemented and locally certified
-this round but not yet registered in ``__spark_entry__.queries()`` (the
-round-6 certification window's ten new-entry slots are spent — see
-``ROUND7_STAGED_QUERIES`` in functions/entrypoints.py).
+"""Round-7 query invariants, plus two checks that span rounds.
 
-Each staged query runs through the SAME Spark-vs-DuckDB compare harness
-as the driver gate, so registration next round is a two-line dict move
-with the certification evidence already green.
+tests/test_oracle_gate.py certifies every ``__spark_entry__.queries()``
+entry at sf0.001. The round-7/8 queries and pv03/fi01 were also
+certified at sf0.01, the driver gate's scale, when they entered the
+registry; ``DRIVER_SCALE_NAMES`` keeps that certification pinned here.
+Every query with a recorded sf0.1 wall in scripts/staged_sf01_walls.json
+must stay registered and under the dd14-class bound.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
 
-from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-    EXTENSION_QUERIES,
-    ROUND7_PROMOTED,
-    ROUND8_PROMOTED,
-    ROUND7_STAGED_ORACLE,
-    ROUND7_STAGED_QUERIES,
-)
+import __spark_entry__ as ep
 from scripts.check_oracle import compare
 
-# Invariant tests below index queries by name. Promoted queries move to
-# EXTENSION_QUERIES at round boundaries (ROUND7_PROMOTED); the ones
-# still staged stay in ROUND7_STAGED_QUERIES — look up in either.
-QUERIES = {**EXTENSION_QUERIES, **ROUND7_STAGED_QUERIES}
+QUERIES = ep.queries()
+ORACLES = ep.oracle_sql()
 
 SF = "/root/testdata/sf0.001"
 # the scale the round driver's own gate runs at — certification must
@@ -38,109 +31,117 @@ needs_testdata = pytest.mark.skipif(
     not os.path.isdir(SF), reason="driver testdata not present"
 )
 
-
-@pytest.fixture(
-    scope="module", params=[SF, DRIVER_SF], ids=["sf0.001", "sf0.01"]
+#: queries certified at sf0.01 as well as sf0.001
+DRIVER_SCALE_NAMES = (
+    # round 7
+    "hll02_deterministic_hll",
+    "q49_nation_volume_shipping",
+    "q50_local_supplier_revenue",
+    "q51_returned_item_revenue",
+    "q52_shipping_priority",
+    "q53_order_priority_check",
+    "q54_product_profit",
+    "q55_priority_pivot_by_status",
+    "q56_promo_revenue_share",
+    "q57_supplier_part_counts",
+    "q58_large_volume_orders",
+    "q59_forecast_revenue",
+    "dd13_semantic_dedup",
+    "dd14_rolling_hash_signature",
+    "dd15_duplicated_gram_fraction",
+    "pa01_k_anonymity_audit",
+    "pa02_l_diversity_audit",
+    "pa03_t_closeness_audit",
+    "bm01_bm25_retrieval",
+    "ii01_inverted_index",
+    "st11_watermarked_dedup",
+    "st12_foreachbatch_upsert",
+    "st13_left_outer_attribution",
+    "st14_content_dedup",
+    "gr02_candidate_pagerank",
+    "tc01_neardup_triangles",
+    "ct03_fuzzy_contamination",
+    "xl01_crosslingual_neardup",
+    "es13_pq_adc_search",
+    "es14_truncated_dim_recall",
+    "es15_jl_projection_qc",
+    "ir01_dsir_importance",
+    "sl01_split_leakage",
+    "ss04_temporal_split_audit",
+    "ss05_shard_balance_audit",
+    "win04_linear_interpolation",
+    "cm01_countmin_heavy_hitters",
+    "tx14_bigram_cross_entropy",
+    "tx15_heaps_vocab_growth",
+    "tx16_trigram_nb_langid",
+    "mm06_payload_dedup_audit",
+    "fz01_fuzzy_name_pairs",
+    "inc03_incremental_rollup_maintenance",
+    "ts02_cusum_level_shift",
+    "cur02_embedding_curation_funnel",
+    "fs01_fellegi_sunter_scores",
+    "dp01_contribution_bounding",
+    "fd01_functional_dependencies",
+    "rk01_rank_agreement",
+    "imb01_label_imbalance",
+    # round 8
+    "win05_activity_streaks",
+    "win06_daily_ohlc",
+    "rs01_mad_outliers",
+    "cr01_value_time_correlation",
+    "ts01_seasonal_naive_error",
+    "hq02_mergeable_histogram",
+    "sync01_bucket_checksum_diff",
+    "tx17_bigram_continuations",
+    "gr03_cc_star_contraction",
+    "hll03_hll_mergeability",
+    "bj01_bucketed_colocated_join",
+    "mw01_mann_whitney_drift",
+    "tx18_flesch_readability",
+    "tx19_lexical_richness",
+    "qf03_c4_heuristic_filters",
+    "ret01_weekly_cohort_retention",
+    "zo01_zorder_locality",
+    "ln01_neardup_source_conflict",
+    "ts03_revenue_autocorrelation",
+    "dd16_winnowing_fingerprints",
+    "mm07_magic_byte_sniffing",
+    "st15_scd_asof_enrich",
+    "mi01_label_source_mutual_information",
+    "ab01_proportion_drift",
+    "en01_char_entropy",
+    "tx20_stupid_backoff_scoring",
+    "ev01_ann_ranking_quality",
+    "ss06_kfold_assignment_audit",
+    # round 14
+    "pv03_dynamic_lang_pivot",
+    "fi01_heavy_hitter_tokens",
 )
-def sf_dir(request):
-    if not os.path.isdir(request.param):
-        pytest.skip("driver testdata not present")
-    return request.param
-
-
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    duckdb = pytest.importorskip("duckdb")
-    from local_etl_csv_to_postgresql_spark.plans.analytics import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    yield con
-    con.close()
-
-
-def test_every_staged_query_has_oracle():
-    assert set(ROUND7_STAGED_QUERIES) == set(ROUND7_STAGED_ORACLE)
 
 
 def test_promoted_queries_were_sf01_swept():
-    """Promotion precondition (r7 verdict task 3, the dd14 lesson made
-    structural): every query promoted into the live registry this round
-    AND every still-staged query must have a recorded sf0.1 wall in
-    scripts/staged_sf01_walls.json (written by scripts/staged_sweep.py).
-    A staged query with sf0.001/sf0.01 certification but no measured
-    sf0.1 wall is exactly how dd14 shipped a 396.7 s interpreted-lambda
-    plan — this test makes that promotion path impossible."""
-    import json
-
-    from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-        ROUND8_PROMOTED,
-        ROUND9_PROMOTED,
-        ROUND10_PROMOTED,
-        ROUND11_PROMOTED,
-        ROUND12_PROMOTED,
-        ROUND13_PROMOTED,
-    )
-
+    """Every query with a recorded sf0.1 wall stays registered, and the
+    wall stays under 60 s. A query with sf0.001/sf0.01 certification
+    but no measured sf0.1 wall is exactly how dd14 shipped a 396.7 s
+    interpreted-lambda plan."""
     path = os.path.join(
         os.path.dirname(__file__), "..", "scripts", "staged_sf01_walls.json"
     )
     with open(path) as fh:
         walls = json.load(fh)
-    required = (
-        set(ROUND7_STAGED_QUERIES)
-        | set(ROUND8_PROMOTED)
-        | set(ROUND9_PROMOTED)
-        | set(ROUND10_PROMOTED)
-        | set(ROUND11_PROMOTED)
-        | set(ROUND12_PROMOTED)
-        | set(ROUND13_PROMOTED)
-    )
-    missing = required - set(walls)
-    assert missing == set(), (
-        f"no recorded sf0.1 wall for: {sorted(missing)} — run "
-        "scripts/staged_sweep.py before promoting"
-    )
-    for name in required:
-        assert walls[name]["sec"] < 60.0, (
-            f"{name}: recorded sf0.1 wall {walls[name]['sec']} s is a "
-            "dd14-class escape; fix the plan before promoting"
+    unregistered = set(walls) - set(QUERIES)
+    assert unregistered == set(), f"walls for unknown names: {unregistered}"
+    for name, rec in walls.items():
+        assert rec["sec"] < 60.0, (
+            f"{name}: recorded sf0.1 wall {rec['sec']} s is a "
+            "dd14-class escape; fix the plan"
         )
-
-
-def test_staged_names_not_yet_registered():
-    """A staged query must NOT appear in queries() yet: an unregistered
-    name can never violate the never-certified-in-window invariant, and
-    a registered one must graduate OUT of the staged dict."""
-    import __spark_entry__ as ep
-
-    overlap = set(ROUND7_STAGED_QUERIES) & set(ep.queries())
-    assert overlap == set(), f"graduated queries still staged: {overlap}"
-
-
-@pytest.mark.integration
-@pytest.mark.parametrize("name", list(ROUND7_STAGED_QUERIES))
-def test_staged_query_matches_oracle(spark, duck, sf_dir, name):
-    sdf = QUERIES[name](spark, sf_dir).toPandas()
-    odf = duck.execute(ROUND7_STAGED_ORACLE[name]).fetchdf()
-    problems = compare(name, sdf, odf)
-    assert not problems, f"{name}: " + "; ".join(problems)
 
 
 @pytest.mark.oracle
 @pytest.mark.integration
-@pytest.mark.parametrize("name", ROUND7_PROMOTED + ROUND8_PROMOTED)
+@pytest.mark.parametrize("name", DRIVER_SCALE_NAMES)
 def test_promoted_query_matches_oracle_at_driver_scale(spark, name):
-    """The round-7/8 promotions left the staged harness (which certified
-    them at BOTH sf0.001 and sf0.01); test_oracle_gate covers the live
-    registry at sf0.001 only. This keeps the sf0.01 (driver-gate scale)
-    certification pinned locally until the driver's own rows land."""
-    from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-        EXTENSION_ORACLE,
-    )
     from local_etl_csv_to_postgresql_spark.plans.analytics import TABLES
 
     if not os.path.isdir(DRIVER_SF):
@@ -153,7 +154,7 @@ def test_promoted_query_matches_oracle_at_driver_scale(spark, name):
                 f"CREATE VIEW {t} AS SELECT * FROM '{DRIVER_SF}/{t}.parquet'"
             )
         sdf = QUERIES[name](spark, DRIVER_SF).toPandas()
-        odf = con.execute(EXTENSION_ORACLE[name]).fetchdf()
+        odf = con.execute(ORACLES[name]).fetchdf()
     finally:
         con.close()
     problems = compare(name, sdf, odf)

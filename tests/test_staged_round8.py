@@ -1,11 +1,6 @@
-"""Round-8 staged surface invariants: operators implemented during
-round 7 and registered into ``ROUND7_STAGED_QUERIES`` AFTER the
-round-7 promotion block, awaiting the round-8 certification window.
-
-Oracle certification at sf0.001 AND sf0.01 rides the shared
-parametrized harness in tests/test_staged_round7.py (which sweeps the
-staged dict); this file pins the semantic invariants the hash compare
-alone can't express."""
+"""Round-8 query invariants: semantic properties the hash compare
+alone can't express. Oracle certification runs in
+tests/test_oracle_gate.py with every other queries() entry."""
 
 from __future__ import annotations
 
@@ -13,15 +8,9 @@ import os
 
 import pytest
 
-from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-    EXTENSION_QUERIES,
-    ROUND7_STAGED_QUERIES,
-)
+import __spark_entry__ as ep
 
-# Promoted queries move to EXTENSION_QUERIES at round boundaries
-# (ROUND8_PROMOTED); the ones still staged stay in ROUND7_STAGED_QUERIES
-# — the invariant tests below look up in either.
-QUERIES = {**EXTENSION_QUERIES, **ROUND7_STAGED_QUERIES}
+QUERIES = ep.queries()
 
 SF = "/root/testdata/sf0.001"
 

@@ -9,12 +9,9 @@ from __future__ import annotations
 import __spark_entry__ as ep
 
 
-def order(live, oracles, green, failed, promo=()):
+def order(live, oracles, green, failed):
     return ep._window_order(
-        list(live),
-        set(oracles),
-        history=(dict(green), dict(failed)),
-        promotion_order=list(promo),
+        list(live), set(oracles), history=(dict(green), dict(failed))
     )
 
 
@@ -24,7 +21,6 @@ def test_failed_outranks_everything():
         oracles={"a", "b", "c", "d"},
         green={"a": 3, "b": 1, "d": 2},
         failed={"a": 4},  # a failed AFTER its last green -> bucket 1
-        promo=["c"],
     )
     assert got[0] == "a"
     assert got[1] == "c"  # never-certified next
@@ -43,15 +39,14 @@ def test_failure_cleared_by_later_green():
     assert got == ["b", "a"]
 
 
-def test_promotion_order_respected_then_name_fallback():
+def test_never_certified_names_come_in_name_order():
     got = order(
-        live=["w", "x", "y", "z"],
+        live=["y", "w", "z", "x"],  # registry order is not name order
         oracles={"w", "x", "y", "z"},
         green={},
         failed={},
-        promo=["y", "w"],  # z and x unlisted -> name order after
     )
-    assert got == ["y", "w", "x", "z"]
+    assert got == ["w", "x", "y", "z"]
 
 
 def test_refresh_is_oldest_first_name_asc_within_round():
