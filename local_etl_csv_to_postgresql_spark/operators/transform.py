@@ -28,7 +28,7 @@ from .standardize import (
     standardize_merchant,
     standardize_payment_method,
 )
-from .validate import ValidationResult, validate_transactions
+from .validate import ValidationError, ValidationResult, validate_transactions
 
 
 class TransformError(Exception):
@@ -75,7 +75,8 @@ def transform_transactions(
 
     Raises TransformError on None/empty input (reference :540-551) and
     validate.ValidationError when every row fails validation
-    (reference :582-585).
+    (reference :582-585); that error carries the raw row count as
+    ``input_rows``.
     """
     if df is None:
         raise TransformError("Input DataFrame is None")
@@ -90,7 +91,11 @@ def transform_transactions(
     df = df.observe(obs, F.count(F.lit(1)).alias("n"))
 
     cleaned = clean_transactions(df)
-    result: ValidationResult = validate_transactions(cleaned, cfg)
+    try:
+        result: ValidationResult = validate_transactions(cleaned, cfg)
+    except ValidationError as e:
+        e.input_rows = int(obs.get["n"])
+        raise
     input_rows = int(obs.get["n"])
     if input_rows == 0:
         result.flagged.unpersist()

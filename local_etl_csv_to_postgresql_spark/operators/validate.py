@@ -31,7 +31,8 @@ from ..config import ValidationConfig
 
 
 class ValidationError(Exception):
-    pass
+    #: raw rows before dedup; ``transform_transactions`` sets it
+    input_rows: int = 0
 
 
 @dataclass

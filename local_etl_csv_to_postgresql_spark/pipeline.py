@@ -82,21 +82,23 @@ def run_etl_pipeline(
         t = time.time()
         try:
             raw = extract_any(spark, file_path, fmt=source_format)
-            res.extracted_rows = raw.count()
         except ExtractError as e:
             raise PipelineExtractError(str(e)) from e
         res.phase_times["extract"] = time.time() - t
-        logger.info(
-            "extract done: %d rows from %s in %.2fs",
-            res.extracted_rows, file_path, res.phase_times["extract"],
-        )
 
-        # PHASE 2 — transform
+        # PHASE 2 — transform; its first job counts the raw rows, so
+        # the extract count comes from there instead of a second scan
         t = time.time()
         try:
             tr = transform_transactions(raw, cfg.validation)
         except (TransformError, ValidationError) as e:
+            res.extracted_rows = getattr(e, "input_rows", 0)
             raise PipelineTransformError(str(e)) from e
+        res.extracted_rows = tr.input_rows
+        logger.info(
+            "extract done: %d rows from %s in %.2fs",
+            res.extracted_rows, file_path, res.phase_times["extract"],
+        )
         res.transformed_rows = tr.valid_rows
         res.issue_counts = tr.issue_counts
         res.phase_times["transform"] = time.time() - t

@@ -9,6 +9,7 @@ CLI, driver harness) gets the same cluster-ready defaults:
   overridden to ~2-3x total executor cores (AQE coalesces the excess).
 - UTC session timezone so results hash-match the DuckDB oracle.
 - Arrow enabled for the Pandas-UDF slow paths (fuzzy dedup, multimodal).
+- A codegen class cache sized for a whole session (``CODEGEN_CACHE_ENTRIES``).
 """
 
 from __future__ import annotations
@@ -16,6 +17,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: Generated classes whole-stage codegen keeps for reuse (Spark's default
+#: is 100). One ETL pass — three loads plus the 20-query corpus —
+#: compiles about 470 classes, so at 100 entries each pass evicts the
+#: previous one's classes and compiles them all again; with room for a
+#: session's plan shapes a repeated plan compiles once. A static
+#: setting: it applies only to a session this function creates.
+CODEGEN_CACHE_ENTRIES = 4000
 
 
 def get_spark(
@@ -39,6 +48,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # whole-stage codegen JIT-compiles one+ generated class per plan
         # stage; a 100-query library session overflows the JVM's default

@@ -11,10 +11,11 @@ transform → anti-join-append protocol per micro-batch (SURVEY §2.10).
 Scale notes: the file source lists the landing dir incrementally and
 checkpoints processed files, so a 1000-executor cluster picks up only
 new CSVs per trigger; ``maxFilesPerTrigger`` bounds micro-batch size so
-a backlog flush doesn't produce one giant batch. The anti-join against
-the fact table is the per-batch cost — at 100 TB fact scale that join
-should prune on the fact table's date partitions (new data is recent),
-which ``Warehouse.load_fact`` gets from the date-partitioned layout.
+a backlog flush doesn't produce one giant batch. The probe of the fact
+table's stored ids is the per-batch cost — at 100 TB fact scale that
+existence join should prune on the fact table's date partitions (new
+data is recent), which ``Warehouse.enrich_fact`` gets from the
+date-partitioned layout.
 """
 
 from __future__ import annotations

@@ -756,8 +756,8 @@ def replay_foreachbatch_upsert(
     That batching-independence is the property that makes the result
     certifiable (the DuckDB twin is a plain aggregate of the input).
 
-    Scale: the per-batch anti-join is the same plan Warehouse.load_fact
-    runs — at 100 TB it prunes on the target's date partitions (new
+    Scale: the per-batch anti-join probes the target the way
+    Warehouse.enrich_fact's existence join does — at 100 TB it prunes on the target's date partitions (new
     data is recent); in-batch state is one micro-batch, sink state is
     the table itself, nothing lives on the driver."""
     import os

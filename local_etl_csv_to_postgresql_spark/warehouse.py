@@ -5,15 +5,20 @@ Reference parity (SURVEY §2.1/§2.5, src/load.py):
 - S9    dimension key maps                                       :311-420
 - J1    fact key enrichment with unmatched-key errors            :427-527
 - J2    date-key existence check                                 :497-508
-- S7/J3 fact anti-join append with inserted/skipped counts       :585-696
+- S7/J3 fact idempotent append with inserted/skipped counts      :585-696
 - load stats contract                                            :729-740
 
 Spark-first design:
 - Tables are parquet directories under ``WarehouseConfig.path``; the
   fact table is partitioned by ``year_month`` so date-range predicates
-  prune files (replaces the reference's B-tree date indexes).
-- "ON CONFLICT DO NOTHING" becomes a ``left_anti`` join against the
-  current table followed by an append — the idempotent-append protocol.
+  prune files (replaces the reference's B-tree date indexes). Reads use
+  the declared schemas (``schemas.py``), so opening a table starts no
+  footer-inference job; ``verify_schema`` alone infers, to check them.
+- "ON CONFLICT DO NOTHING" becomes the idempotent-append protocol: a
+  dimension appends its ``left_anti`` join against the stored natural
+  keys; a fact batch carries an ``EXISTS`` flag against the stored
+  ``transaction_id``s from enrichment on, so its counts come from the
+  enrichment check and the append writes only the unflagged rows.
 - Key enrichment joins fact→dims on natural keys with ``broadcast()``
   hints: dims are orders of magnitude smaller than the fact, so all four
   joins are shuffle-free map-side hash joins (the Spark analogue of the
@@ -21,9 +26,10 @@ Spark-first design:
   LESSONS_LEARNED.md:28-31).
 - Atomicity (reference wraps the whole load in one transaction,
   src/load.py:778/872): parquet appends are not transactional across
-  tables; we stage new files per table and only "publish" after all
-  tables succeed (write to _staging, then move). Per SURVEY §7.4-5 this
-  is commit-marker emulation, documented rather than hidden.
+  tables. A load that stops midway leaves its appended rows behind and
+  a rerun converges, because every append is idempotent; each finished
+  load records its file set in a snapshot manifest. Per SURVEY §7.4-5
+  this is commit-marker emulation, documented rather than hidden.
 - JDBC mode: when ``jdbc_url`` is set, the same frames are written via
   ``df.write.jdbc`` (batchsize=1000 like the reference) for true
   PostgreSQL parity.
@@ -39,7 +45,12 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .config import WarehouseConfig
-from .schemas import DIMENSIONS, NATURAL_KEYS, SURROGATE_KEYS
+from .schemas import (
+    DIMENSIONS,
+    FACT_TRANSACTIONS_SCHEMA,
+    NATURAL_KEYS,
+    SURROGATE_KEYS,
+)
 
 
 class LoadError(Exception):
@@ -75,9 +86,17 @@ class Warehouse:
         )
 
     def read(self, table: str) -> DataFrame:
+        """``table`` with its declared schema: no job reads parquet
+        footers to infer one, and the fact's ``year_month`` directories
+        are still discovered as its partition column."""
         if not self.exists(table):
             raise LoadError(f"Table does not exist: {table}")
-        return self.spark.read.parquet(self._path(table))
+        schema = (
+            FACT_TRANSACTIONS_SCHEMA
+            if table == self.cfg.fact_table
+            else DIMENSIONS[table]
+        )
+        return self.spark.read.schema(schema).parquet(self._path(table))
 
     def drop_all(self) -> None:
         if os.path.isdir(self.cfg.path):
@@ -148,14 +167,17 @@ class Warehouse:
 
     # -- key maps + fact enrichment (S9 + J1/J2) ---------------------------
 
-    def enrich_fact(self, fact_df: DataFrame) -> tuple[DataFrame, int]:
+    def enrich_fact(self, fact_df: DataFrame) -> tuple[DataFrame, int, int]:
         """J1: replace natural keys with surrogate keys via 4 broadcast
-        joins + J2 date-key existence check. Returns the persisted
-        enriched batch and its row count; the caller unpersists it.
+        joins + J2 date-key existence check, and flag each row whose
+        ``transaction_id`` the fact table already holds (``__seen``).
+        Returns the persisted enriched batch, its row count and its
+        flagged count; the caller unpersists the batch.
 
         Unmatched keys raise (reference src/load.py:461-466 errors on any
         unmapped value) — detected with left joins + ONE aggregation
-        instead of per-row dict probes.
+        instead of per-row dict probes; the same aggregation counts the
+        flagged rows.
         """
         dims = {
             "dim_category": ("category", "category_name", "category_key"),
@@ -174,64 +196,83 @@ class Warehouse:
         dim_date_keys = self.read("dim_date").select("date_key").withColumn(
             "__date_ok", F.lit(True)
         )
-        out = out.join(F.broadcast(dim_date_keys), "date_key", "left")
+        out = out.join(F.broadcast(dim_date_keys), "date_key", "left").alias(
+            "__batch"
+        )
+        # EXISTS plans as an existence join: one flag per batch row,
+        # however many stored rows share its id. The outer column is
+        # qualified: an unqualified one resolves to the stored side's
+        # own transaction_id and turns the test into "table not empty".
+        seen = F.lit(False)
+        if self.exists(self.cfg.fact_table):
+            stored = self.read(self.cfg.fact_table).select(
+                F.col("transaction_id").alias("__stored_id")
+            )
+            seen = stored.where(
+                F.col("__stored_id") == F.col("__batch.transaction_id").outer()
+            ).exists()
         # an unknown date leaves date_key null, like the other keys; the
-        # batch backs three actions (this miss-check, the anti-join
-        # count, the fact write), so the 5-join plan runs once
+        # batch backs two actions (this miss-check, the fact write), so
+        # the 5-join plan and the existence probe run once
         keys = ["date_key", "category_key", "merchant_key", "payment_method_key", "user_key"]
         out = out.select(
             "transaction_id",
             F.when(F.col("__date_ok"), F.col("date_key")).alias("date_key"),
             *keys[1:],
             "amount",
+            seen.alias("__seen"),
         ).persist()
 
         missing = out.agg(
             *[F.sum(F.col(k).isNull().cast("long")).alias(k) for k in keys],
             F.count(F.lit(1)).alias("__total"),
+            F.count_if(F.col("__seen")).alias("__seen"),
         ).first().asDict()
-        total = missing.pop("__total")
+        total, n_seen = missing.pop("__total"), missing.pop("__seen")
         problems = {k: v for k, v in missing.items() if v}
         if problems:
             out.unpersist()
             raise LoadError(f"Unmapped dimension keys in fact batch: {problems}")
-        return out, total
+        return out, total, n_seen
 
     # -- fact idempotent append (S7/J3) ------------------------------------
 
-    def load_fact(self, enriched: DataFrame, total: int) -> tuple[int, int]:
-        """S7: anti-join on transaction_id then append; returns
-        (inserted, skipped) like the reference (src/load.py:585-696).
-        ``total`` is the batch's row count from ``enrich_fact``.
+    def load_fact(
+        self, enriched: DataFrame, total: int, seen: int
+    ) -> tuple[int, int]:
+        """S7: append the rows ``enrich_fact`` did not flag as stored;
+        returns (inserted, skipped) like the reference
+        (src/load.py:585-696). ``total`` and ``seen`` are the batch's row
+        and flagged counts from ``enrich_fact``, so no job recounts.
 
-        Scale note: the anti-join shuffles on transaction_id only when the
-        existing side is large; Catalyst/AQE broadcasts the smaller side.
-        At 100 TB the existing-key probe should be narrowed first — we
-        read only the transaction_id column (column pruning) and, since
-        the fact table is month-partitioned, partition-prune via the
-        batch's date_key range.
+        Scale note: the stored-id probe in ``enrich_fact`` reads only the
+        transaction_id column (column pruning) and is a broadcast
+        existence join while the stored ids are small; past that it
+        shuffles on transaction_id. At 100 TB it should be narrowed
+        first: the fact table is month-partitioned, so the probe can be
+        partition-pruned to the batch's date_key range.
         """
-        table = self.cfg.fact_table
-        if not self.exists(table):
-            self._write_fact(enriched)
-            return total, 0
-        existing_ids = self.read(table).select("transaction_id")
-        new_rows = enriched.join(existing_ids, "transaction_id", "left_anti")
-        inserted = new_rows.count()
+        inserted = total - seen
         if inserted:
-            self._write_fact(new_rows, mode="append")
-        return inserted, total - inserted
+            mode = "append" if self.exists(self.cfg.fact_table) else "overwrite"
+            self._write_fact(
+                enriched.filter(~F.col("__seen")).drop("__seen"), mode=mode
+            )
+        return inserted, seen
 
     # -- writers -----------------------------------------------------------
 
     def _write_fact(self, df: DataFrame, mode: str = "overwrite") -> None:
         # repartitioning on the partition column yields one file per
         # month per batch; without it every shuffle task writes a sliver
-        # into every month dir (776 files for a 3k-row load). At cluster
-        # scale use repartition(N, col) to balance file sizes instead.
+        # into every month dir (776 files for a 3k-row load). The fixed
+        # partition count keeps AQE from coalescing the shuffle into one
+        # task that writes every month alone: months spread over the
+        # session's shuffle partitions and write in parallel.
+        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         (
             df.withColumn("year_month", (F.col("date_key") / 100).cast("int"))
-            .repartition(F.col("year_month"))
+            .repartition(n, F.col("year_month"))
             .write.mode(mode)
             .partitionBy("year_month")
             .parquet(self._path(self.cfg.fact_table))
@@ -448,9 +489,11 @@ class Warehouse:
             futures = {t: pool.submit(fn) for t, fn in dim_jobs.items()}
             for t, fut in futures.items():
                 stats.dims_inserted[t] = fut.result()
-        enriched, total = self.enrich_fact(tables["fact_data"])
+        enriched, total, seen = self.enrich_fact(tables["fact_data"])
         try:
-            stats.fact_inserted, stats.fact_skipped = self.load_fact(enriched, total)
+            stats.fact_inserted, stats.fact_skipped = self.load_fact(
+                enriched, total, seen
+            )
         finally:
             enriched.unpersist()
         stats.snapshot_version = self.snapshot()
@@ -471,8 +514,6 @@ class Warehouse:
         are cheap aggregates; at cluster scale the fact FK scans are the
         only real work and each is a single anti-join.
         """
-        from .schemas import FACT_TRANSACTIONS_SCHEMA
-
         declared = dict(DIMENSIONS)
         declared[self.cfg.fact_table] = FACT_TRANSACTIONS_SCHEMA
         rows: list[tuple[str, str, str, str]] = []
@@ -482,11 +523,13 @@ class Warehouse:
                 rows.append(("exists", table, "fail", "table missing"))
                 continue
             rows.append(("exists", table, "pass", ""))
-            df = self.read(table)
-            rows.append(("row_count", table, "pass", str(df.count())))
+            rows.append(("row_count", table, "pass", str(self.read(table).count())))
 
+            # the files' own schema: ``read`` would hand back the
+            # declared one and the check would compare it with itself
+            stored = self.spark.read.parquet(self._path(table)).schema
             want = {(f.name, f.dataType.simpleString()) for f in schema.fields}
-            have = {(f.name, f.dataType.simpleString()) for f in df.schema.fields}
+            have = {(f.name, f.dataType.simpleString()) for f in stored.fields}
             extra = {n for n, _ in have - want}
             missing = {n for n, _ in want - have}
             # the fact's partition column is layout, not schema drift

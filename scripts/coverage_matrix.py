@@ -19,6 +19,7 @@ Run:  python scripts/coverage_matrix.py          # rewrite COVERAGE_MATRIX.md
 
 from __future__ import annotations
 
+import argparse
 import glob
 import json
 import os
@@ -255,8 +256,17 @@ def collect(record_files: list[str] | None = None) -> str:
     return "\n".join(lines)
 
 
-def main() -> int:
-    if "--check" in sys.argv[1:]:
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(
+        description="Regenerate COVERAGE_MATRIX.md, or check it is fresh."
+    )
+    ap.add_argument(
+        "--check",
+        action="store_true",
+        help="exit 1 if the committed matrix is stale; write nothing",
+    )
+    args = ap.parse_args(argv)
+    if args.check:
         try:
             with open(OUT_PATH) as fh:
                 current = fh.read()

@@ -121,6 +121,16 @@ def test_readme_counts():
     assert expected in readme, (
         f"README counts line out of date: expected {expected!r}"
     )
+    # the Correctness section's oracle coverage sentence, in its
+    # line-wrapped form
+    flat = " ".join(readme.split())
+    n_oracles = len(set(ep.oracle_sql()) & set(ep.queries()))
+    expected = (
+        f"a DuckDB twin for {n_oracles} of the {len(ep.queries())} live queries"
+    )
+    assert expected in flat, (
+        f"README oracle coverage out of date: expected {expected!r}"
+    )
 
 
 def test_coverage_matrix_fresh():
@@ -200,6 +210,23 @@ def test_coverage_matrix_stamp_pins_record_list():
     # a matrix with no stamp (pre-r11 format) parses to None, which
     # --check treats as stale
     assert cm.stamped_records("# Coverage matrix\n\nno stamp here\n") is None
+
+
+@pytest.mark.parametrize("argv", [["--chek"], ["--help"]])
+def test_coverage_matrix_bad_or_help_argument_writes_nothing(argv, capsys):
+    """Only a bare run regenerates: a typo exits non-zero and --help
+    exits after printing usage, both leaving the matrix byte-identical."""
+    import scripts.coverage_matrix as cm
+
+    with open(cm.OUT_PATH, "rb") as fh:
+        before = fh.read()
+    with pytest.raises(SystemExit) as exc:
+        cm.main(argv)
+    assert (exc.value.code != 0) == (argv == ["--chek"])
+    out = capsys.readouterr()
+    assert "--check" in out.out + out.err  # usage names the one flag
+    with open(cm.OUT_PATH, "rb") as fh:
+        assert fh.read() == before
 
 
 def test_coverage_matrix_check_reports_deleted_pinned_record(

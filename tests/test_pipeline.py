@@ -110,7 +110,7 @@ def test_pipeline_releases_cache_when_it_stops_early(
     assert res.status == "validated"
     assert cache_is_empty(spark)
 
-    def fail(self, enriched, total):
+    def fail(self, enriched, total, seen):
         raise LoadError("fact write refused")
 
     monkeypatch.setattr(Warehouse, "load_fact", fail)
@@ -132,6 +132,7 @@ def test_pipeline_fails_when_every_row_is_invalid(spark, tmp_path):
     res = run_etl_pipeline(spark, str(p), cfg)
     assert res.status == "failed"
     assert "All rows failed validation" in res.error
+    assert res.extracted_rows == 2  # counted before validation refused
     assert cache_is_empty(spark)
 
 

@@ -240,7 +240,7 @@ def test_warehouse_enrichment_broadcasts_dims(spark, tmp_path):
     result = transform_transactions(raw, cfg.validation)
     wh = Warehouse(spark, cfg.warehouse)
     wh.load_warehouse(result.tables)
-    enriched, _ = wh.enrich_fact(result.tables["fact_data"])
+    enriched, _, _ = wh.enrich_fact(result.tables["fact_data"])
     plan = plan_of(enriched)
     enriched.unpersist()
     result.release()

@@ -58,6 +58,16 @@ def test_all_corpus_queries_execute(spark, loaded_warehouse):
         # except duplicates (Q3) and anomalies (Q19), which may be empty
         if i not in (3, 19):
             assert total > 0, f"query {i} ({q.description}) returned no rows"
+    # the session's codegen cache holds every class a pass generates,
+    # so running the corpus again compiles no new class
+    compiled = (
+        spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    before = compiled.getCount()
+    for q in queries:
+        run_query(spark, q)
+    assert compiled.getCount() - before == 0
 
 
 def test_record_counts_match_tables(spark, loaded_warehouse):

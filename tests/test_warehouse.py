@@ -162,6 +162,56 @@ def test_verify_schema_report(spark, tmp_path):
     assert ("foreign_key", "fact_transactions->dim_user") in report
 
 
+def test_verify_schema_reads_the_stored_columns(spark, wh):
+    """The columns check compares the declared schema with the files'
+    own: a dimension stored with a retyped or a missing column fails it,
+    though ``Warehouse.read`` would hand back the declared schema."""
+    spark.createDataFrame(
+        [(1, "Store A")], "merchant_key int, merchant_name string"
+    ).write.parquet(wh._path("dim_merchant"))
+    spark.createDataFrame([(1,)], "user_id int").write.parquet(
+        wh._path("dim_user")
+    )
+    report = {(r["check_type"], r["table_name"]): r
+              for r in wh.verify_schema().collect()}
+    assert report[("columns", "dim_merchant")]["status"] == "fail"
+    assert report[("columns", "dim_user")]["status"] == "fail"
+    assert "user_key" in report[("columns", "dim_user")]["detail"]
+    assert report[("exists", "dim_category")]["status"] == "fail"
+
+
+def test_read_starts_no_job(spark, wh, valid_rows):
+    """Opening a stored table reads no parquet footers: the declared
+    schema stands in for inference, and the fact's partition column is
+    still discovered from its directories."""
+    _load(spark, wh, valid_rows)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    fact = wh.read("fact_transactions")
+    dim = wh.read("dim_category")
+    assert dag.nextJobId() - before == 0
+    assert fact.schema == spark.read.parquet(wh._path("fact_transactions")).schema
+    assert dim.schema == spark.read.parquet(wh._path("dim_category")).schema
+
+
+def test_stored_duplicate_id_is_skipped_once(spark, wh, valid_rows):
+    """Each batch row is inserted or skipped exactly once, even when the
+    fact table already holds one transaction_id twice: the stored-id
+    flag is an existence test, not a join that repeats batch rows."""
+    import glob
+    import shutil
+
+    _load(spark, wh, valid_rows[:1])
+    part = glob.glob(f"{wh._path('fact_transactions')}/year_month=*/*.parquet")[0]
+    shutil.copy(part, part.replace("part-", "part-copy-"))
+    assert wh.read("fact_transactions").count() == 2  # t1 stored twice
+
+    stats = _load(spark, wh, valid_rows)
+    assert (stats.fact_inserted, stats.fact_skipped) == (2, 1)
+    ids = [r["transaction_id"] for r in wh.read("fact_transactions").collect()]
+    assert sorted(ids) == ["t1", "t1", "t2", "t3"]
+
+
 def test_compact_fact_merges_per_batch_files(spark, tmp_path):
     """Three incremental loads leave >=3 files in a touched month
     partition; compaction rewrites to one file per partition while
