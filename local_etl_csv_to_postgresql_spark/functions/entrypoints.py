@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..frames import local_frame, read_parquet
 from ..plans.analytics import dec, load
 from . import dedup as dd
 from . import similarity as sim
@@ -261,7 +262,7 @@ def _lsh_base(spark: SparkSession, sf: str):
         pairs.write.mode("overwrite").parquet(paths[2])
         docs.unpersist()
         _LSH_BASE_CACHE[sf] = paths
-    return tuple(spark.read.parquet(p) for p in paths)
+    return tuple(read_parquet(spark, p) for p in paths)
 
 
 def dd03_minhash_lsh_pairs(spark: SparkSession, sf: str) -> DataFrame:
@@ -426,7 +427,7 @@ def _neardup_components(spark: SparkSession, sf: str) -> DataFrame:
         )
         comp.write.mode("overwrite").parquet(path)
         _NEARDUP_COMPONENTS_CACHE[sf] = path
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def dd06_neardup_clusters(spark: SparkSession, sf: str) -> DataFrame:
@@ -3149,7 +3150,9 @@ def pk02_packing_export(spark: SparkSession, sf: str) -> DataFrame:
         .partitionBy("lang", "shard_id")
         .parquet(out_dir)
     )
-    back = spark.read.parquet(out_dir)
+    # read back with the written frame's schema: an empty export holds
+    # no file to infer one from, and inference would cost a job
+    back = spark.read.schema(binned.schema).parquet(out_dir)
     return (
         back.groupBy("lang", "shard_id")
         .agg(
@@ -5713,6 +5716,216 @@ EXTENSION_QUERIES["es11_ann_recall"] = es11_ann_recall
 PQ_M, PQ_D, PQ_K = 2, 64, 16
 
 
+def _pq_kernel(codebooks: dict, extra_err: bool):
+    """The ``mapInArrow`` function of ``_pq_assigned``: each
+    (vec_id, label, __m, __sv) subvector gets the argmax-cosine
+    codeword of subspace ``__m`` under ``codebooks`` ((m, cid) ->
+    vector), plus its squared reconstruction error when
+    ``extra_err``."""
+    # r14: same certified argmax rule (argmax cosine, strict > over
+    # cid-ascending candidates, NULL sims lose, ties keep the low
+    # cid) as the r13 broadcast-array fold, executed as a mapInArrow
+    # kernel — the similarity._assign_via_arrow strategy applied
+    # per subspace. The codebooks are ALREADY driver-side (`state`,
+    # the bounded M·K·d metadata this trainer round-trips every
+    # refinement), so no collect is added; dot, norm², and the
+    # reconstruction error all accumulate PER DIMENSION from 0.0,
+    # reproducing the folds' ((0.0 + p0) + p1) + ... IEEE sequence
+    # bit-for-bit (the raw error is emitted and rounded JVM-side,
+    # so the 6-dp certified value is byte-identical). Subvectors
+    # are rectangular finite slices by construction; irregular
+    # rows would make every candidate sim NULL in the fold, so
+    # they take the lowest cid with a NULL-poisoned error — the
+    # kernel reproduces that exactly.
+    import numpy as np
+
+    per_m: dict[int, list] = {}
+    for (m, cid), vec in sorted(codebooks.items()):
+        per_m.setdefault(int(m), []).append(
+            (int(cid), [float(x) for x in vec])
+        )
+    mats = {}
+    for m, lst in per_m.items():
+        cids_m = np.array([c for c, _ in lst], dtype=np.int64)
+        cmat = np.array([v for _, v in lst], dtype=np.float64)
+        if not np.isfinite(cmat).all():
+            raise ValueError("PQ codebook contains non-finite values")
+        cn = np.zeros(len(lst), dtype=np.float64)
+        for i in range(cmat.shape[1]):
+            x = cmat[:, i]
+            cn += x * x
+        mats[m] = (cids_m, cmat, np.sqrt(cn))
+
+    def _kernel(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            ms = batch.column(2).to_numpy(zero_copy_only=False)
+            sv = batch.column(3)
+            lengths = pc.list_value_length(sv)
+            flat = sv.flatten()
+            vmat = None
+            uniq_lens = set(lengths.to_pylist())
+            if (
+                sv.null_count == 0
+                and flat.null_count == 0
+                and len(uniq_lens) == 1
+                and next(iter(uniq_lens)) > 0
+            ):
+                vmat = (
+                    flat.to_numpy(zero_copy_only=False)
+                    .astype(np.float64, copy=False)
+                    .reshape(n, -1)
+                )
+                if not np.isfinite(vmat).all():
+                    raise ValueError(
+                        "PQ subvector contains non-finite values"
+                    )
+            sv_rows = None  # per-row values, built on first use
+            out_cid = np.zeros(n, dtype=np.int64)
+            keep = np.zeros(n, dtype=bool)
+            out_err = np.full(n, np.nan) if extra_err else None
+            for m, (cids_m, cmat, cn) in mats.items():
+                rows = np.nonzero(ms == m)[0]
+                if len(rows) == 0:
+                    continue
+                keep[rows] = True
+                k, d = cmat.shape
+                if vmat is not None and vmat.shape[1] == d:
+                    vsub = vmat[rows]
+                    vn = np.zeros(len(rows), dtype=np.float64)
+                    for i in range(d):
+                        x = vsub[:, i]
+                        vn += x * x
+                    vn = np.sqrt(vn)
+                    dots = np.zeros((len(rows), k), dtype=np.float64)
+                    for i in range(d):
+                        dots += np.multiply.outer(
+                            vsub[:, i], cmat[:, i]
+                        )
+                    den = np.multiply.outer(vn, cn)
+                    valid = den != 0.0
+                    with np.errstate(
+                        divide="ignore", invalid="ignore", over="ignore"
+                    ):
+                        sims = np.where(
+                            valid, dots / np.where(valid, den, 1.0), 0.0
+                        )
+                    if not np.isfinite(sims[valid]).all():
+                        raise ValueError(
+                            "PQ sims overflowed to non-finite"
+                        )
+                    best_j = np.zeros(len(rows), dtype=np.int64)
+                    best_s = np.full(len(rows), -np.inf)
+                    has = np.zeros(len(rows), dtype=bool)
+                    for j in range(k):
+                        s = sims[:, j]
+                        v = valid[:, j]
+                        take = v & (~has | (s > best_s))
+                        best_j[take] = j
+                        best_s[take] = s[take]
+                        has |= v
+                    out_cid[rows] = cids_m[best_j]
+                    if extra_err:
+                        errs = np.zeros(
+                            (len(rows), k), dtype=np.float64
+                        )
+                        for i in range(d):
+                            dlt = np.subtract.outer(
+                                vsub[:, i], cmat[:, i]
+                            )
+                            errs += dlt * dlt
+                        out_err[rows] = errs[
+                            np.arange(len(rows)), best_j
+                        ]
+                else:
+                    # irregular batch (NULL/ragged/empty slices):
+                    # exact per-row replica of the fold — a row
+                    # whose slice length != d (zip_with null
+                    # padding) or with NULL elements has every
+                    # candidate sim NULL, so the lowest cid wins
+                    # with a NULL-poisoned error; a regular row
+                    # scores normally.
+                    import math
+
+                    if sv_rows is None:
+                        sv_rows = sv.to_pylist()
+                    for r in rows:
+                        v = sv_rows[r]
+                        if (
+                            v is None
+                            or len(v) != d
+                            or any(e is None for e in v)
+                        ):
+                            out_cid[r] = cids_m[0]
+                            continue
+                        vn = 0.0
+                        for e in v:
+                            e = float(e)
+                            vn += e * e
+                        vn = math.sqrt(vn)
+                        bj, bs = None, None
+                        for j in range(k):
+                            dt = 0.0
+                            for i in range(d):
+                                dt += float(v[i]) * cmat[j, i]
+                            dn = vn * cn[j]
+                            if dn == 0.0:
+                                continue
+                            s = dt / dn
+                            if bs is None:
+                                bj, bs = j, s
+                            elif math.isnan(s):
+                                if not math.isnan(bs):
+                                    bj, bs = j, s
+                            elif (not math.isnan(bs)) and s > bs:
+                                bj, bs = j, s
+                        bj = 0 if bj is None else bj
+                        out_cid[r] = cids_m[bj]
+                        if extra_err:
+                            er = 0.0
+                            for i in range(d):
+                                dlt = float(v[i]) - cmat[bj, i]
+                                er += dlt * dlt
+                            out_err[r] = er
+            arrays = [
+                batch.column(0),
+                batch.column(1),
+                batch.column(2),
+                sv,
+                pa.array(
+                    [
+                        int(c) if k_ else None
+                        for c, k_ in zip(out_cid, keep)
+                    ],
+                    type=pa.int64(),
+                ),
+            ]
+            names = ["vec_id", "label", "__m", "__sv", "__cid"]
+            if extra_err:
+                arrays.append(
+                    pa.array(
+                        [
+                            float(e) if (k_ and not np.isnan(e)) else None
+                            for e, k_ in zip(out_err, keep)
+                        ],
+                        type=pa.float64(),
+                    )
+                )
+                names.append("__err")
+            keep_idx = np.nonzero(keep)[0]
+            rb = pa.record_batch(arrays, names=names)
+            if len(keep_idx) != n:
+                rb = rb.take(pa.array(keep_idx))
+            yield rb
+
+    return _kernel
+
+
 def _pq_assigned(
     spark: SparkSession, sf: str, extra_err: bool
 ) -> tuple[DataFrame, DataFrame]:
@@ -5784,211 +5997,12 @@ def _pq_assigned(
     }
 
     def assign(codebooks, extra_err: bool):
-        # r14: same certified argmax rule (argmax cosine, strict > over
-        # cid-ascending candidates, NULL sims lose, ties keep the low
-        # cid) as the r13 broadcast-array fold, executed as a mapInArrow
-        # kernel — the similarity._assign_via_arrow strategy applied
-        # per subspace. The codebooks are ALREADY driver-side (`state`,
-        # the bounded M·K·d metadata this trainer round-trips every
-        # refinement), so no collect is added; dot, norm², and the
-        # reconstruction error all accumulate PER DIMENSION from 0.0,
-        # reproducing the folds' ((0.0 + p0) + p1) + ... IEEE sequence
-        # bit-for-bit (the raw error is emitted and rounded JVM-side,
-        # so the 6-dp certified value is byte-identical). Subvectors
-        # are rectangular finite slices by construction; irregular
-        # rows would make every candidate sim NULL in the fold, so
-        # they take the lowest cid with a NULL-poisoned error — the
-        # kernel reproduces that exactly.
-        import numpy as np
-
-        per_m: dict[int, list] = {}
-        for (m, cid), vec in sorted(codebooks.items()):
-            per_m.setdefault(int(m), []).append(
-                (int(cid), [float(x) for x in vec])
-            )
-        mats = {}
-        for m, lst in per_m.items():
-            cids_m = np.array([c for c, _ in lst], dtype=np.int64)
-            cmat = np.array([v for _, v in lst], dtype=np.float64)
-            if not np.isfinite(cmat).all():
-                raise ValueError("PQ codebook contains non-finite values")
-            cn = np.zeros(len(lst), dtype=np.float64)
-            for i in range(cmat.shape[1]):
-                x = cmat[:, i]
-                cn += x * x
-            mats[m] = (cids_m, cmat, np.sqrt(cn))
-
         out_type = (
             "vec_id long, label int, __m int, __sv array<double>, "
             "__cid long"
         ) + (", __err double" if extra_err else "")
 
-        def _kernel(batches):
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            for batch in batches:
-                n = batch.num_rows
-                if n == 0:
-                    continue
-                ms = batch.column(2).to_numpy(zero_copy_only=False)
-                sv = batch.column(3)
-                lengths = pc.list_value_length(sv)
-                flat = sv.flatten()
-                vmat = None
-                uniq_lens = set(lengths.to_pylist())
-                if (
-                    sv.null_count == 0
-                    and flat.null_count == 0
-                    and len(uniq_lens) == 1
-                    and next(iter(uniq_lens)) > 0
-                ):
-                    vmat = (
-                        flat.to_numpy(zero_copy_only=False)
-                        .astype(np.float64, copy=False)
-                        .reshape(n, -1)
-                    )
-                    if not np.isfinite(vmat).all():
-                        raise ValueError(
-                            "PQ subvector contains non-finite values"
-                        )
-                sv_rows = None if vmat is not None else sv.to_pylist()
-                out_cid = np.zeros(n, dtype=np.int64)
-                keep = np.zeros(n, dtype=bool)
-                out_err = np.full(n, np.nan) if extra_err else None
-                for m, (cids_m, cmat, cn) in mats.items():
-                    rows = np.nonzero(ms == m)[0]
-                    if len(rows) == 0:
-                        continue
-                    keep[rows] = True
-                    k, d = cmat.shape
-                    if vmat is not None and vmat.shape[1] == d:
-                        vsub = vmat[rows]
-                        vn = np.zeros(len(rows), dtype=np.float64)
-                        for i in range(d):
-                            x = vsub[:, i]
-                            vn += x * x
-                        vn = np.sqrt(vn)
-                        dots = np.zeros((len(rows), k), dtype=np.float64)
-                        for i in range(d):
-                            dots += np.multiply.outer(
-                                vsub[:, i], cmat[:, i]
-                            )
-                        den = np.multiply.outer(vn, cn)
-                        valid = den != 0.0
-                        with np.errstate(
-                            divide="ignore", invalid="ignore", over="ignore"
-                        ):
-                            sims = np.where(
-                                valid, dots / np.where(valid, den, 1.0), 0.0
-                            )
-                        if not np.isfinite(sims[valid]).all():
-                            raise ValueError(
-                                "PQ sims overflowed to non-finite"
-                            )
-                        best_j = np.zeros(len(rows), dtype=np.int64)
-                        best_s = np.full(len(rows), -np.inf)
-                        has = np.zeros(len(rows), dtype=bool)
-                        for j in range(k):
-                            s = sims[:, j]
-                            v = valid[:, j]
-                            take = v & (~has | (s > best_s))
-                            best_j[take] = j
-                            best_s[take] = s[take]
-                            has |= v
-                        out_cid[rows] = cids_m[best_j]
-                        if extra_err:
-                            errs = np.zeros(
-                                (len(rows), k), dtype=np.float64
-                            )
-                            for i in range(d):
-                                dlt = np.subtract.outer(
-                                    vsub[:, i], cmat[:, i]
-                                )
-                                errs += dlt * dlt
-                            out_err[rows] = errs[
-                                np.arange(len(rows)), best_j
-                            ]
-                    else:
-                        # irregular batch (NULL/ragged/empty slices):
-                        # exact per-row replica of the fold — a row
-                        # whose slice length != d (zip_with null
-                        # padding) or with NULL elements has every
-                        # candidate sim NULL, so the lowest cid wins
-                        # with a NULL-poisoned error; a regular row
-                        # scores normally.
-                        import math
-
-                        for r in rows:
-                            v = sv_rows[r]
-                            if (
-                                v is None
-                                or len(v) != d
-                                or any(e is None for e in v)
-                            ):
-                                out_cid[r] = cids_m[0]
-                                continue
-                            vn = 0.0
-                            for e in v:
-                                e = float(e)
-                                vn += e * e
-                            vn = math.sqrt(vn)
-                            bj, bs = None, None
-                            for j in range(k):
-                                dt = 0.0
-                                for i in range(d):
-                                    dt += float(v[i]) * cmat[j, i]
-                                dn = vn * cn[j]
-                                if dn == 0.0:
-                                    continue
-                                s = dt / dn
-                                if bs is None:
-                                    bj, bs = j, s
-                                elif math.isnan(s):
-                                    if not math.isnan(bs):
-                                        bj, bs = j, s
-                                elif (not math.isnan(bs)) and s > bs:
-                                    bj, bs = j, s
-                            bj = 0 if bj is None else bj
-                            out_cid[r] = cids_m[bj]
-                            if extra_err:
-                                er = 0.0
-                                for i in range(d):
-                                    dlt = float(v[i]) - cmat[bj, i]
-                                    er += dlt * dlt
-                                out_err[r] = er
-                arrays = [
-                    batch.column(0),
-                    batch.column(1),
-                    batch.column(2),
-                    sv,
-                    pa.array(
-                        [
-                            int(c) if k_ else None
-                            for c, k_ in zip(out_cid, keep)
-                        ],
-                        type=pa.int64(),
-                    ),
-                ]
-                names = ["vec_id", "label", "__m", "__sv", "__cid"]
-                if extra_err:
-                    arrays.append(
-                        pa.array(
-                            [
-                                float(e) if (k_ and not np.isnan(e)) else None
-                                for e, k_ in zip(out_err, keep)
-                            ],
-                            type=pa.float64(),
-                        )
-                    )
-                    names.append("__err")
-                keep_idx = np.nonzero(keep)[0]
-                rb = pa.record_batch(arrays, names=names)
-                if len(keep_idx) != n:
-                    rb = rb.take(pa.array(keep_idx))
-                yield rb
-
-        out = sliced.mapInArrow(_kernel, out_type)
+        out = sliced.mapInArrow(_pq_kernel(codebooks, extra_err), out_type)
         if extra_err:
             out = out.withColumn("__err", F.round("__err", 6))
         return out
@@ -6030,8 +6044,8 @@ def _pq_assigned(
         for r in means.collect()
     }
     state = {key: new.get(key, vec) for key, vec in state.items()}
-    cents = spark.createDataFrame(
-        [(m, cid, v) for (m, cid), v in sorted(state.items())], schema
+    cents = local_frame(
+        spark, [(m, cid, v) for (m, cid), v in sorted(state.items())], schema
     )
     return assign(state, extra_err=extra_err), cents
 
@@ -20885,7 +20899,8 @@ def ap01_approx_quantile_calibration(spark: SparkSession, sf: str) -> DataFrame:
     # oracle's ROUND and the rounding discipline everywhere else) —
     # Python round() is round-half-even and can fork the hash on a
     # .00005 boundary
-    exact = spark.createDataFrame(
+    exact = local_frame(
+        spark,
         [
             (p, v)
             for p, v in exact_percentiles_cont(
@@ -21326,9 +21341,7 @@ def mix01_temperature_sweep(spark: SparkSession, sf: str) -> DataFrame:
     per = docs.groupBy("source").agg(
         F.sum(tx.token_count("text")).cast("bigint").alias("total_tokens")
     )
-    alphas = spark.createDataFrame(
-        [(a,) for a in MIX01_ALPHAS], "alpha double"
-    )
+    alphas = local_frame(spark, [(a,) for a in MIX01_ALPHAS], "alpha double")
     weighted = per.crossJoin(F.broadcast(alphas)).withColumn(
         "__pw", F.pow(F.col("total_tokens").cast("double"), F.col("alpha"))
     )
@@ -22482,7 +22495,8 @@ def ss09_kcenter_coreset(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("__md"),
         ).localCheckpoint()
         radii.append(state.agg(F.max("__md")).collect()[0][0])
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (rnd, int(cid), float(radius))
             for (rnd, cid), radius in zip(centers, radii)
@@ -22593,8 +22607,8 @@ def ij01_interval_attribution(spark: SparkSession, sf: str) -> DataFrame:
         F.col("o_orderdate").cast("date").alias("__s"),
         F.col("__ship_end").cast("date").alias("__e"),
     )
-    promos = spark.createDataFrame(
-        list(IJ01_PROMO_WINDOWS), "promo_id string, ps string, pe string"
+    promos = local_frame(
+        spark, IJ01_PROMO_WINDOWS, "promo_id string, ps string, pe string"
     ).select(
         "promo_id",
         F.col("ps").cast("date").alias("__ps"),
@@ -23139,9 +23153,7 @@ def rs02_theil_sen_trend(spark: SparkSession, sf: str) -> DataFrame:
         "slope",
         lambda n: sorted({(n + 1) // 2 - 1, (n + 2) // 2 - 1}),
     )
-    median_rows = spark.createDataFrame(
-        [(v,) for v in mids], "slope double"
-    ).select(
+    median_rows = local_frame(spark, [(v,) for v in mids], "slope double").select(
         # the deferred 10-dp round — same Spark Round on the same raw
         # double the grid used to round before ranking
         F.round("slope", RS02_SLOPE_ND).alias("slope")

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..frames import local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -655,7 +657,7 @@ def lloyd_centroids(
         .collect()
     ]
     for _ in range(n_iter):
-        cents = sess.createDataFrame(state, schema)
+        cents = local_frame(sess, state, schema)
         assigned = assign_to_centroids(ed, cents, id_col, "__v")
         means = (
             assigned.select("__cid", F.posexplode("__v").alias("__dim", "__x"))
@@ -684,7 +686,7 @@ def lloyd_centroids(
             int(r["__cid"]): list(r["__newvec"]) for r in means.collect()
         }
         state = [(cid, new.get(cid, vec)) for cid, vec in state]
-    return sess.createDataFrame(state, schema)
+    return local_frame(sess, state, schema)
 
 
 def lloyd_ivf_topk(

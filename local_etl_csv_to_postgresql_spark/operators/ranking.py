@@ -37,6 +37,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
+from ..frames import local_frame
+
 __all__ = ["attach_global_row_number", "exact_ntile"]
 
 _PID = "__rk_pid"
@@ -185,7 +187,7 @@ def attach_global_row_number(
             for i in range(len(rs_cols))
         ]
     )
-    offsets = spark.createDataFrame(rows, schema)
+    offsets = local_frame(spark, rows, schema)
 
     w = Window.partitionBy(_PID, *partition_by).orderBy(*order_exprs)
     # Null-safe join on the group keys: a plain equi-join would drop

@@ -47,6 +47,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..frames import read_parquet
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -54,6 +56,12 @@ TABLES = (
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table ``name`` of the scale-factor directory ``sf_dir``, opened
+    with the schema its parquet footer declares. The footer is read on
+    the driver (``frames.read_parquet``), so opening a table starts no
+    Spark job; ``spark.read.parquet`` would start one per call to infer
+    the same schema."""
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # events.parquet has shipped with two physical layouts for `ts`:
         # TIMESTAMP(NANOS) (vectorized reader rejects it → read nanos as
@@ -62,7 +70,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # watermarks reject). Normalize BOTH to session-tz TIMESTAMP: the
         # session runs UTC, so wall-clock == epoch math == DuckDB.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, path)
         dtype = dict(df.dtypes).get("ts")
         if dtype == "bigint":
             # integer div: ns/1000 via double FLOOR loses precision above
@@ -71,7 +79,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif dtype == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, path)
 
 
 # --- determinism helpers ---------------------------------------------------

@@ -33,6 +33,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..frames import local_frame, parquet_schema, read_parquet
+
+
 def _await_or_raise(q, timeout_sec: int = 300) -> None:
     """availableNow replays terminate on their own; a False return from
     awaitTermination means the cap elapsed with the query still running
@@ -95,7 +98,7 @@ def _schema_and_stage(spark, parquet_path: str):
     hit = _REPLAY_STAGE_CACHE.get(parquet_path)
     if hit is not None:
         return hit
-    schema = spark.read.parquet(parquet_path).schema
+    schema = parquet_schema(spark, parquet_path)
     if not os.path.isdir(parquet_path):
         import atexit
         import shutil
@@ -561,9 +564,9 @@ def replay_late_data(
         _stage_single_parquet(
             stage, ev.filter(c_set), "c_late.parquet", t0 + 120
         )
-        batch_schema = spark.read.parquet(
-            os.path.join(stage, "a_ontime.parquet")
-        ).schema
+        batch_schema = parquet_schema(
+            spark, os.path.join(stage, "a_ontime.parquet")
+        )
         _REPLAY_STAGE_CACHE[cache_key] = (batch_schema, stage)
 
     stream = (
@@ -688,9 +691,9 @@ def replay_dedup_within_watermark(
             "c_stragglers_and_dups.parquet",
             t0 + 120,
         )
-        batch_schema = spark.read.parquet(
-            os.path.join(stage, "a_ontime.parquet")
-        ).schema
+        batch_schema = parquet_schema(
+            spark, os.path.join(stage, "a_ontime.parquet")
+        )
         _REPLAY_STAGE_CACHE[cache_key] = (batch_schema, stage)
 
     stream = (
@@ -789,9 +792,9 @@ def replay_foreachbatch_upsert(
             "b_tail_and_redeliver.parquet",
             t0 + 60,
         )
-        batch_schema = spark.read.parquet(
-            os.path.join(stage, "a_bulk.parquet")
-        ).schema
+        batch_schema = parquet_schema(
+            spark, os.path.join(stage, "a_bulk.parquet")
+        )
         _REPLAY_STAGE_CACHE[cache_key] = (batch_schema, stage)
 
     target = os.path.join(
@@ -802,7 +805,7 @@ def replay_foreachbatch_upsert(
     def _upsert(batch_df, _batch_id: int) -> None:
         fresh = batch_df.dropDuplicates(["event_id"])
         if os.path.isdir(target):
-            existing = spark.read.parquet(target).select("event_id")
+            existing = read_parquet(spark, target).select("event_id")
             fresh = fresh.join(existing, "event_id", "left_anti")
         fresh.write.mode("append").parquet(target)
 
@@ -829,7 +832,7 @@ def replay_foreachbatch_upsert(
     finally:
         if shuffle_partitions:
             spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.read.parquet(target)
+    return read_parquet(spark, target)
 
 
 def replay_stream_stream_join(
@@ -1053,9 +1056,9 @@ def replay_tws_totals(
             "b_odd.parquet",
             t0 + 60,
         )
-        batch_schema = spark.read.parquet(
-            os.path.join(stage, "a_even.parquet")
-        ).schema
+        batch_schema = parquet_schema(
+            spark, os.path.join(stage, "a_even.parquet")
+        )
         _REPLAY_STAGE_CACHE[cache_key] = (batch_schema, stage)
 
     state_schema = StructType(
@@ -1185,6 +1188,37 @@ def replay_left_outer_join(
     from pyspark.sql import functions as F
 
     table_name = table_name or f"stream_loj_{uuid.uuid4().hex[:8]}"
+
+    def left_join(src):
+        views = (
+            src()
+            .filter(F.col("event_type") == "view")
+            .select(
+                F.col("event_id").alias("v_id"),
+                F.col("user_id").alias("v_user"),
+                F.col("ts").alias("v_ts"),
+            )
+            .withWatermark("v_ts", f"{window_minutes} minutes")
+        )
+        clicks = (
+            src()
+            .filter(F.col("event_type") == "click")
+            .select(
+                F.col("event_id").alias("c_id"),
+                F.col("user_id").alias("c_user"),
+                F.col("ts").alias("c_ts"),
+            )
+            .withWatermark("c_ts", f"{window_minutes} minutes")
+        )
+        return views.join(
+            clicks,
+            F.expr(
+                f"v_user = c_user AND c_ts >= v_ts "
+                f"AND c_ts <= v_ts + interval {window_minutes} minutes"
+            ),
+            "leftOuter",
+        )
+
     cache_key = f"loj::{parquet_path}"
     hit = _REPLAY_STAGE_CACHE.get(cache_key)
     if hit is not None:
@@ -1200,18 +1234,23 @@ def replay_left_outer_join(
             "event_id", "user_id", "event_type", "ts"
         )
         gm = ev.agg(F.max("ts")).first()[0]
+        if gm is None:
+            # no events: no watermark to advance, and the batch join of
+            # the empty table is the whole (empty) answer
+            return left_join(lambda: ev)
         adv = gm + datetime.timedelta(hours=1)
-        sentinels = spark.createDataFrame(
+        sentinels = local_frame(
+            spark,
             [(-1, -1, "view", adv), (-2, -2, "click", adv)],
-            schema=ev.schema,
+            ev.schema,
         )
         stage = _staging_dir("loj_stream_")
         t0 = _t.time() - 300
         _stage_single_parquet(stage, ev, "a_events.parquet", t0)
         _stage_single_parquet(stage, sentinels, "b_advancers.parquet", t0 + 60)
-        batch_schema = spark.read.parquet(
-            os.path.join(stage, "a_events.parquet")
-        ).schema
+        batch_schema = parquet_schema(
+            spark, os.path.join(stage, "a_events.parquet")
+        )
         _REPLAY_STAGE_CACHE[cache_key] = (batch_schema, stage)
 
     def src():
@@ -1222,34 +1261,7 @@ def replay_left_outer_join(
             .parquet(stage)
         )
 
-    views = (
-        src()
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("v_id"),
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", f"{window_minutes} minutes")
-    )
-    clicks = (
-        src()
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("c_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", f"{window_minutes} minutes")
-    )
-    joined = views.join(
-        clicks,
-        F.expr(
-            f"v_user = c_user AND c_ts >= v_ts "
-            f"AND c_ts <= v_ts + interval {window_minutes} minutes"
-        ),
-        "leftOuter",
-    )
+    joined = left_join(src)
 
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     if shuffle_partitions:
@@ -1698,14 +1710,14 @@ def replay_bottomk_sample(
     stage = _BOTTOMK_STAGE_CACHE.get((parquet_path, split_files))
     if stage is None:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        src = spark.read.parquet(parquet_path).select(
+        src = read_parquet(spark, parquet_path).select(
             "event_type", "user_id"
         )
         stage = tempfile.mkdtemp(prefix="stateful_bk_stage_")
         atexit.register(shutil.rmtree, stage, ignore_errors=True)
         src.repartition(split_files).write.mode("overwrite").parquet(stage)
         _BOTTOMK_STAGE_CACHE[(parquet_path, split_files)] = stage
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1797,7 +1809,7 @@ def replay_minhash_signature(
     stage = _MINHASH_STAGE_CACHE.get((parquet_path, group_col))
     if stage is None:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        src = spark.read.parquet(parquet_path).select(
+        src = read_parquet(spark, parquet_path).select(
             F.col(group_col).alias("__g"),
             tx.fingerprint("text").alias("__fp"),
         )
@@ -1807,7 +1819,7 @@ def replay_minhash_signature(
             "overwrite"
         ).parquet(stage)
         _MINHASH_STAGE_CACHE[(parquet_path, group_col)] = stage
-    schema = spark.read.parquet(stage).schema
+    schema = parquet_schema(spark, stage)
     h0 = dd.hash60(F.col("__fp")) % F.lit(MINHASH_REDUCE)
     perms = F.array(
         *[

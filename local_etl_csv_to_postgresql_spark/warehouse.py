@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .config import WarehouseConfig
+from .frames import local_frame
 from .schemas import (
     DIMENSIONS,
     FACT_TRANSACTIONS_SCHEMA,
@@ -604,6 +605,8 @@ class Warehouse:
                     f"{label}: {bad} violations",
                 ))
 
-        return self.spark.createDataFrame(
-            rows, "check_type string, table_name string, status string, detail string"
+        return local_frame(
+            self.spark,
+            rows,
+            "check_type string, table_name string, status string, detail string",
         )

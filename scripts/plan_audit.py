@@ -6,8 +6,11 @@ on: for every ``__spark_entry__.queries()`` entry it records the
 scale-relevant plan properties — shuffle (Exchange) count, broadcast vs
 sort-merge join mix, BroadcastNestedLoopJoin / CartesianProduct
 occurrences (cross-checked against the pytest allowlist), single-
-partition exchanges, whole-stage-codegen span count, and whether the
-parquet scan carries pushed filters — so a refactor that silently
+partition exchanges, whole-stage-codegen span count, whether the
+parquet scan carries pushed filters, and how many scans read rows
+parallelized from a Python list (``Scan ExistingRDD`` over
+``applySchemaToPythonRDD`` — each one runs a Python-worker job;
+driver-held rows belong in ``frames.local_frame``) — so a refactor that silently
 degrades a plan shows up as a table diff, not a slow bench three rounds
 later. Streaming replays are skipped (their plan is per-micro-batch).
 
@@ -44,6 +47,9 @@ def audit(plan: str) -> dict:
         "bnlj": len(re.findall(r"\bBroadcastNestedLoopJoin\b", plan)),
         "cartesian": len(re.findall(r"\bCartesianProduct\b", plan)),
         "pushed": bool(re.search(r"PushedFilters: \[[^\]]", plan)),
+        "py_rdd": len(
+            re.findall(r"Arguments: .*applySchemaToPythonRDD.*ExistingRDD", plan)
+        ),
     }
 
 
@@ -66,27 +72,32 @@ def main() -> int:
         "bounded-metadata rollups only), BHJ/SMJ (broadcast vs sort-merge",
         "joins), BNLJ (broadcast-nested-loop — allowlisted bounded sides",
         "only, see tests/test_plans.py), CART (cartesian — must be 0),",
-        "pushed (parquet filter pushdown present). Whole-stage-codegen",
+        "pushed (parquet filter pushdown present), pyRDD (scans of rows",
+        "parallelized from a Python list — each runs a Python-worker job;",
+        "must be 0, see frames.local_frame). Whole-stage-codegen",
         "spans are not visible pre-execution under AQE, so they are not",
         "audited here; tests/test_plans.py pins them where load-bearing.",
         "",
-        "| query | shuffles | 1-part | BHJ | SMJ | BNLJ | CART | pushed |",
-        "|---|---|---|---|---|---|---|---|",
+        "| query | shuffles | 1-part | BHJ | SMJ | BNLJ | CART | pushed "
+        "| pyRDD |",
+        "|---|---|---|---|---|---|---|---|---|",
     ]
     for name, a in rows:
         if "error" in a:
-            out.append(f"| {name} | ERROR: {a['error']} | | | | | | |")
+            out.append(f"| {name} | ERROR: {a['error']} | | | | | | | |")
             continue
         out.append(
             f"| {name} | {a['exchanges']} | {a['single_part']} | {a['bhj']} "
             f"| {a['smj']} | {a['bnlj']} | {a['cartesian']} "
-            f"| {'y' if a['pushed'] else ''} |"
+            f"| {'y' if a['pushed'] else ''} | {a['py_rdd']} |"
         )
     cart = [n for n, a in rows if a.get("cartesian")]
+    py_rdd = [n for n, a in rows if a.get("py_rdd")]
     out.append("")
     out.append(
         f"Totals: {len(rows)} batch queries audited; "
-        f"CartesianProduct present in {len(cart)} ({cart or 'none'})."
+        f"CartesianProduct present in {len(cart)} ({cart or 'none'}); "
+        f"Python-list scans in {len(py_rdd)} ({py_rdd or 'none'})."
     )
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(here, "PLAN_AUDIT.md"), "w") as f:

@@ -155,3 +155,48 @@ def test_ss10_degenerate_parity(spark, tmp_path_factory, shape, rows):
         if not p.startswith("dtype ")
     ]
     assert not problems, f"ss10 on {shape}: " + "; ".join(problems)
+
+
+#: queries that crashed on a 0-row copy of the one table they read
+EMPTY_TABLE_CASES = [
+    # the export's read-back found no file to infer a schema from
+    ("pk02_packing_export", "documents"),
+    # the replay's watermark advancer is max(ts) + 1h, and max(ts) is NULL
+    ("st13_left_outer_attribution", "events"),
+]
+
+
+@pytest.mark.integration
+@pytest.mark.parametrize(
+    "name,table", EMPTY_TABLE_CASES, ids=[n for n, _ in EMPTY_TABLE_CASES]
+)
+def test_empty_table_parity(spark, tmp_path_factory, name, table):
+    """A 0-row copy of the sf0.001 table (same footer schema) gives the
+    DuckDB twin's answer — no rows — instead of an engine error."""
+    import pyarrow.parquet as pq
+
+    duckdb = pytest.importorskip("duckdb")
+    from scripts.check_oracle import compare
+
+    from test_plans import SF as sf
+
+    if not os.path.isdir(sf):
+        pytest.skip("driver testdata not present")
+    tmp = tmp_path_factory.mktemp(f"degen_empty_{name}")
+    src = pq.read_table(f"{sf}/{table}.parquet")
+    pq.write_table(src.slice(0, 0), os.path.join(tmp, f"{table}.parquet"))
+    sdf = QUERIES[name](spark, str(tmp)).toPandas()
+    con = duckdb.connect()
+    try:
+        con.execute(
+            f"CREATE VIEW {table} AS SELECT * FROM '{tmp}/{table}.parquet'"
+        )
+        odf = con.execute(ORACLES[name]).fetchdf()
+    finally:
+        con.close()
+    assert len(sdf) == 0
+    problems = [
+        p for p in compare(f"{name}:empty", sdf, odf)
+        if not p.startswith("dtype ")
+    ]
+    assert not problems, f"{name} on empty {table}: " + "; ".join(problems)

@@ -390,6 +390,36 @@ def test_no_broadcast_hint_on_sf_proportional_frames_extensions():
     )
 
 
+def test_no_list_create_dataframe_outside_local_frame():
+    """Source sweep: driver-held rows become frames only through
+    ``frames.local_frame`` (a LocalRelation, no job). A
+    ``createDataFrame(<list>)`` anywhere else plans as a parallelized
+    RDD and makes every plan that reads it run a Python-worker job."""
+    import re
+
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(here, "local_etl_csv_to_postgresql_spark")
+    sources = [os.path.join(here, "__spark_entry__.py")] + [
+        os.path.join(root, f)
+        for root, _, files in os.walk(pkg)
+        for f in files
+        if f.endswith(".py")
+    ]
+    calls = {
+        os.path.relpath(p, here): len(
+            re.findall(r"createDataFrame\(", open(p).read())
+        )
+        for p in sources
+    }
+    helper = os.path.join("local_etl_csv_to_postgresql_spark", "frames.py")
+    assert calls.pop(helper) >= 1, "sweep regex found no call — pattern rot?"
+    offenders = {p: n for p, n in calls.items() if n}
+    assert offenders == {}, (
+        "createDataFrame outside frames.local_frame (route driver-held "
+        f"rows through local_frame): {offenders}"
+    )
+
+
 @needs_testdata
 def test_uf01_prunes_to_two_columns(spark):
     """The URL rule filter must stay a map over a pruned scan: only

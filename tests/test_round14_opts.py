@@ -18,6 +18,7 @@ from local_etl_csv_to_postgresql_spark.functions import similarity as sim
 from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
     SEMDEDUP_K,
     _dd13_cluster_pair_dots,
+    _pq_kernel,
 )
 from local_etl_csv_to_postgresql_spark.plans.analytics import load
 
@@ -168,3 +169,29 @@ def test_assignment_arrow_kernel_matches_fold(spark):
     assert (
         _assign_via_fold(df, empty, "vec_id", "embedding", None).count() == 0
     )
+
+
+def test_pq_kernel_regular_batch_of_another_width_takes_the_fold_answer():
+    """A batch whose subvectors are all one width (so the vectorized
+    path is taken) but not the codebook's width: the fold gives every
+    candidate sim NULL, so each row takes the lowest cid with a NULL
+    error; a batch of the codebook's width still scores normally."""
+    import pyarrow as pa
+
+    codebooks = {(0, 3): [1.0, 0.0], (0, 5): [0.0, 1.0]}
+
+    def run(vectors):
+        batch = pa.record_batch(
+            [
+                pa.array(range(len(vectors)), pa.int64()),
+                pa.array([0] * len(vectors), pa.int32()),
+                pa.array([0] * len(vectors), pa.int32()),
+                pa.array(vectors, pa.list_(pa.float64())),
+            ],
+            names=["vec_id", "label", "__m", "__sv"],
+        )
+        (out,) = list(_pq_kernel(codebooks, True)([batch]))
+        return list(zip(out.column(4).to_pylist(), out.column(5).to_pylist()))
+
+    assert run([[0.0, 1.0, 2.0], [3.0, 0.0, 0.0]]) == [(3, None), (3, None)]
+    assert run([[0.0, 2.0], [3.0, 0.0]]) == [(5, 1.0), (3, 4.0)]

@@ -85,6 +85,18 @@ def test_load_normalizes_every_layout_to_timestamp(spark, layout_dirs):
     assert results["ntz_micros"] == results["ltz_micros"] == results["nanos"]
 
 
+def test_load_schema_equals_inferred_for_every_layout(spark, layout_dirs):
+    """The footer-derived schema is the one inference gives for each
+    physical layout, and opening the table starts no job."""
+    from test_frames import _jobs, inferred_load
+
+    for name, d in layout_dirs.items():
+        before = _jobs(spark)
+        got = load(spark, d, "events")
+        assert _jobs(spark) - before == 0, name
+        assert got.schema == inferred_load(spark, d, "events").schema, name
+
+
 def test_epoch_math_identical_across_layouts(spark, layout_dirs):
     import pyspark.sql.functions as F
 
