@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from ..frames import local_frame, read_parquet
 from ..plans.analytics import dec, load
 from . import dedup as dd
+from . import kernels
 from . import similarity as sim
 from . import text as tx
 from .multimodal import (
@@ -5716,216 +5717,6 @@ EXTENSION_QUERIES["es11_ann_recall"] = es11_ann_recall
 PQ_M, PQ_D, PQ_K = 2, 64, 16
 
 
-def _pq_kernel(codebooks: dict, extra_err: bool):
-    """The ``mapInArrow`` function of ``_pq_assigned``: each
-    (vec_id, label, __m, __sv) subvector gets the argmax-cosine
-    codeword of subspace ``__m`` under ``codebooks`` ((m, cid) ->
-    vector), plus its squared reconstruction error when
-    ``extra_err``."""
-    # r14: same certified argmax rule (argmax cosine, strict > over
-    # cid-ascending candidates, NULL sims lose, ties keep the low
-    # cid) as the r13 broadcast-array fold, executed as a mapInArrow
-    # kernel — the similarity._assign_via_arrow strategy applied
-    # per subspace. The codebooks are ALREADY driver-side (`state`,
-    # the bounded M·K·d metadata this trainer round-trips every
-    # refinement), so no collect is added; dot, norm², and the
-    # reconstruction error all accumulate PER DIMENSION from 0.0,
-    # reproducing the folds' ((0.0 + p0) + p1) + ... IEEE sequence
-    # bit-for-bit (the raw error is emitted and rounded JVM-side,
-    # so the 6-dp certified value is byte-identical). Subvectors
-    # are rectangular finite slices by construction; irregular
-    # rows would make every candidate sim NULL in the fold, so
-    # they take the lowest cid with a NULL-poisoned error — the
-    # kernel reproduces that exactly.
-    import numpy as np
-
-    per_m: dict[int, list] = {}
-    for (m, cid), vec in sorted(codebooks.items()):
-        per_m.setdefault(int(m), []).append(
-            (int(cid), [float(x) for x in vec])
-        )
-    mats = {}
-    for m, lst in per_m.items():
-        cids_m = np.array([c for c, _ in lst], dtype=np.int64)
-        cmat = np.array([v for _, v in lst], dtype=np.float64)
-        if not np.isfinite(cmat).all():
-            raise ValueError("PQ codebook contains non-finite values")
-        cn = np.zeros(len(lst), dtype=np.float64)
-        for i in range(cmat.shape[1]):
-            x = cmat[:, i]
-            cn += x * x
-        mats[m] = (cids_m, cmat, np.sqrt(cn))
-
-    def _kernel(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ms = batch.column(2).to_numpy(zero_copy_only=False)
-            sv = batch.column(3)
-            lengths = pc.list_value_length(sv)
-            flat = sv.flatten()
-            vmat = None
-            uniq_lens = set(lengths.to_pylist())
-            if (
-                sv.null_count == 0
-                and flat.null_count == 0
-                and len(uniq_lens) == 1
-                and next(iter(uniq_lens)) > 0
-            ):
-                vmat = (
-                    flat.to_numpy(zero_copy_only=False)
-                    .astype(np.float64, copy=False)
-                    .reshape(n, -1)
-                )
-                if not np.isfinite(vmat).all():
-                    raise ValueError(
-                        "PQ subvector contains non-finite values"
-                    )
-            sv_rows = None  # per-row values, built on first use
-            out_cid = np.zeros(n, dtype=np.int64)
-            keep = np.zeros(n, dtype=bool)
-            out_err = np.full(n, np.nan) if extra_err else None
-            for m, (cids_m, cmat, cn) in mats.items():
-                rows = np.nonzero(ms == m)[0]
-                if len(rows) == 0:
-                    continue
-                keep[rows] = True
-                k, d = cmat.shape
-                if vmat is not None and vmat.shape[1] == d:
-                    vsub = vmat[rows]
-                    vn = np.zeros(len(rows), dtype=np.float64)
-                    for i in range(d):
-                        x = vsub[:, i]
-                        vn += x * x
-                    vn = np.sqrt(vn)
-                    dots = np.zeros((len(rows), k), dtype=np.float64)
-                    for i in range(d):
-                        dots += np.multiply.outer(
-                            vsub[:, i], cmat[:, i]
-                        )
-                    den = np.multiply.outer(vn, cn)
-                    valid = den != 0.0
-                    with np.errstate(
-                        divide="ignore", invalid="ignore", over="ignore"
-                    ):
-                        sims = np.where(
-                            valid, dots / np.where(valid, den, 1.0), 0.0
-                        )
-                    if not np.isfinite(sims[valid]).all():
-                        raise ValueError(
-                            "PQ sims overflowed to non-finite"
-                        )
-                    best_j = np.zeros(len(rows), dtype=np.int64)
-                    best_s = np.full(len(rows), -np.inf)
-                    has = np.zeros(len(rows), dtype=bool)
-                    for j in range(k):
-                        s = sims[:, j]
-                        v = valid[:, j]
-                        take = v & (~has | (s > best_s))
-                        best_j[take] = j
-                        best_s[take] = s[take]
-                        has |= v
-                    out_cid[rows] = cids_m[best_j]
-                    if extra_err:
-                        errs = np.zeros(
-                            (len(rows), k), dtype=np.float64
-                        )
-                        for i in range(d):
-                            dlt = np.subtract.outer(
-                                vsub[:, i], cmat[:, i]
-                            )
-                            errs += dlt * dlt
-                        out_err[rows] = errs[
-                            np.arange(len(rows)), best_j
-                        ]
-                else:
-                    # irregular batch (NULL/ragged/empty slices):
-                    # exact per-row replica of the fold — a row
-                    # whose slice length != d (zip_with null
-                    # padding) or with NULL elements has every
-                    # candidate sim NULL, so the lowest cid wins
-                    # with a NULL-poisoned error; a regular row
-                    # scores normally.
-                    import math
-
-                    if sv_rows is None:
-                        sv_rows = sv.to_pylist()
-                    for r in rows:
-                        v = sv_rows[r]
-                        if (
-                            v is None
-                            or len(v) != d
-                            or any(e is None for e in v)
-                        ):
-                            out_cid[r] = cids_m[0]
-                            continue
-                        vn = 0.0
-                        for e in v:
-                            e = float(e)
-                            vn += e * e
-                        vn = math.sqrt(vn)
-                        bj, bs = None, None
-                        for j in range(k):
-                            dt = 0.0
-                            for i in range(d):
-                                dt += float(v[i]) * cmat[j, i]
-                            dn = vn * cn[j]
-                            if dn == 0.0:
-                                continue
-                            s = dt / dn
-                            if bs is None:
-                                bj, bs = j, s
-                            elif math.isnan(s):
-                                if not math.isnan(bs):
-                                    bj, bs = j, s
-                            elif (not math.isnan(bs)) and s > bs:
-                                bj, bs = j, s
-                        bj = 0 if bj is None else bj
-                        out_cid[r] = cids_m[bj]
-                        if extra_err:
-                            er = 0.0
-                            for i in range(d):
-                                dlt = float(v[i]) - cmat[bj, i]
-                                er += dlt * dlt
-                            out_err[r] = er
-            arrays = [
-                batch.column(0),
-                batch.column(1),
-                batch.column(2),
-                sv,
-                pa.array(
-                    [
-                        int(c) if k_ else None
-                        for c, k_ in zip(out_cid, keep)
-                    ],
-                    type=pa.int64(),
-                ),
-            ]
-            names = ["vec_id", "label", "__m", "__sv", "__cid"]
-            if extra_err:
-                arrays.append(
-                    pa.array(
-                        [
-                            float(e) if (k_ and not np.isnan(e)) else None
-                            for e, k_ in zip(out_err, keep)
-                        ],
-                        type=pa.float64(),
-                    )
-                )
-                names.append("__err")
-            keep_idx = np.nonzero(keep)[0]
-            rb = pa.record_batch(arrays, names=names)
-            if len(keep_idx) != n:
-                rb = rb.take(pa.array(keep_idx))
-            yield rb
-
-    return _kernel
-
-
 def _pq_assigned(
     spark: SparkSession, sf: str, extra_err: bool
 ) -> tuple[DataFrame, DataFrame]:
@@ -6002,41 +5793,16 @@ def _pq_assigned(
             "__cid long"
         ) + (", __err double" if extra_err else "")
 
-        out = sliced.mapInArrow(_pq_kernel(codebooks, extra_err), out_type)
+        out = sliced.mapInArrow(
+            kernels.pq_kernel(codebooks, extra_err), out_type
+        )
         if extra_err:
             out = out.withColumn("__err", F.round("__err", 6))
         return out
 
     # one Lloyd refinement, both subspaces in one pass
-    # means stay the posexplode -> (m, cid, dim) keyed aggregate: an
-    # r13 A/B of the per-dimension COLUMN aggregate (sub_w decimal sum
-    # buffers in one hash aggregate) measured 1.6-3.7x SLOWER — Spark's
-    # high-precision decimal aggregation buffers are variable-length,
-    # so wide many-buffer rows pay per-update copying the one-buffer
-    # exploded shape never does
-    means = (
-        assign(state, extra_err=False)
-        .select("__m", "__cid", F.posexplode("__sv").alias("__dim", "__x"))
-        .groupBy("__m", "__cid", "__dim")
-        .agg(
-            F.sum(F.col("__x").cast("decimal(25,12)")).alias("__s"),
-            F.count(F.lit(1)).alias("__n"),
-        )
-        .select(
-            "__m",
-            "__cid",
-            "__dim",
-            F.round(F.col("__s").cast("double") / F.col("__n"), 6).alias(
-                "__mean"
-            ),
-        )
-        .groupBy("__m", "__cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("__dim", "__mean"))),
-                lambda s: s["__mean"],
-            ).alias("__newvec")
-        )
+    means = sim.lloyd_means(
+        assign(state, extra_err=False), "__m", "__cid", vec_col="__sv"
     )
     # O(M·k·d) driver metadata; empty clusters keep their position
     new = {
@@ -6857,72 +6623,14 @@ FROM c GROUP BY source ORDER BY source
 # --- round-7 wave 2 ----------------------------------------------------------
 # (dd13 SemDeDup, ir01 DSIR importance weights, q49 TPC-H Q7 shape)
 
-# SemDeDup knobs (dd13): cluster count and the within-cluster cosine
+# SemDeDup constants (dd13): cluster count and the within-cluster cosine
 # threshold (on the 4-dp-rounded cosine, the es01 convention). 8
 # clusters keep the sf-scale in-cluster pair volume tiny while still
 # exercising the real two-stage shape; a production corpus raises
 # SEMDEDUP_K with corpus size so the per-cluster member count — and
 # with it the quadratic in-cluster pair work — stays bounded.
-SEMDEDUP_K = int(_os.environ.get("SPARK_GRAFT_SEMDEDUP_K", "8"))
-
-#: The embeddings table's fixed vector width (generator contract; PQ_D
-#: slices the same 64 dims).
-EMB_DIM = 64
-
-
-def _dd13_cluster_pair_dots(pdf):
-    """Vectorized in-cluster pair scoring for dd13 (guide §4.2): one
-    pandas group per cluster in, the (idb, raw dot, raw norm-product)
-    of every ida < idb pair out. BIT-IDENTICAL float discipline — the
-    certified fold computes dot = ((0.0 + p_0) + p_1) + ... and
-    norm² = ((0.0 + a_0²) + a_1²) + ...; this kernel accumulates the
-    Gram matrix per DIMENSION (G += outer(V[:,i], V[:,i]) from a 0.0
-    start), so G[a,b] adds the exact same products in the exact same
-    order, norms are sqrt(G[i,i]) (the identical sequence), and the
-    denominator is the same na*nb IEEE multiply. The NULLIF division,
-    rounding, and threshold happen JVM-side on these raw doubles.
-    NaN inputs would not survive the Arrow return path bit-for-bit
-    (pandas->Arrow maps NaN to null), so they fail loudly instead —
-    the embedding generator contract is finite floats."""
-    import numpy as np
-    import pandas as pd
-
-    if len(pdf) < 2:
-        return pd.DataFrame(
-            {
-                "__cid": pd.Series(dtype="int64"),
-                "__idb": pd.Series(dtype="int64"),
-                "__dot": pd.Series(dtype="float64"),
-                "__den": pd.Series(dtype="float64"),
-            }
-        )
-    pdf = pdf.sort_values("vec_id", ignore_index=True)
-    v = np.stack(pdf["__v"].to_numpy()).astype(np.float64, copy=False)
-    if np.isnan(v).any():
-        raise ValueError(
-            "dd13 pair kernel: NaN embedding component — the Arrow "
-            "return path cannot preserve NaN vs NULL bit semantics"
-        )
-    n, d = v.shape
-    g = np.zeros((n, n), dtype=np.float64)
-    for i in range(d):
-        col = v[:, i]
-        # dim-i product added to every pair's partial sum: the same
-        # left-to-right per-dimension order as the certified fold
-        g += np.multiply.outer(col, col)
-    norms = np.sqrt(np.diagonal(g))
-    den = np.multiply.outer(norms, norms)
-    ia, ib = np.triu_indices(n, k=1)
-    ids = pdf["vec_id"].to_numpy()
-    return pd.DataFrame(
-        {
-            "__cid": np.repeat(np.int64(pdf["__cid"].iloc[0]), len(ia)),
-            "__idb": ids[ib],
-            "__dot": g[ia, ib],
-            "__den": den[ia, ib],
-        }
-    )
-SEMDEDUP_THRESHOLD = float(_os.environ.get("SPARK_GRAFT_SEMDEDUP_T", "0.30"))
+SEMDEDUP_K = 8
+SEMDEDUP_THRESHOLD = 0.30
 
 
 def dd13_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
@@ -6970,7 +6678,7 @@ def dd13_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
     # unrolled 64-term codegen expression measured 2.4x SLOWER than
     # the fold in a kernel A/B, so JVM expressions are out of road).
     # Guide §4.2: hand whole clusters to a vectorized numpy kernel
-    # (_dd13_cluster_pair_dots) that accumulates the Gram matrix
+    # (kernels.dd13_pair_dots) that accumulates the Gram matrix
     # PER DIMENSION — G starts at 0.0 and adds the dim-i product
     # outer-product-wise, so every pair's dot is the identical
     # ((0.0 + p0) + p1) + ... left-to-right double sequence the
@@ -6987,7 +6695,7 @@ def dd13_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
         assigned.select("__cid", "vec_id", "__v")
         .groupBy("__cid")
         .applyInPandas(
-            _dd13_cluster_pair_dots,
+            kernels.dd13_pair_dots,
             "__cid long, __idb long, __dot double, __den double",
         )
         .select(
@@ -17940,36 +17648,25 @@ def es18_ivf_cell_balance(spark: SparkSession, sf: str) -> DataFrame:
     es06/es12 ride), so this audits exactly the index the searches
     search.
 
-    Scale: one broadcast of the 16-centroid panel, map-only
-    assignment, one keyed aggregate onto the 16-row output. Cosines
-    round to 4 dp per vector (the es01 convention) then DECIMAL-sum."""
-    from local_etl_csv_to_postgresql_spark.functions.similarity import (
-        assign_to_centroids,
-        dot,
-        norm,
-    )
-
+    Scale: the 16-centroid panel is read once into a driver-held
+    frame; map-only assignment, the same panel broadcast-joined back
+    on the winning cell to score each vector's 4-dp cosine (the es01
+    convention), one keyed aggregate onto the 16-row output; cosines
+    DECIMAL-sum."""
     emb = load(spark, sf, "embeddings")
-    cents = (
-        emb.orderBy("vec_id")
-        .limit(16)
-        .select(
-            F.col("vec_id").alias("__cid"), F.col("embedding").alias("__cvec")
-        )
+    panel = emb.orderBy("vec_id").limit(16).select(
+        F.col("vec_id").alias("__cid"), F.col("embedding").alias("__cvec")
     )
-    # the shared rule drops its raw __sim; carry the 4-dp cosine of the
-    # WINNING pair via the extra hook (the es12 pattern)
-    assigned = assign_to_centroids(
-        emb,
-        cents,
+    # both the assignment's collect and the join back read this
+    # LocalRelation, so embeddings is not scanned again for the panel
+    cents = local_frame(spark, panel.collect(), panel.schema)
+    assigned = sim.assign_to_centroids(emb, cents, "vec_id", "embedding").join(
+        F.broadcast(cents), "__cid"
+    ).select(
         "vec_id",
-        "embedding",
-        extra={
-            "__s": lambda v, c: F.round(
-                dot(v, c) / F.nullif(norm(v) * norm(c), F.lit(0.0)), 4
-            )
-        },
-    ).select("vec_id", F.col("__cid").alias("cell"), "__s")
+        F.col("__cid").alias("cell"),
+        sim.cosine(F.col("embedding"), F.col("__cvec")).alias("__s"),
+    )
     total = emb.agg(F.count(F.lit(1)).alias("__n"))
     return (
         assigned.groupBy("cell")
@@ -22472,7 +22169,15 @@ def ss09_kcenter_coreset(spark: SparkSession, sf: str) -> DataFrame:
     frame is checkpointed so round r's plan does not replay rounds
     0..r-1."""
     emb = load(spark, sf, "embeddings").select("vec_id", "embedding")
-    first = emb.orderBy("vec_id").limit(1).collect()[0]
+    schema = "round int, center_id bigint, coverage_radius double"
+    first = emb.orderBy("vec_id").limit(1).collect()
+    if not first:
+        # no points: every round has no center and no radius (the
+        # twin's scalar subqueries over empty CTEs)
+        return local_frame(
+            spark, [(rnd, None, None) for rnd in range(SS09_CENTERS)], schema
+        ).orderBy("round")
+    first = first[0]
     centers = [(0, first["vec_id"])]
     center_vec = F.array(*[F.lit(float(x)) for x in first["embedding"]])
     state = emb.select(
@@ -22501,7 +22206,7 @@ def ss09_kcenter_coreset(spark: SparkSession, sf: str) -> DataFrame:
             (rnd, int(cid), float(radius))
             for (rnd, cid), radius in zip(centers, radii)
         ],
-        "round int, center_id bigint, coverage_radius double",
+        schema,
     ).orderBy("round")
 
 

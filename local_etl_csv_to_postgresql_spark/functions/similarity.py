@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..frames import local_frame
+from . import kernels
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -304,43 +305,39 @@ def assign_to_centroids(
     cents: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    extra: dict | None = None,
 ) -> DataFrame:
     """THE centroid-assignment rule, shared by every trainer/consumer
-    (lloyd_centroids, lloyd_ivf_topk, ivf_assign, es12's PQ codebooks):
-    score every (vector, centroid) pair by cosine, keep the argmax
-    with ties broken on centroid id (``desc_nulls_last`` sim, asc cid
-    — a zero-norm vector lands on the lowest cid). This rule is
+    (lloyd_centroids, lloyd_ivf_topk, ivf_assign, dd13, es18): score
+    every (vector, centroid) pair by cosine, keep the argmax with ties
+    broken on centroid id (``desc_nulls_last`` sim, asc cid — a
+    zero-norm vector lands on the lowest cid). This rule is
     certification-load-bearing — the DuckDB oracles mirror it verbatim
     (entrypoints._lloyd_assign_cte) — so it lives in exactly one place.
+    Returns ``id_col``, ``vec_col`` and the winner's ``__cid``; a
+    consumer that needs the winner's vector or sim joins the (bounded)
+    centroid frame back on ``__cid``.
 
-    ``extra`` maps output column name → fn(vec, cvec) Column computed
-    per candidate pair and kept on the winning row (es12 uses it for
-    the reconstruction error against the winning codeword).
+    Two execution strategies for the SAME rule:
 
-    Two execution strategies for the SAME rule (r14):
-
-    - ``extra`` or degenerate centroids (non-long cid, NULL/non-finite
-      components) → the r13 broadcast-array FOLD: one packed row,
+    - degenerate centroids (non-long cid, NULL/non-finite components,
+      ragged panel) → the broadcast-array FOLD: one packed row,
       map-side ``aggregate()`` argmax, zero shuffles (see
       _assign_via_fold for the comparator-equivalence argument).
     - otherwise → a ``mapInArrow`` kernel (guide §4.2): the k·d
       centroid panel collects to the driver (the same bounded-metadata
       class the Lloyd trainer already round-trips every iteration) and
-      each Arrow batch scores vectorized in numpy with PER-DIMENSION
-      accumulation — dot and norm² accumulate from 0.0 one dimension
-      at a time, reproducing the fold's ((0.0 + p0) + p1) + ... IEEE
-      sequence bit-for-bit — followed by the identical strict->
-      cid-ascending argmax (null sims lose, all-null keeps the lowest
-      cid, NaN ranks largest like Spark's `>`). Still zero shuffles,
-      still one corpus pass, but the 64·k multiply-adds per vector run
-      in vectorized native code instead of one interpreted lambda
-      frame per element (the r13-measured fold wall). Bit-equality vs
-      the fold is pinned by tests/test_round14_opts.py and every
-      consumer's oracle hash.
+      each Arrow batch scores vectorized in numpy
+      (``kernels.centroid_assigner``) with PER-DIMENSION accumulation
+      — dot and norm² accumulate from 0.0 one dimension at a time,
+      reproducing the fold's ((0.0 + p0) + p1) + ... IEEE sequence
+      bit-for-bit — followed by the identical strict-> cid-ascending
+      argmax (null sims lose, all-null keeps the lowest cid, NaN ranks
+      largest like Spark's `>`). Still zero shuffles, still one corpus
+      pass, but the 64·k multiply-adds per vector run in vectorized
+      native code instead of one interpreted lambda frame per element.
+      Bit-equality vs the fold is pinned by tests/test_round14_opts.py
+      and every consumer's oracle hash.
     """
-    if extra:
-        return _assign_via_fold(df, cents, id_col, vec_col, extra)
     return _assign_via_arrow(df, cents, id_col, vec_col)
 
 
@@ -349,10 +346,9 @@ def _assign_via_fold(
     cents: DataFrame,
     id_col: str,
     vec_col: str,
-    extra: dict | None,
 ) -> DataFrame:
-    """The r13 broadcast-array fold strategy (kept for ``extra``
-    consumers and degenerate centroid panels).
+    """The broadcast-array fold strategy (kept for degenerate centroid
+    panels, and as the reference the Arrow kernel is tested against).
 
     Plan shape: the centroid frame collapses to ONE broadcast row
     carrying a cid-sorted array of (cid, cvec, norm) structs; every
@@ -373,26 +369,16 @@ def _assign_via_fold(
     merge lambda, not in a separate transform() the fold would read
     twice), and the empty-centroid filter tests size(__cands) — not
     the fold result — so no row evaluates the fold more than once
-    per output reference; duplicate winner references in the final
-    select are unified by Spark's subexpression elimination.
+    per output reference. The accumulator carries (cid, sim) scalars
+    only, never the d-dim centroid array.
     """
-    # the winner's centroid VECTOR rides the fold accumulator only
-    # when an `extra` column needs it — without extras the fold
-    # carries (cid, sim) scalars and never copies the d-dim array
-    # through the per-candidate struct updates (measured ~30% of the
-    # fold's cost on 64-dim centroids)
-    carry_vec = bool(extra)
 
     def _merge(acc, c):
         s = (
             dot(F.col(vec_col), c["__cvec"])
             / F.nullif(F.col("__vn") * c["__cn"], F.lit(0.0))
         )
-        fields = [c["__cid"].alias("__cid")]
-        if carry_vec:
-            fields.append(c["__cvec"].alias("__cvec"))
-        fields.append(s.alias("__sim"))
-        cand = F.struct(*fields)
+        cand = F.struct(c["__cid"].alias("__cid"), s.alias("__sim"))
         take = acc["__cid"].isNull() | (
             cand["__sim"].isNotNull()
             & (acc["__sim"].isNull() | (cand["__sim"] > acc["__sim"]))
@@ -410,19 +396,11 @@ def _assign_via_fold(
             )
         ).alias("__cands")
     )
-    seed_fields = [
-        F.lit(None).cast(cents.schema["__cid"].dataType).alias("__cid")
-    ]
-    if carry_vec:
-        seed_fields.append(
-            F.lit(None).cast(cents.schema["__cvec"].dataType).alias("__cvec")
-        )
-    seed_fields.append(F.lit(None).cast("double").alias("__sim"))
-    seed = F.struct(*seed_fields)
+    seed = F.struct(
+        F.lit(None).cast(cents.schema["__cid"].dataType).alias("__cid"),
+        F.lit(None).cast("double").alias("__sim"),
+    )
     best = F.aggregate(F.col("__cands"), seed, _merge)
-    cols = [id_col, vec_col, F.col("__best.__cid").alias("__cid")]
-    for name, fn in (extra or {}).items():
-        cols.append(fn(F.col(vec_col), F.col("__best.__cvec")).alias(name))
     return (
         df.crossJoin(F.broadcast(packed))
         # empty centroid frame -> empty result (the crossJoin-fanout
@@ -430,7 +408,7 @@ def _assign_via_fold(
         .filter(F.size("__cands") > 0)
         .withColumn("__vn", norm(F.col(vec_col)))
         .withColumn("__best", best)
-        .select(*cols)
+        .select(id_col, vec_col, F.col("__best.__cid").alias("__cid"))
     )
 
 
@@ -443,7 +421,7 @@ def _assign_via_arrow(
     """Vectorized strategy for assign_to_centroids — see its docstring
     for the bit-exactness argument. Falls back to the fold when the
     centroid panel is degenerate (non-long cid, NULL / non-finite
-    components) so the kernel only ever sees shapes whose IEEE
+    components, ragged) so the kernel only ever sees shapes whose IEEE
     arithmetic it replicates exactly."""
     import math
 
@@ -451,7 +429,7 @@ def _assign_via_arrow(
     from pyspark.sql.types import LongType, StructField, StructType
 
     if not isinstance(cents.schema["__cid"].dataType, LongType):
-        return _assign_via_fold(df, cents, id_col, vec_col, None)
+        return _assign_via_fold(df, cents, id_col, vec_col)
 
     # k·d bounded driver metadata — the same class the Lloyd trainer
     # collects every iteration (and ivf_assign's panel is k rows).
@@ -463,29 +441,16 @@ def _assign_via_arrow(
         return src.filter(F.lit(False)).withColumn(
             "__cid", F.lit(None).cast("long")
         )
-    cand_list = []
-    for r in rows:
-        cv = r["__cvec"]
-        if (
-            r["__cid"] is None
-            or cv is None
-            or any(x is None or not math.isfinite(x) for x in cv)
-        ):
-            return _assign_via_fold(df, cents, id_col, vec_col, None)
-        cand_list.append((int(r["__cid"]), [float(x) for x in cv]))
-    cand_list.sort()
-    if len({len(v) for _, v in cand_list}) != 1:
-        return _assign_via_fold(df, cents, id_col, vec_col, None)
-
-    cids = np.array([c for c, _ in cand_list], dtype=np.int64)
-    cmat = np.array([v for _, v in cand_list], dtype=np.float64)
-    k, d = cmat.shape
-    cnorm = np.zeros(k, dtype=np.float64)
-    for i in range(d):
-        x = cmat[:, i]
-        cnorm += x * x  # the norm fold's per-dim order
-    cnorm = np.sqrt(cnorm)
-
+    if any(
+        r["__cid"] is None
+        or r["__cvec"] is None
+        or any(x is None or not math.isfinite(x) for x in r["__cvec"])
+        for r in rows
+    ) or len({len(r["__cvec"]) for r in rows}) != 1:
+        return _assign_via_fold(df, cents, id_col, vec_col)
+    cand_list = sorted(
+        (int(r["__cid"]), [float(x) for x in r["__cvec"]]) for r in rows
+    )
     out_schema = StructType(
         [
             src.schema[id_col],
@@ -493,110 +458,49 @@ def _assign_via_arrow(
             StructField("__cid", LongType(), True),
         ]
     )
+    return src.mapInArrow(
+        kernels.centroid_assigner(
+            np.array([c for c, _ in cand_list], dtype=np.int64),
+            np.array([v for _, v in cand_list], dtype=np.float64),
+        ),
+        out_schema,
+    )
 
-    def _slow_row(v) -> int:
-        """Rule replica for irregular rows (NULL list, ragged length,
-        NULL elements — all of which make every candidate sim NULL in
-        the fold via zip_with's null padding, so the lowest cid wins)
-        and for NaN/inf components (full Spark comparator semantics:
-        NaN sims rank largest, ties keep the lower cid)."""
-        if v is None or len(v) != d or any(e is None for e in v):
-            return int(cids[0])
-        vn = 0.0
-        for e in v:
-            e = float(e)
-            vn += e * e
-        vn = math.sqrt(vn)
-        best_cid = None
-        best_sim = None
-        for j in range(k):
-            dot_ = 0.0
-            for i in range(d):
-                dot_ += float(v[i]) * cmat[j, i]
-            den = vn * cnorm[j]
-            if den == 0.0:
-                continue  # NULL sim loses to anything
-            s = dot_ / den
-            if best_sim is None:
-                best_cid, best_sim = int(cids[j]), s
-            elif math.isnan(s):
-                if not math.isnan(best_sim):  # NaN > any non-NaN
-                    best_cid, best_sim = int(cids[j]), s
-            elif (not math.isnan(best_sim)) and s > best_sim:
-                best_cid, best_sim = int(cids[j]), s
-        return best_cid if best_cid is not None else int(cids[0])
 
-    def _assign(batches):
-        import pyarrow as pa
-        import pyarrow.compute  # noqa: F401 — pa.compute below
+def lloyd_means(assigned: DataFrame, *keys: str, vec_col: str) -> DataFrame:
+    """The Lloyd centroid update over ``assigned`` rows grouped by
+    ``keys``: per-dimension mean where the SUM runs on DECIMAL(25,12)
+    casts (order-independent under shuffle), divided in double and
+    rounded to 6 dp, gathered in dimension order as ``__newvec``.
 
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            va = batch.column(1)
-            if isinstance(va, pa.ChunkedArray):  # pragma: no cover
-                va = va.combine_chunks()
-            lengths = pa.compute.list_value_length(va)
-            flat = va.flatten()
-            regular = (
-                va.null_count == 0
-                and flat.null_count == 0
-                and pa.compute.min_max(lengths)["min"].as_py() == d
-                and pa.compute.min_max(lengths)["max"].as_py() == d
-            )
-            vmat = None
-            if regular:
-                vmat = (
-                    flat.to_numpy(zero_copy_only=False)
-                    .astype(np.float64, copy=False)
-                    .reshape(n, d)
-                )
-                if not np.isfinite(vmat).all():
-                    regular = False
-            if regular:
-                vnorm = np.zeros(n, dtype=np.float64)
-                for i in range(d):
-                    x = vmat[:, i]
-                    vnorm += x * x
-                vnorm = np.sqrt(vnorm)
-                dots = np.zeros((n, k), dtype=np.float64)
-                for i in range(d):
-                    # dim-i product joins every (vector, centroid)
-                    # partial sum — the fold's left-to-right order
-                    dots += np.multiply.outer(vmat[:, i], cmat[:, i])
-                den = np.multiply.outer(vnorm, cnorm)
-                valid = den != 0.0
-                with np.errstate(
-                    divide="ignore", invalid="ignore", over="ignore"
-                ):
-                    sims = np.where(valid, dots / np.where(valid, den, 1.0), 0.0)
-                if not np.isfinite(sims[valid]).all():
-                    # ±inf/±inf -> NaN needs Spark's NaN-largest
-                    # comparator — route through the exact row replica
-                    regular = False
-            if regular:
-                best_cid = np.full(n, cids[0], dtype=np.int64)
-                best_sim = np.full(n, -np.inf, dtype=np.float64)
-                has = np.zeros(n, dtype=bool)
-                for j in range(k):  # ascending cid; strict > keeps ties low
-                    s = sims[:, j]
-                    v = valid[:, j]
-                    take = v & (~has | (s > best_sim))
-                    best_cid[take] = cids[j]
-                    best_sim[take] = s[take]
-                    has |= v
-                out_cid = pa.array(best_cid, type=pa.int64())
-            else:
-                out_cid = pa.array(
-                    [_slow_row(v) for v in va.to_pylist()], type=pa.int64()
-                )
-            yield pa.record_batch(
-                [batch.column(0), batch.column(1), out_cid],
-                names=[id_col, vec_col, "__cid"],
-            )
-
-    return src.mapInArrow(_assign, out_schema)
+    The mean stays the posexplode -> (keys, dim) keyed aggregate: an
+    A/B of the per-dimension COLUMN aggregate (d decimal sum buffers
+    in one hash aggregate) measured 1.6-3.7x SLOWER — Spark's
+    high-precision decimal aggregation buffers are variable-length, so
+    wide many-buffer rows pay per-update copying the one-buffer
+    exploded shape never does."""
+    return (
+        assigned.select(*keys, F.posexplode(vec_col).alias("__dim", "__x"))
+        .groupBy(*keys, "__dim")
+        .agg(
+            F.sum(F.col("__x").cast("decimal(25,12)")).alias("__s"),
+            F.count(F.lit(1)).alias("__n"),
+        )
+        .select(
+            *keys,
+            "__dim",
+            F.round(F.col("__s").cast("double") / F.col("__n"), 6).alias(
+                "__mean"
+            ),
+        )
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("__dim", "__mean"))),
+                lambda s: s["__mean"],
+            ).alias("__newvec")
+        )
+    )
 
 
 def lloyd_centroids(
@@ -614,10 +518,9 @@ def lloyd_centroids(
 
     - init = the ``n_centroids`` lowest-id vectors (no RNG);
     - assignment = argmax cosine with ties broken on centroid id;
-    - centroid update = per-dimension mean where the SUM runs on
-      DECIMAL(25,12) casts (order-independent under shuffle), divided
-      in double and rounded to 6 dp — so both engines hold bit-identical
-      centroid arrays going into the next iteration;
+    - centroid update = ``lloyd_means`` (decimal-exact sums, 6-dp
+      means) — so both engines hold bit-identical centroid arrays
+      going into the next iteration;
     - a centroid that loses every member keeps its previous position.
 
     Each iteration is one corpus pass (broadcast k·d centroid state,
@@ -659,28 +562,7 @@ def lloyd_centroids(
     for _ in range(n_iter):
         cents = local_frame(sess, state, schema)
         assigned = assign_to_centroids(ed, cents, id_col, "__v")
-        means = (
-            assigned.select("__cid", F.posexplode("__v").alias("__dim", "__x"))
-            .groupBy("__cid", "__dim")
-            .agg(
-                F.sum(F.col("__x").cast("decimal(25,12)")).alias("__s"),
-                F.count(F.lit(1)).alias("__n"),
-            )
-            .select(
-                "__cid",
-                "__dim",
-                F.round(
-                    F.col("__s").cast("double") / F.col("__n"), 6
-                ).alias("__m"),
-            )
-            .groupBy("__cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("__dim", "__m"))),
-                    lambda s: s["__m"],
-                ).alias("__newvec")
-            )
-        )
+        means = lloyd_means(assigned, "__cid", vec_col="__v")
         # O(k·d) driver metadata: the new centroid positions
         new = {
             int(r["__cid"]): list(r["__newvec"]) for r in means.collect()

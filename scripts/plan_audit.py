@@ -14,12 +14,17 @@ driver-held rows belong in ``frames.local_frame``) — so a refactor that silent
 degrades a plan shows up as a table diff, not a slow bench three rounds
 later. Streaming replays are skipped (their plan is per-micro-batch).
 
-Usage: python scripts/plan_audit.py [sf_dir]   (default sf0.001)
+Usage:
+      python scripts/plan_audit.py [sf_dir]          # regenerate
+      python scripts/plan_audit.py --check [sf_dir]  # exit 1 if stale
+  (sf_dir defaults to sf0.001)
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
+import difflib
 import io
 import os
 import re
@@ -53,9 +58,12 @@ def audit(plan: str) -> dict:
     }
 
 
-def main() -> int:
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark("plan_audit")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+OUT_PATH = os.path.join(REPO, "PLAN_AUDIT.md")
+
+
+def build(spark, sf: str) -> str:
+    """The PLAN_AUDIT.md text for every batch query over ``sf``."""
     rows = []
     for name, fn in entrypoint.queries().items():
         if name.startswith("st") and name[2:3].isdigit():
@@ -99,13 +107,52 @@ def main() -> int:
         f"CartesianProduct present in {len(cart)} ({cart or 'none'}); "
         f"Python-list scans in {len(py_rdd)} ({py_rdd or 'none'})."
     )
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(here, "PLAN_AUDIT.md"), "w") as f:
-        f.write("\n".join(out) + "\n")
-    print(f"wrote PLAN_AUDIT.md ({len(rows)} queries)")
-    spark.stop()
+    return "\n".join(out) + "\n"
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(
+        description="Regenerate PLAN_AUDIT.md, or check it is fresh."
+    )
+    ap.add_argument(
+        "--check",
+        action="store_true",
+        help="exit 1 and print the differing rows if the committed "
+        "audit is stale; write nothing",
+    )
+    ap.add_argument(
+        "sf_dir", nargs="?", default="/root/testdata/sf0.001",
+        help="table directory the plans are built over (default sf0.001)",
+    )
+    args = ap.parse_args(argv)
+    spark = get_spark("plan_audit")
+    try:
+        content = build(spark, args.sf_dir)
+    finally:
+        spark.stop()
+    if args.check:
+        try:
+            with open(OUT_PATH) as fh:
+                current = fh.read()
+        except OSError:
+            current = ""
+        if current == content:
+            return 0
+        diff = difflib.unified_diff(
+            current.splitlines(), content.splitlines(),
+            "PLAN_AUDIT.md (committed)", "PLAN_AUDIT.md (built)",
+            lineterm="", n=0,
+        )
+        sys.stderr.write(
+            "\n".join(diff) + "\nPLAN_AUDIT.md is stale — rerun "
+            "python scripts/plan_audit.py\n"
+        )
+        return 1
+    with open(OUT_PATH, "w") as fh:
+        fh.write(content)
+    print(f"wrote {OUT_PATH}")
     return 0
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    raise SystemExit(main())

@@ -163,6 +163,9 @@ EMPTY_TABLE_CASES = [
     ("pk02_packing_export", "documents"),
     # the replay's watermark advancer is max(ts) + 1h, and max(ts) is NULL
     ("st13_left_outer_attribution", "events"),
+    # the greedy rounds' seed was the first row of an empty collect;
+    # the twin gives one (round, NULL, NULL) row per round
+    ("ss09_kcenter_coreset", "embeddings"),
 ]
 
 
@@ -172,7 +175,8 @@ EMPTY_TABLE_CASES = [
 )
 def test_empty_table_parity(spark, tmp_path_factory, name, table):
     """A 0-row copy of the sf0.001 table (same footer schema) gives the
-    DuckDB twin's answer — no rows — instead of an engine error."""
+    DuckDB twin's answer — no rows, or ss09's all-NULL rounds — instead
+    of an engine error."""
     import pyarrow.parquet as pq
 
     duckdb = pytest.importorskip("duckdb")
@@ -194,7 +198,7 @@ def test_empty_table_parity(spark, tmp_path_factory, name, table):
         odf = con.execute(ORACLES[name]).fetchdf()
     finally:
         con.close()
-    assert len(sdf) == 0
+    assert len(sdf) == len(odf)
     problems = [
         p for p in compare(f"{name}:empty", sdf, odf)
         if not p.startswith("dtype ")

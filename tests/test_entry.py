@@ -229,6 +229,49 @@ def test_coverage_matrix_bad_or_help_argument_writes_nothing(argv, capsys):
         assert fh.read() == before
 
 
+@pytest.mark.parametrize("argv", [["--chek"], ["--help"]])
+def test_plan_audit_bad_or_help_argument_writes_nothing(argv, capsys):
+    """The plan audit's CLI: a typo exits non-zero and --help exits
+    after printing usage, both before any plan is built and leaving
+    PLAN_AUDIT.md byte-identical."""
+    import scripts.plan_audit as pa
+
+    with open(pa.OUT_PATH, "rb") as fh:
+        before = fh.read()
+    with pytest.raises(SystemExit) as exc:
+        pa.main(argv)
+    assert (exc.value.code != 0) == (argv == ["--chek"])
+    out = capsys.readouterr()
+    assert "--check" in out.out + out.err
+    with open(pa.OUT_PATH, "rb") as fh:
+        assert fh.read() == before
+
+
+def test_plan_audit_check_prints_differing_rows(monkeypatch, capsys):
+    """`--check` against a built table that differs in one row exits 1,
+    names that row on both sides, and writes nothing; an identical
+    table exits 0."""
+    import types
+
+    import scripts.plan_audit as pa
+
+    with open(pa.OUT_PATH) as fh:
+        committed = fh.read()
+    row = next(ln for ln in committed.splitlines() if ln.startswith("| es18"))
+    built = committed.replace(row, row + " drift")
+    monkeypatch.setattr(
+        pa, "get_spark", lambda name: types.SimpleNamespace(stop=lambda: None)
+    )
+    monkeypatch.setattr(pa, "build", lambda spark, sf: built)
+    assert pa.main(["--check"]) == 1
+    err = capsys.readouterr().err
+    assert f"-{row}\n" in err and f"+{row} drift\n" in err
+    with open(pa.OUT_PATH) as fh:
+        assert fh.read() == committed
+    monkeypatch.setattr(pa, "build", lambda spark, sf: committed)
+    assert pa.main(["--check"]) == 0
+
+
 def test_coverage_matrix_check_reports_deleted_pinned_record(
     monkeypatch, capsys
 ):

@@ -1,6 +1,6 @@
 """Round-14 optimization invariants.
 
-The dd13 vectorized pair kernel (_dd13_cluster_pair_dots) must be
+The dd13 vectorized pair kernel (kernels.dd13_pair_dots) must be
 BIT-identical to the certified join+fold shape it replaced: same pair
 set, same raw dot and norm-product doubles (the per-dimension Gram
 accumulation reproduces the fold's left-to-right order). The
@@ -15,10 +15,10 @@ import struct
 from pyspark.sql import functions as F
 
 from local_etl_csv_to_postgresql_spark.functions import similarity as sim
-from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-    SEMDEDUP_K,
-    _dd13_cluster_pair_dots,
-    _pq_kernel,
+from local_etl_csv_to_postgresql_spark.functions.entrypoints import SEMDEDUP_K
+from local_etl_csv_to_postgresql_spark.functions.kernels import (
+    dd13_pair_dots,
+    pq_kernel,
 )
 from local_etl_csv_to_postgresql_spark.plans.analytics import load
 
@@ -78,7 +78,7 @@ def test_dd13_pair_kernel_bit_identical_to_fold(spark):
     for pdf in (
         assigned.toPandas().groupby("__cid", sort=False)
     ):
-        out = _dd13_cluster_pair_dots(pdf[1])
+        out = dd13_pair_dots(pdf[1])
         ids = sorted(pdf[1]["vec_id"].tolist())
         # reconstruct ida from the triu order the kernel emits
         import numpy as np
@@ -158,17 +158,13 @@ def test_assignment_arrow_kernel_matches_fold(spark):
     }
     ref = {
         r["vec_id"]: r["__cid"]
-        for r in _assign_via_fold(
-            df, cents, "vec_id", "embedding", None
-        ).collect()
+        for r in _assign_via_fold(df, cents, "vec_id", "embedding").collect()
     }
     assert got == ref
     # empty centroid panel -> empty result on both strategies
     empty = cents.filter("__cid < 0")
     assert _assign_via_arrow(df, empty, "vec_id", "embedding").count() == 0
-    assert (
-        _assign_via_fold(df, empty, "vec_id", "embedding", None).count() == 0
-    )
+    assert _assign_via_fold(df, empty, "vec_id", "embedding").count() == 0
 
 
 def test_pq_kernel_regular_batch_of_another_width_takes_the_fold_answer():
@@ -190,7 +186,7 @@ def test_pq_kernel_regular_batch_of_another_width_takes_the_fold_answer():
             ],
             names=["vec_id", "label", "__m", "__sv"],
         )
-        (out,) = list(_pq_kernel(codebooks, True)([batch]))
+        (out,) = list(pq_kernel(codebooks, True)([batch]))
         return list(zip(out.column(4).to_pylist(), out.column(5).to_pylist()))
 
     assert run([[0.0, 1.0, 2.0], [3.0, 0.0, 0.0]]) == [(3, None), (3, None)]
