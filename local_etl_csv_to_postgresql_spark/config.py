@@ -82,9 +82,9 @@ class WarehouseConfig:
     """Where and how the star schema is persisted.
 
     ``path`` is the warehouse root; each table lives at ``<path>/<table>``
-    as parquet. The fact table is partitioned by ``year_month`` (derived
-    from date_key) so date-range queries prune partitions — the Spark
-    replacement for the reference's B-tree date indexes
+    as parquet. The fact table is flat and range-clustered on date_key,
+    so parquet min/max statistics skip files for date-range predicates —
+    the Spark replacement for the reference's B-tree date indexes
     (sql/schema.sql:229-242). Every successful load records a snapshot
     manifest (``Warehouse.snapshot``).
     """

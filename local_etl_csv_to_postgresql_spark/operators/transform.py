@@ -54,16 +54,15 @@ class TransformResult:
 def clean_transactions(df: DataFrame) -> DataFrame:
     """Cleaning stage (reference src/transform.py:127-170): trim all
     string columns (F4), standardize category/merchant/payment (F1-F3),
-    keep-first dedup on transaction_id (D1)."""
-    out = df
-    for c, dtype in df.dtypes:
-        if dtype == "string":
-            out = out.withColumn(c, F.trim(F.col(c)))
-    out = (
-        out.withColumn("category", standardize_category("category"))
-        .withColumn("merchant", standardize_merchant("merchant"))
-        .withColumn("payment_method", standardize_payment_method("payment_method"))
-    )
+    keep-first dedup on transaction_id (D1). One projection per step:
+    a ``withColumn`` chain would re-analyze the growing plan per column."""
+    out = df.withColumns(
+        {c: F.trim(F.col(c)) for c, dtype in df.dtypes if dtype == "string"}
+    ).withColumns({
+        "category": standardize_category("category"),
+        "merchant": standardize_merchant("merchant"),
+        "payment_method": standardize_payment_method("payment_method"),
+    })
     return keep_first_dedup(out, ["transaction_id"])
 
 

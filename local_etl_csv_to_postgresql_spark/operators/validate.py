@@ -88,16 +88,16 @@ def validate_transactions(
     cfg = cfg or ValidationConfig()
     rules = _rule_columns(cfg)
 
-    flagged = df
-    for name, pred in rules.items():
-        # null predicate (e.g. isin on a null) counts as not-violating
-        # except for the explicit null rule — coalesce to False.
-        flagged = flagged.withColumn(f"__v_{name}", F.coalesce(pred, F.lit(False)))
+    # one projection for the rule flags, one for is_valid over them.
+    # A null predicate (e.g. isin on a null) counts as not-violating
+    # except for the explicit null rule — coalesce to False.
+    flagged = df.withColumns(
+        {f"__v_{n}": F.coalesce(pred, F.lit(False)) for n, pred in rules.items()}
+    )
     violation_cols = [f"__v_{n}" for n in rules]
     flagged = flagged.withColumn(
         "is_valid", ~F.greatest(*[F.col(c) for c in violation_cols])
-    )
-    flagged = flagged.persist()
+    ).persist()
 
     # ONE job for input count + every rule count + valid count.
     aggs = [F.count(F.lit(1)).alias("__total"), F.sum(F.col("is_valid").cast("long")).alias("__valid")]
@@ -117,9 +117,11 @@ def validate_transactions(
     valid = (
         flagged.filter("is_valid")
         .drop(*violation_cols, "is_valid")
-        .withColumn("date", F.try_to_date("date"))
-        .withColumn("amount", F.round(F.col("amount").try_cast("double"), 2))
-        .withColumn("user_id", F.col("user_id").try_cast("int"))
+        .withColumns({
+            "date": F.try_to_date("date"),
+            "amount": F.round(F.col("amount").try_cast("double"), 2),
+            "user_id": F.col("user_id").try_cast("int"),
+        })
     )
     invalid = (
         flagged.filter(~F.col("is_valid"))

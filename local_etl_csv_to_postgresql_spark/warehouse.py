@@ -9,11 +9,18 @@ Reference parity (SURVEY §2.1/§2.5, src/load.py):
 - load stats contract                                            :729-740
 
 Spark-first design:
-- Tables are parquet directories under ``WarehouseConfig.path``; the
-  fact table is partitioned by ``year_month`` so date-range predicates
-  prune files (replaces the reference's B-tree date indexes). Reads use
-  the declared schemas (``schemas.py``), so opening a table starts no
-  footer-inference job; ``verify_schema`` alone infers, to check them.
+- Tables are parquet directories under ``WarehouseConfig.path``. The
+  fact table is flat and range-clustered on ``date_key``: each write
+  sorts its rows into files that cover disjoint ``date_key`` ranges, so
+  the parquet min/max statistics skip row groups for date-range
+  predicates (the reference's B-tree date indexes, sql/schema.sql
+  :229-242), and AQE sizes the files, one per batch at 10k rows. Reads
+  use the declared schemas (``schemas.py``), so opening a table starts
+  no footer-inference job; ``verify_schema`` alone infers, to check them.
+- One writer per warehouse: ``load_warehouse`` holds an exclusive
+  ``flock`` on ``<path>/_load.lock``, so a concurrent load fails loudly
+  instead of reusing the same surrogate-key offset (the reference had
+  PostgreSQL's UNIQUE constraints for that).
 - "ON CONFLICT DO NOTHING" becomes the idempotent-append protocol: a
   dimension appends its ``left_anti`` join against the stored natural
   keys; a fact batch carries an ``EXISTS`` flag against the stored
@@ -37,8 +44,12 @@ Spark-first design:
 
 from __future__ import annotations
 
+import fcntl
+import glob
+import json
 import os
 import shutil
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -82,22 +93,20 @@ class Warehouse:
     def exists(self, table: str) -> bool:
         p = self._path(table)
         return os.path.isdir(p) and any(
-            f.endswith(".parquet") or f == "_SUCCESS" or f.startswith("year_month=")
-            for f in os.listdir(p)
+            f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(p)
         )
+
+    def _schema(self, table: str):
+        if table == self.cfg.fact_table:
+            return FACT_TRANSACTIONS_SCHEMA
+        return DIMENSIONS[table]
 
     def read(self, table: str) -> DataFrame:
         """``table`` with its declared schema: no job reads parquet
-        footers to infer one, and the fact's ``year_month`` directories
-        are still discovered as its partition column."""
+        footers to infer one."""
         if not self.exists(table):
             raise LoadError(f"Table does not exist: {table}")
-        schema = (
-            FACT_TRANSACTIONS_SCHEMA
-            if table == self.cfg.fact_table
-            else DIMENSIONS[table]
-        )
-        return self.spark.read.schema(schema).parquet(self._path(table))
+        return self.spark.read.schema(self._schema(table)).parquet(self._path(table))
 
     def drop_all(self) -> None:
         if os.path.isdir(self.cfg.path):
@@ -250,66 +259,70 @@ class Warehouse:
         transaction_id column (column pruning) and is a broadcast
         existence join while the stored ids are small; past that it
         shuffles on transaction_id. At 100 TB it should be narrowed
-        first: the fact table is month-partitioned, so the probe can be
-        partition-pruned to the batch's date_key range.
+        first: the fact files are range-clustered on date_key, so a
+        filter on the batch's date_key range skips the other files'
+        row groups through their min/max statistics.
         """
         inserted = total - seen
         if inserted:
             mode = "append" if self.exists(self.cfg.fact_table) else "overwrite"
-            self._write_fact(
-                enriched.filter(~F.col("__seen")).drop("__seen"), mode=mode
-            )
+            rows = enriched.filter(~F.col("__seen")).drop("__seen")
+            self._write_fact(rows, self._path(self.cfg.fact_table), mode)
+            if self.cfg.jdbc_url:
+                self._jdbc_write(rows, self.cfg.fact_table, mode)
         return inserted, seen
 
     # -- writers -----------------------------------------------------------
 
-    def _write_fact(self, df: DataFrame, mode: str = "overwrite") -> None:
-        # repartitioning on the partition column yields one file per
-        # month per batch; without it every shuffle task writes a sliver
-        # into every month dir (776 files for a 3k-row load). The fixed
-        # partition count keeps AQE from coalescing the shuffle into one
-        # task that writes every month alone: months spread over the
-        # session's shuffle partitions and write in parallel.
-        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        (
-            df.withColumn("year_month", (F.col("date_key") / 100).cast("int"))
-            .repartition(n, F.col("year_month"))
-            .write.mode(mode)
-            .partitionBy("year_month")
-            .parquet(self._path(self.cfg.fact_table))
+    def _write_fact(self, df: DataFrame, path: str, mode: str) -> None:
+        """The fact table's one layout: flat parquet, range-partitioned
+        on date_key. Each file of one write covers its own date_key
+        range; AQE merges adjacent small ranges, so a 10k-row batch
+        writes one file and no write exceeds
+        ``spark.sql.shuffle.partitions`` files. Loads append through it;
+        ``compact_fact`` rewrites the table through it."""
+        df.repartitionByRange("date_key").write.mode(mode).parquet(path)
+
+    def _partition_dirs(self, table: str) -> list[str]:
+        """Hive-style ``name=value`` directories under ``table``: the
+        month-partitioned layout older warehouses wrote the fact in."""
+        p = self._path(table)
+        if not os.path.isdir(p):
+            return []
+        return sorted(
+            f for f in os.listdir(p)
+            if "=" in f and os.path.isdir(os.path.join(p, f))
         )
-        if self.cfg.jdbc_url:
-            self._jdbc_write(df, self.cfg.fact_table, mode)
 
     def compact_fact(self) -> dict:
-        """Small-file compaction for the month-partitioned fact table:
-        rewrite with one file per partition via staging + publish swap.
+        """Small-file compaction: rewrite the whole fact table through
+        ``_write_fact`` via staging + publish swap.
 
-        Incremental appends leave one file per partition PER BATCH; after
-        many batches a 100 TB table degrades into millions of small files
-        and scan planning dominates query time. Compaction is the
-        standard maintenance pass (what table formats call OPTIMIZE),
-        expressed here with plain parquet: write compacted data to a
-        staging dir, then atomically swap directories — readers see the
-        old layout until the publish completes.
+        Every batch appends its own files; after many batches a 100 TB
+        table degrades into millions of small files and scan planning
+        dominates query time. Compaction is the standard maintenance
+        pass (what table formats call OPTIMIZE), expressed here with
+        plain parquet: write the rewritten data to a staging dir, then
+        swap directories — readers see the old files until the publish
+        completes. The rewrite is also the migration from the
+        month-partitioned layout: projecting the declared columns drops
+        the directory partition column.
         """
-        import glob
-        import shutil
-
         path = self._path(self.cfg.fact_table)
         count_files = lambda p: len(  # noqa: E731
             glob.glob(f"{p}/**/*.parquet", recursive=True)
         )
         before = count_files(path)
-        df = self.read(self.cfg.fact_table)
+        df = self.read(self.cfg.fact_table).select(
+            *FACT_TRANSACTIONS_SCHEMA.fieldNames()
+        )
         tmp = path + "__compacting"
-        df.repartition(F.col("year_month")).write.mode("overwrite").partitionBy(
-            "year_month"
-        ).parquet(tmp)
-        old = path + "__old"
-        shutil.move(path, old)
-        shutil.move(tmp, path)
-        shutil.rmtree(old)
+        with self._single_writer():
+            self._write_fact(df, tmp, "overwrite")
+            old = path + "__old"
+            shutil.move(path, old)
+            shutil.move(tmp, path)
+            shutil.rmtree(old)
         # the swap happened outside Spark's writers: drop any cached
         # plans/listings pinned to the pre-compaction file set, else a
         # frame cached over this path in the same session would recompute
@@ -350,9 +363,6 @@ class Warehouse:
         fresh dirs), so an old manifest's file list stays readable
         until a compaction rewrites the layout. Metadata-only: one JSON
         file, written atomically (tmp + rename); no data is copied."""
-        import glob
-        import json
-
         os.makedirs(self._snapshots_dir(), exist_ok=True)
         manifest: dict = {"tables": {}}
         for t in list(DIMENSIONS) + [self.cfg.fact_table]:
@@ -387,13 +397,8 @@ class Warehouse:
         return sorted(out)
 
     def read_version(self, table: str, version: int) -> DataFrame:
-        """Read ``table`` as of snapshot ``version`` — a scan restricted
-        to the manifest's file list. ``basePath`` keeps the fact's
-        ``year_month=`` directory partition column alive even though
-        individual files are enumerated, so version reads prune and
-        project exactly like current reads."""
-        import json
-
+        """Read ``table`` as of snapshot ``version`` — a scan of the
+        manifest's file list with the table's declared schema."""
         path = os.path.join(self._snapshots_dir(), f"v{version}.json")
         if not os.path.exists(path):
             raise LoadError(f"No snapshot v{version}")
@@ -413,16 +418,12 @@ class Warehouse:
                 f"{len(missing)} files removed by compaction — "
                 "historical versions do not survive a layout rewrite"
             )
-        return (
-            self.spark.read.option("basePath", root).parquet(*files)
-        )
+        return self.spark.read.schema(self._schema(table)).parquet(*files)
 
     def prune_invalid_snapshots(self) -> list[int]:
         """Drop manifests whose file lists no longer exist (a compaction
         rewrote the layout). Returns the pruned versions — the VACUUM
         analogue for this snapshot scheme."""
-        import json
-
         pruned = []
         for v in self.snapshots():
             path = os.path.join(self._snapshots_dir(), f"v{v}.json")
@@ -440,12 +441,41 @@ class Warehouse:
 
     # -- full load (phase 3 orchestration, src/load.py:703-913) ------------
 
+    @contextmanager
+    def _single_writer(self):
+        """Hold ``<path>/_load.lock`` exclusively, or raise at once.
+
+        Two loads at the same time would both take max(existing) as
+        their surrogate-key offset and both pass the fact's stored-id
+        test. ``flock`` belongs to the open file, so a second load fails
+        in another thread as in another process, and the kernel drops
+        the lock when its holder dies: no stale lock survives a crash.
+        """
+        os.makedirs(self.cfg.path, exist_ok=True)
+        fd = os.open(
+            os.path.join(self.cfg.path, "_load.lock"), os.O_RDWR | os.O_CREAT
+        )
+        try:
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
+                raise LoadError(
+                    f"Another writer holds the warehouse at {self.cfg.path}"
+                ) from None
+            yield
+        finally:
+            os.close(fd)
+
     def load_warehouse(self, tables: dict, seed_dates: tuple | None = None) -> LoadStats:
         """Load 5 dims then the enriched fact, with inserted/skipped
-        accounting. On any error the protocol stops; already-appended
-        dimension rows are idempotent on re-run (same natural keys skip),
-        which is how re-execution converges without cross-table
-        transactions.
+        accounting, as the warehouse's only writer (``_single_writer``).
+        On any error the protocol stops; already-appended dimension rows
+        are idempotent on re-run (same natural keys skip), which is how
+        re-execution converges without cross-table transactions.
+
+        A fact table still in the month-partitioned layout is refused
+        before anything is written: flat files appended next to its
+        partition directories would drop out of its reads.
 
         ``seed_dates=(start, end)``: seed the continuous calendar first
         if dim_date doesn't exist — inside the dim_date worker thread,
@@ -453,53 +483,61 @@ class Warehouse:
         running as a sequential pre-step. Seeded rows are setup, not
         batch data: they are excluded from ``dims_inserted`` (same
         accounting as the former pipeline-level pre-seed)."""
-        stats = LoadStats()
-
-        def _load_dim_date() -> int:
-            if seed_dates is not None and not self.exists("dim_date"):
-                self.seed_dim_date(*seed_dates)
-            return self.load_dim_date(tables["dim_date"])
-
-        # the 5 dimension loads touch disjoint tables and share the
-        # batch's cached transform frame — run them as concurrent driver
-        # threads so their (small) Spark jobs overlap instead of
-        # queueing. Wall time drops from sum to max; on a cluster the
-        # same pattern keeps executors busy while tiny dim jobs
-        # round-trip the scheduler. Spark's job scheduler is
-        # thread-safe, and block-level locking makes the concurrent
-        # first touch of the cache compute each partition once.
-        from concurrent.futures import ThreadPoolExecutor
-
-        dim_jobs = {
-            "dim_date": _load_dim_date,
-            **{
-                t: (
-                    lambda t=t: self.load_dimension(
-                        tables[t], t, NATURAL_KEYS[t], SURROGATE_KEYS[t]
-                    )
-                )
-                for t in (
-                    "dim_category",
-                    "dim_merchant",
-                    "dim_payment_method",
-                    "dim_user",
-                )
-            },
-        }
-        with ThreadPoolExecutor(max_workers=len(dim_jobs)) as pool:
-            futures = {t: pool.submit(fn) for t, fn in dim_jobs.items()}
-            for t, fut in futures.items():
-                stats.dims_inserted[t] = fut.result()
-        enriched, total, seen = self.enrich_fact(tables["fact_data"])
-        try:
-            stats.fact_inserted, stats.fact_skipped = self.load_fact(
-                enriched, total, seen
+        legacy = self._partition_dirs(self.cfg.fact_table)
+        if legacy:
+            raise LoadError(
+                f"Fact table {self._path(self.cfg.fact_table)} is in the "
+                f"month-partitioned layout ({legacy[0]}, ...); rewrite it "
+                "with Warehouse.compact_fact() before loading"
             )
-        finally:
-            enriched.unpersist()
-        stats.snapshot_version = self.snapshot()
-        stats.status = "success"
-        return stats
+        with self._single_writer():
+            stats = LoadStats()
+
+            def _load_dim_date() -> int:
+                if seed_dates is not None and not self.exists("dim_date"):
+                    self.seed_dim_date(*seed_dates)
+                return self.load_dim_date(tables["dim_date"])
+
+            # the 5 dimension loads touch disjoint tables and share the
+            # batch's cached transform frame — run them as concurrent driver
+            # threads so their (small) Spark jobs overlap instead of
+            # queueing. Wall time drops from sum to max; on a cluster the
+            # same pattern keeps executors busy while tiny dim jobs
+            # round-trip the scheduler. Spark's job scheduler is
+            # thread-safe, and block-level locking makes the concurrent
+            # first touch of the cache compute each partition once.
+            from concurrent.futures import ThreadPoolExecutor
+
+            dim_jobs = {
+                "dim_date": _load_dim_date,
+                **{
+                    t: (
+                        lambda t=t: self.load_dimension(
+                            tables[t], t, NATURAL_KEYS[t], SURROGATE_KEYS[t]
+                        )
+                    )
+                    for t in (
+                        "dim_category",
+                        "dim_merchant",
+                        "dim_payment_method",
+                        "dim_user",
+                    )
+                },
+            }
+            with ThreadPoolExecutor(max_workers=len(dim_jobs)) as pool:
+                futures = {t: pool.submit(fn) for t, fn in dim_jobs.items()}
+                for t, fut in futures.items():
+                    stats.dims_inserted[t] = fut.result()
+            enriched, total, seen = self.enrich_fact(tables["fact_data"])
+            try:
+                stats.fact_inserted, stats.fact_skipped = self.load_fact(
+                    enriched, total, seen
+                )
+            finally:
+                enriched.unpersist()
+            stats.snapshot_version = self.snapshot()
+            stats.status = "success"
+            return stats
 
     # -- schema verification (reference sql/verify_schema.sql) -------------
 
@@ -533,8 +571,6 @@ class Warehouse:
             have = {(f.name, f.dataType.simpleString()) for f in stored.fields}
             extra = {n for n, _ in have - want}
             missing = {n for n, _ in want - have}
-            # the fact's partition column is layout, not schema drift
-            extra -= {"year_month"}
             if extra or missing:
                 rows.append((
                     "columns", table, "fail",

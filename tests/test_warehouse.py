@@ -182,8 +182,7 @@ def test_verify_schema_reads_the_stored_columns(spark, wh):
 
 def test_read_starts_no_job(spark, wh, valid_rows):
     """Opening a stored table reads no parquet footers: the declared
-    schema stands in for inference, and the fact's partition column is
-    still discovered from its directories."""
+    schema stands in for inference and equals the inferred one."""
     _load(spark, wh, valid_rows)
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     before = dag.nextJobId()
@@ -202,7 +201,7 @@ def test_stored_duplicate_id_is_skipped_once(spark, wh, valid_rows):
     import shutil
 
     _load(spark, wh, valid_rows[:1])
-    part = glob.glob(f"{wh._path('fact_transactions')}/year_month=*/*.parquet")[0]
+    part = glob.glob(f"{wh._path('fact_transactions')}/*.parquet")[0]
     shutil.copy(part, part.replace("part-", "part-copy-"))
     assert wh.read("fact_transactions").count() == 2  # t1 stored twice
 
@@ -213,9 +212,8 @@ def test_stored_duplicate_id_is_skipped_once(spark, wh, valid_rows):
 
 
 def test_compact_fact_merges_per_batch_files(spark, tmp_path):
-    """Three incremental loads leave >=3 files in a touched month
-    partition; compaction rewrites to one file per partition while
-    preserving row count and content."""
+    """Three incremental loads leave one file each; compaction rewrites
+    them into fewer files, still flat, preserving row count and content."""
     from local_etl_csv_to_postgresql_spark.config import (
         EngineConfig,
         WarehouseConfig,
@@ -242,12 +240,8 @@ def test_compact_fact_merges_per_batch_files(spark, tmp_path):
     assert stats["files_after"] < stats["files_before"]
     after = wh.read(cfg.warehouse.fact_table)
     assert after.count() == before_rows
-    # one file per month partition after compaction
-    import glob
-
     root = f"{cfg.warehouse.path}/{cfg.warehouse.fact_table}"
-    for part_dir in glob.glob(f"{root}/year_month=*"):
-        assert len(glob.glob(f"{part_dir}/*.parquet")) == 1
+    assert not [f for f in os.listdir(root) if f.startswith("year_month=")]
 
 
 def test_quarantine_captures_rejects_with_rule_labels(spark, tmp_path):
@@ -287,7 +281,7 @@ def test_quarantine_captures_rejects_with_rule_labels(spark, tmp_path):
 def test_snapshot_time_travel_across_incremental_loads(spark, tmp_path):
     """Two incremental loads -> two snapshot versions; v1 reads the
     first batch's fact state, v2 both; dims stay readable at both
-    versions; the partition column survives file-list reads; and
+    versions; file-list reads return the declared columns; and
     compaction prunes the invalidated manifests."""
     import datetime as dt
 
@@ -299,6 +293,7 @@ def test_snapshot_time_travel_across_incremental_loads(spark, tmp_path):
         transform_transactions,
     )
     from local_etl_csv_to_postgresql_spark.warehouse import LoadError, Warehouse
+    from local_etl_csv_to_postgresql_spark.schemas import FACT_TRANSACTIONS_SCHEMA
     from tests.conftest import COLUMNS
 
     def batch(ids):
@@ -326,7 +321,7 @@ def test_snapshot_time_travel_across_incremental_loads(spark, tmp_path):
     v2 = wh.read_version("fact_transactions", 2)
     assert v1.count() == 3
     assert v2.count() == 8
-    assert "year_month" in v1.columns  # basePath keeps the partition col
+    assert v1.columns == FACT_TRANSACTIONS_SCHEMA.fieldNames()
     assert wh.read_version("dim_category", 1).count() >= 1
 
     # compaction rewrites the fact layout -> old manifests prune
@@ -337,3 +332,207 @@ def test_snapshot_time_travel_across_incremental_loads(spark, tmp_path):
     # post-compaction snapshot works again
     v3 = wh.snapshot()
     assert wh.read_version("fact_transactions", v3).count() == 8
+
+
+def _generated_batch(spark, n, seed):
+    from local_etl_csv_to_postgresql_spark.sources.generator import (
+        generate_transactions,
+    )
+
+    return spark.createDataFrame(
+        [{k: str(v) for k, v in r.items()}
+         for r in generate_transactions(n, 10, 1, seed=seed)]
+    )
+
+
+def _date_key_ranges(root):
+    """(min, max) date_key of each parquet file under ``root``, read
+    from the footers' row-group statistics."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in sorted(glob.glob(f"{root}/*.parquet")):
+        meta = pq.ParquetFile(f).metadata
+        col = meta.schema.names.index("date_key")
+        stats = [meta.row_group(i).column(col).statistics
+                 for i in range(meta.num_row_groups)]
+        out.append((min(s.min for s in stats), max(s.max for s in stats)))
+    return out
+
+
+def test_fact_layout_is_date_clustered(spark, wh):
+    """Each load appends flat parquet, one file per batch at this scale,
+    with no partition directories; a write that spans several files
+    gives each its own date_key range, so footer min/max statistics
+    can skip files for date-range predicates."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    wh.seed_dim_date(dt.date(2022, 1, 1), dt.date(2026, 12, 31))
+    for seed in (1, 2):
+        res = transform_transactions(_generated_batch(spark, 300, seed))
+        try:
+            wh.load_warehouse(res.tables)
+        finally:
+            res.release()
+    root = wh._path("fact_transactions")
+    assert not [f for f in os.listdir(root) if "=" in f]
+    assert 1 <= len(_date_key_ranges(root)) <= 2
+    rows = sorted(wh.read("fact_transactions").collect())
+
+    # one write over several files: turn off AQE's coalescing so the
+    # rewrite keeps every range partition as its own file
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(key, "false")
+    try:
+        wh.compact_fact()
+    finally:
+        spark.conf.set(key, "true")
+    ranges = sorted(_date_key_ranges(root))
+    assert len(ranges) >= 2
+    assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:])), ranges
+    assert sorted(wh.read("fact_transactions").collect()) == rows
+    lo, hi = ranges[1]
+    n = wh.read("fact_transactions").where(F.col("date_key").between(lo, hi)).count()
+    assert n == sum(lo <= r["date_key"] <= hi for r in rows)
+
+
+def test_date_key_filter_is_pushed_to_the_fact_scan(spark, wh, valid_rows):
+    from pyspark.sql import functions as F
+
+    _load(spark, wh, valid_rows)
+    df = wh.read("fact_transactions").where(
+        F.col("date_key").between(20230601, 20230616)
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    scan = next(l for l in plan.splitlines() if "PushedFilters" in l)
+    assert "GreaterThanOrEqual(date_key,20230601)" in scan
+    assert "LessThanOrEqual(date_key,20230616)" in scan
+    assert sorted(r["transaction_id"] for r in df.collect()) == ["t1", "t2"]
+
+
+def test_month_partitioned_fact_is_refused_until_compacted(spark, wh, valid_rows):
+    """A fact table written in the old ``year_month=`` layout fails the
+    load before anything is written (a flat append next to partition
+    directories would drop out of reads), fails verify_schema's columns
+    check, and ``compact_fact`` migrates it with every row."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from local_etl_csv_to_postgresql_spark.schemas import FACT_TRANSACTIONS_SCHEMA
+
+    _load(spark, wh, valid_rows)
+    root = wh._path("fact_transactions")
+    stored = spark.createDataFrame(
+        wh.read("fact_transactions").collect(), FACT_TRANSACTIONS_SCHEMA
+    )
+    shutil.rmtree(root)
+    stored.withColumn("year_month", (F.col("date_key") / 100).cast("int")).write.partitionBy(
+        "year_month"
+    ).parquet(root)
+
+    def files():
+        return sorted(
+            os.path.join(d, f) for d, _, names in os.walk(wh.cfg.path) for f in names
+        )
+
+    before = files()
+    new_rows = valid_rows + [
+        ["t4", "2023-07-18", "Healthcare", "75.00", "Clinic D", "Digital Wallet", "4"],
+    ]
+    with pytest.raises(LoadError, match=r"month-partitioned.*compact_fact\(\)"):
+        _load(spark, wh, new_rows)
+    assert files() == before
+
+    report = {(r["check_type"], r["table_name"]): r
+              for r in wh.verify_schema().collect()}
+    columns = report[("columns", "fact_transactions")]
+    assert columns["status"] == "fail" and "year_month" in columns["detail"]
+
+    wh.compact_fact()
+    assert not [f for f in os.listdir(root) if f.startswith("year_month=")]
+    assert sorted(wh.read("fact_transactions").collect()) == sorted(stored.collect())
+    stats = _load(spark, wh, new_rows)
+    assert (stats.fact_inserted, stats.fact_skipped) == (1, 3)
+    report = {(r["check_type"], r["table_name"]): r["status"]
+              for r in wh.verify_schema().collect()}
+    assert report[("columns", "fact_transactions")] == "pass"
+
+
+def test_held_lock_fails_the_load_and_writes_nothing(spark, tmp_path):
+    import fcntl
+
+    from local_etl_csv_to_postgresql_spark.config import EngineConfig
+    from local_etl_csv_to_postgresql_spark.pipeline import run_etl_pipeline
+    from local_etl_csv_to_postgresql_spark.sources.generator import (
+        generate_transactions,
+        write_transactions_csv,
+    )
+
+    csv = str(tmp_path / "tx.csv")
+    write_transactions_csv(csv, generate_transactions(100, 10, 1, seed=3))
+    cfg = EngineConfig(warehouse=WarehouseConfig(path=str(tmp_path / "wh")))
+    os.makedirs(cfg.warehouse.path)
+    fd = os.open(os.path.join(cfg.warehouse.path, "_load.lock"), os.O_RDWR | os.O_CREAT)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        res = run_etl_pipeline(spark, csv, cfg)
+        assert res.status == "failed"
+        assert cfg.warehouse.path in res.error
+        assert os.listdir(cfg.warehouse.path) == ["_load.lock"]
+    finally:
+        os.close(fd)
+    res = run_etl_pipeline(spark, csv, cfg)
+    assert res.status == "success" and res.loaded_rows == 100
+
+
+def test_concurrent_loads_one_fails_and_no_key_repeats(spark, tmp_path):
+    """Two loads of different batches at the same time: one holds the
+    warehouse, the other fails at once, and no key is stored twice."""
+    import datetime as dt
+    import threading
+
+    from pyspark.sql import functions as F
+
+    from local_etl_csv_to_postgresql_spark.schemas import NATURAL_KEYS, SURROGATE_KEYS
+
+    cfg = WarehouseConfig(path=str(tmp_path / "wh"))
+    batches = [transform_transactions(_generated_batch(spark, 200, s)) for s in (4, 5)]
+    start = threading.Barrier(2)
+    outcome: dict = {}
+
+    def load(i):
+        start.wait()
+        try:
+            outcome[i] = Warehouse(spark, cfg).load_warehouse(
+                batches[i].tables, seed_dates=(dt.date(2022, 1, 1), dt.date(2026, 12, 31))
+            )
+        except LoadError as e:
+            outcome[i] = e
+
+    threads = [threading.Thread(target=load, args=(i,)) for i in range(2)]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+    finally:
+        for b in batches:
+            b.release()
+    failed = [i for i, o in outcome.items() if isinstance(o, LoadError)]
+    assert len(failed) == 1, outcome
+    assert cfg.path in str(outcome[failed[0]])
+    assert outcome[1 - failed[0]].status == "success"
+
+    wh = Warehouse(spark, cfg)
+    unique = {t: (NATURAL_KEYS[t], SURROGATE_KEYS[t]) for t in NATURAL_KEYS}
+    unique["dim_date"] = ("date_key",)
+    unique["fact_transactions"] = ("transaction_id",)
+    for table, keys in unique.items():
+        for k in keys:
+            n, d = wh.read(table).agg(F.count(k), F.countDistinct(k)).first()
+            assert n == d > 0, (table, k)
