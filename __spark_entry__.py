@@ -176,22 +176,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q00_pricing_summary": flagship_pricing_summary,
     }
     out.update(RELATIONAL_QUERIES)
-    try:
-        from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-            EXTENSION_QUERIES,
-        )
+    from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
+        EXTENSION_QUERIES,
+    )
+    from local_etl_csv_to_postgresql_spark.streaming.queries import (
+        STREAMING_QUERIES,
+    )
 
-        out.update(EXTENSION_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from local_etl_csv_to_postgresql_spark.streaming.queries import (
-            STREAMING_QUERIES,
-        )
-
-        out.update(STREAMING_QUERIES)
-    except ImportError:
-        pass
+    out.update(EXTENSION_QUERIES)
+    out.update(STREAMING_QUERIES)
     return _ordered(out)
 
 
@@ -199,31 +192,21 @@ def reset_shared_intermediates() -> None:
     """Invalidate per-process materialized intermediates (see
     functions/entrypoints.reset_shared_intermediates). Benchmarks call
     this per pass so timed passes pay each one-time build once."""
-    try:
-        from local_etl_csv_to_postgresql_spark.functions import entrypoints
+    from local_etl_csv_to_postgresql_spark.functions import entrypoints
 
-        entrypoints.reset_shared_intermediates()
-    except ImportError:
-        pass
+    entrypoints.reset_shared_intermediates()
 
 
 def oracle_sql() -> dict[str, str]:
     out = {"q00_pricing_summary": FLAGSHIP_ORACLE}
     out.update(RELATIONAL_ORACLE)
-    try:
-        from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
-            EXTENSION_ORACLE,
-        )
+    from local_etl_csv_to_postgresql_spark.functions.entrypoints import (
+        EXTENSION_ORACLE,
+    )
+    from local_etl_csv_to_postgresql_spark.streaming.queries import (
+        STREAMING_ORACLE,
+    )
 
-        out.update(EXTENSION_ORACLE)
-    except ImportError:
-        pass
-    try:
-        from local_etl_csv_to_postgresql_spark.streaming.queries import (
-            STREAMING_ORACLE,
-        )
-
-        out.update(STREAMING_ORACLE)
-    except ImportError:
-        pass
+    out.update(EXTENSION_ORACLE)
+    out.update(STREAMING_ORACLE)
     return out

@@ -11,12 +11,17 @@ Two costs a query used to pay before doing any of its own work:
   runs a Python-worker job. ``local_frame`` hands the same rows to
   Spark as an Arrow table, which plans as a ``LocalRelation``:
   collecting it starts no job.
+
+It also holds the package's one temp-dir rule, ``staging_dir``.
 """
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
+import tempfile
 from collections.abc import Iterable
 
 import pyarrow as pa
@@ -111,3 +116,15 @@ def local_frame(
         schema=arrow,
     )
     return spark.createDataFrame(table, schema)
+
+
+def staging_dir(prefix: str) -> str:
+    """A fresh temp dir that is removed when the process exits: every
+    materialized intermediate, replay stage, sink and checkpoint dir
+    of the package is made here. ``rmtree`` ignores errors, so an
+    explicit earlier cleanup (``reset_shared_intermediates``) makes the
+    exit hook a no-op; a process that never calls that cleanup — a
+    targeted pytest run — still leaves nothing behind."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..frames import local_frame, read_parquet
+from ..frames import local_frame, read_parquet, staging_dir
 from ..plans.analytics import dec, load
 from . import dedup as dd
 from . import kernels
@@ -28,29 +28,18 @@ from .multimodal import (
     sample_frames,
 )
 
-# MinHash-LSH knobs (dd03/dd06/dd07). With k hashes in b bands of
-# r = k/b rows, the banding s-curve crosses 50% candidate probability
-# at s* ≈ (1/b)^(1/r): (k=16, b=4, r=4) → s* ≈ 0.71 — tuned for the
-# 0.5 exact-Jaccard verification threshold (pairs at 0.5-0.7 have
-# partial recall; raise b / lower r to push s* down at the cost of
-# more candidate volume). Both knobs are env-overridable so a
-# production corpus can pick its own point on the curve; every
-# consumer (queries AND oracle twins) reads these constants, so the
-# contract stays self-consistent at any setting.
-import os as _os
-
-MINHASH_K = int(_os.environ.get("SPARK_GRAFT_MINHASH_K", "16"))
-MINHASH_BANDS = int(_os.environ.get("SPARK_GRAFT_MINHASH_BANDS", "4"))
-# Banding only stays self-consistent between the Spark plan and the
-# DuckDB oracle when bands divides k evenly: dedup.band_keys slices
-# exactly `bands` groups of k//bands hashes, while the oracle buckets
-# all k by FLOOR(j/(k//bands)) — a remainder would give the oracle
-# extra bands and different candidate pairs.
-if MINHASH_K % MINHASH_BANDS != 0:
-    raise ValueError(
-        f"SPARK_GRAFT_MINHASH_BANDS={MINHASH_BANDS} must divide "
-        f"SPARK_GRAFT_MINHASH_K={MINHASH_K} evenly (banding contract)"
-    )
+# MinHash-LSH parameters (dd03/dd06/dd07). With k hashes in b bands
+# of r = k/b rows, the banding s-curve crosses 50% candidate
+# probability at s* ≈ (1/b)^(1/r): (k=16, b=4, r=4) → s* ≈ 0.71 —
+# tuned for the 0.5 exact-Jaccard verification threshold (pairs at
+# 0.5-0.7 have partial recall; raise b / lower r to push s* down at
+# the cost of more candidate volume). Every consumer (queries AND
+# oracle twins) reads these constants; the oracle hashes are certified
+# at these values. b must divide k: dedup.band_keys slices exactly b
+# groups of k//b hashes, while the oracle buckets all k by
+# FLOOR(j/(k//b)) (tests/test_lsh_knobs.py checks other (k, b) pairs).
+MINHASH_K = 16
+MINHASH_BANDS = 4
 
 # Sign-LSH knobs (dd05/es03): nbits sign bits per table, n_tables
 # disjoint dim-slice tables (needs nbits*n_tables <= embedding dims;
@@ -61,21 +50,22 @@ if MINHASH_K % MINHASH_BANDS != 0:
 # A high-threshold corpus (0.9+ dedup) flips the knobs the other way —
 # p/bit ≈ 0.856 there, so (16 bits × 8 tables) holds ~50% recall at
 # 65k-bucket granularity. See similarity.neardup_pairs for the formula.
-LSH_NBITS = int(_os.environ.get("SPARK_GRAFT_LSH_NBITS", "4"))
-LSH_TABLES = int(_os.environ.get("SPARK_GRAFT_LSH_TABLES", "4"))
+LSH_NBITS = 4
+LSH_TABLES = 4
 
 # Contamination n-gram order (ct01). 7 (default) measures corpus-level
 # phrase overlap without short stock phrases flooding the count; 13 is
 # the common eval-set decontamination setting (a 13-gram shared with a
 # benchmark is treated as contamination by most published pipelines).
-# The oracle twin is built from the same constant, so the contract
-# stays self-consistent at any setting.
-CONTAM_NGRAM = int(_os.environ.get("SPARK_GRAFT_CONTAM_NGRAM", "7"))
+# The oracle twin is built from the same parameter (_contamination and
+# _contamination_oracle take any n; tests/test_contamination.py checks
+# 13 and 3), but the registered ct01 runs at this value.
+CONTAM_NGRAM = 7
 
 # Domain-mixture temperature (dm01): weights ∝ tokens^(1/T). T = 1 is
 # natural sampling; T → ∞ is uniform; 2.0 (default) is the common
 # "flatten the head domains" operating point.
-MIX_TEMPERATURE = float(_os.environ.get("SPARK_GRAFT_MIX_TEMP", "2.0"))
+MIX_TEMPERATURE = 2.0
 
 
 def _docs_words(spark: SparkSession, sf: str) -> DataFrame:
@@ -243,13 +233,7 @@ def _lsh_base(spark: SparkSession, sf: str):
     from the materialized parquet."""
     paths = _LSH_BASE_CACHE.get(sf)
     if paths is None:
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="sparkgraft_lshbase_")
-        import atexit
-        import shutil
-
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        root = staging_dir("sparkgraft_lshbase_")
         docs = _docs_words(spark, sf).select(
             "doc_id", dd.shingles(F.col("__words")).alias("__sh")
         ).persist()
@@ -388,7 +372,7 @@ def reset_shared_intermediates() -> None:
     _SE01_DIR_CACHE.clear()
     # bucketed-join tables (bj01) rebuild (mode=overwrite) per pass
     # like the LSH base — clearing the cache is all it takes
-    globals().get("_BJ01_TABLES", {}).clear()
+    _BJ01_TABLES.clear()
 
 
 def _neardup_components(spark: SparkSession, sf: str) -> DataFrame:
@@ -418,14 +402,7 @@ def _neardup_components(spark: SparkSession, sf: str) -> DataFrame:
         comp = connected_components(
             verts, verified, id_col="doc_id", src="id_a", dst="id_b"
         ).select(F.col("id").alias("doc_id"), "component")
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="sparkgraft_neardup_") + "/components"
-        atexit.register(
-            shutil.rmtree, _os.path.dirname(path), ignore_errors=True
-        )
+        path = staging_dir("sparkgraft_neardup_") + "/components"
         comp.write.mode("overwrite").parquet(path)
         _NEARDUP_COMPONENTS_CACHE[sf] = path
     return read_parquet(spark, path)
@@ -3117,10 +3094,6 @@ def pk02_packing_export(spark: SparkSession, sf: str) -> DataFrame:
     bins = 8 Ki tokens here) is the knob that keeps file counts sane
     at 100 TB — files scale with corpus tokens / shard budget,
     independent of executor count."""
-    import atexit
-    import shutil
-    import tempfile
-
     from ..operators.ranking import attach_global_row_number
 
     budget, bins_per_shard = 512, 16
@@ -3143,8 +3116,7 @@ def pk02_packing_export(spark: SparkSession, sf: str) -> DataFrame:
     ).withColumn(
         "shard_id", F.expr(f"bin div {bins_per_shard}").cast("int")
     )
-    out_dir = tempfile.mkdtemp(prefix="pk02_export_")
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+    out_dir = staging_dir("pk02_export_")
     (
         binned.repartition("lang", "shard_id")
         .write.mode("overwrite")
@@ -6764,7 +6736,7 @@ ORDER BY cluster_id"""
 # per-bucket log-ratio table are <= DSIR_BUCKETS rows BY CONSTRUCTION
 # regardless of corpus size, which is what makes their broadcast
 # legitimate (the paper uses 10k buckets over unigram+bigram features).
-DSIR_BUCKETS = int(_os.environ.get("SPARK_GRAFT_DSIR_BUCKETS", "4096"))
+DSIR_BUCKETS = 4096
 
 
 def ir01_dsir_importance(spark: SparkSession, sf: str) -> DataFrame:
@@ -8436,8 +8408,8 @@ EXTENSION_ORACLE.update(
 # standard guarantees err <= e·N/W at confidence 1 - e^-D (Cormode &
 # Muthukrishnan 2005). 4×512 keeps the certified fixture readable;
 # a production corpus sizes W to its tolerated absolute error.
-CM_DEPTH = int(_os.environ.get("SPARK_GRAFT_CM_DEPTH", "4"))
-CM_WIDTH = int(_os.environ.get("SPARK_GRAFT_CM_WIDTH", "512"))
+CM_DEPTH = 4
+CM_WIDTH = 512
 
 
 def cm01_countmin_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
@@ -8897,7 +8869,7 @@ FROM isl GROUP BY user_id ORDER BY user_id
 """
 
 
-SS05_SHARDS = int(_os.environ.get("SPARK_GRAFT_SS05_SHARDS", "16"))
+SS05_SHARDS = 16
 
 
 def ss05_shard_balance_audit(spark: SparkSession, sf: str) -> DataFrame:
@@ -19572,11 +19544,9 @@ EXTENSION_ORACLE["gini01_revenue_concentration"] = _GINI01_ORACLE
 #: user's events are more than this far apart. The classic
 #: web-analytics cut is 30; the default here is tuned to the driver
 #: corpus's event cadence (median per-user inter-event gap ≈ 7.3 h at
-#: sf0.01) so every session-size bucket carries signal — a clickstream
-#: deployment sets SPARK_GRAFT_SESSION_GAP_MIN=30. Both the Spark plan
-#: and the oracle read this constant, so the contract stays
-#: self-consistent at any setting.
-SES01_GAP_MIN = int(_os.environ.get("SPARK_GRAFT_SESSION_GAP_MIN", "720"))
+#: sf0.01) so every session-size bucket carries signal. Both the Spark
+#: plan and the oracle read this constant.
+SES01_GAP_MIN = 720
 SES01_GAP_US = SES01_GAP_MIN * 60 * 1_000_000
 
 
@@ -20216,26 +20186,15 @@ def se01_schema_evolution_read(spark: SparkSession, sf: str) -> DataFrame:
     cost, which is exactly the compaction economics inc04 quantifies.
     The read-back aggregate is one partial-aggregable 6-key rollup,
     and the batch split predicate is row-local."""
-    import tempfile
-
     # one written copy per (process, sf) — the shared-intermediate
     # pattern (_NEARDUP_COMPONENTS_CACHE): se01 sits in the timed bench
     # path, so re-invocations in one long session (best-of-2 passes,
-    # sweeps) must not accumulate a fresh two-copy mkdtemp + atexit
-    # handler each; reset_shared_intermediates rmtree's and clears it
+    # sweeps) must not accumulate a fresh two-copy staging dir each;
+    # reset_shared_intermediates rmtree's and clears it
     out_dir = _SE01_DIR_CACHE.get(sf)
     if out_dir is None:
-        import atexit
-        import shutil
-
         orders = load(spark, sf, "orders")
-        out_dir = tempfile.mkdtemp(prefix="se01_evolve_")
-        # one idempotent handler per cached dir (ignore_errors makes a
-        # double-delete after reset_shared_intermediates a no-op): a
-        # process that runs se01 but exits without the bench's reset —
-        # e.g. a targeted pytest run — must not leak the mkdtemp
-        # (r10 ADVICE item 3)
-        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+        out_dir = staging_dir("se01_evolve_")
         old = orders.filter(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", dec("o_totalprice").alias("o_totalprice")
         )

@@ -109,25 +109,6 @@ def run_etl_pipeline(
             res.phase_times["transform"],
         )
 
-        # rejects quarantine: invalid rows (with their failed-rule
-        # labels) are appended, never dropped, when a path is configured
-        if cfg.quarantine_path and tr.invalid is not None and not (
-            validate_only or dry_run
-        ):
-            n_invalid = sum(
-                v for k, v in res.issue_counts.items() if v
-            )
-            if n_invalid:
-                (
-                    tr.invalid.withColumn(
-                        "failed_rules",
-                        F.concat_ws(",", "__failed_rules"),
-                    )
-                    .drop("__failed_rules")
-                    .write.mode("append")
-                    .parquet(cfg.quarantine_path)
-                )
-
         if validate_only or dry_run:
             res.status = "dry_run" if dry_run else "validated"
             return res
@@ -155,6 +136,23 @@ def run_etl_pipeline(
             "load done: %d inserted, %d skipped in %.2fs",
             res.loaded_rows, res.skipped_rows, res.phase_times["load"],
         )
+
+        # rejects quarantine: invalid rows (with their failed-rule
+        # labels) are appended, never dropped, when a path is configured
+        # — only once the load is accepted, so a load refused by the
+        # lock or the layout check leaves no rows for its rerun to
+        # append a second time
+        if cfg.quarantine_path and tr.invalid is not None and any(
+            res.issue_counts.values()
+        ):
+            (
+                tr.invalid.withColumn(
+                    "failed_rules", F.concat_ws(",", "__failed_rules")
+                )
+                .drop("__failed_rules")
+                .write.mode("append")
+                .parquet(cfg.quarantine_path)
+            )
 
         res.status = "success"
     except ETLError as e:

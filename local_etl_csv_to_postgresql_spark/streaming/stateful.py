@@ -26,6 +26,9 @@ across a cluster — the state store, not the driver, holds it.
 
 from __future__ import annotations
 
+import os
+import time
+import uuid
 from collections.abc import Iterator
 
 import numpy as np
@@ -33,7 +36,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..frames import local_frame, parquet_schema, read_parquet
+from ..frames import local_frame, parquet_schema, read_parquet, staging_dir
+
+#: shuffle partitions every replay runs with: each shuffle partition
+#: carries a state-store instance whose per-batch open/commit cost
+#: dwarfs the work at local scale (32 partitions: ~15s, 8: ~6s on 100k
+#: events)
+REPLAY_SHUFFLE_PARTITIONS = 8
 
 
 def _await_or_raise(q, timeout_sec: int = 300) -> None:
@@ -47,6 +56,56 @@ def _await_or_raise(q, timeout_sec: int = 300) -> None:
             f"streaming replay did not terminate within {timeout_sec}s; "
             "memory-sink table would be partial"
         )
+
+
+def _run_replay(spark, writer, conf: dict[str, str] | None = None):
+    """THE bounded-replay protocol: start ``writer`` (a configured
+    ``DataStreamWriter``) as an availableNow query under
+    ``REPLAY_SHUFFLE_PARTITIONS`` plus any extra ``conf`` entries, wait
+    for it or raise, and return the terminated query. Every conf it
+    set is restored in one ``finally`` (unset if it was absent), so a
+    replay that fails, at start or mid-run, leaves the caller's
+    session as it found it."""
+    conf = {
+        "spark.sql.shuffle.partitions": str(REPLAY_SHUFFLE_PARTITIONS),
+        **(conf or {}),
+    }
+    before = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        q = writer.trigger(availableNow=True).start()
+        _await_or_raise(q)
+        return q
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _to_memory(spark, frame: DataFrame, mode: str, conf=None):
+    """Replay the streaming ``frame`` into a fresh memory-sink table in
+    output ``mode``; returns ``(spark.table(name), query)`` — the
+    query's progress is what the watermark replays read their drop
+    counts from."""
+    name = f"replay_{uuid.uuid4().hex[:8]}"
+    writer = frame.writeStream.format("memory").queryName(name).outputMode(mode)
+    q = _run_replay(spark, writer, conf)
+    return spark.table(name), q
+
+
+def _watermark_drops(q) -> int:
+    """Rows the watermark's late filter dropped over the whole replay
+    (``numRowsDroppedByWatermark`` summed over every batch's state
+    operators) — exposed so tests can pin that the filter actually
+    fired, not just that the output matched."""
+    return sum(
+        s.get("numRowsDroppedByWatermark", 0)
+        for p in q.recentProgress
+        for s in p.get("stateOperators", [])
+    )
 
 
 SESSION_OUTPUT_SCHEMA = (
@@ -76,59 +135,47 @@ def _normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-# schema probes and symlink staging are pure functions of the source
-# path; cache them so repeated replays (bench best-of-2, the st-family
-# sharing one events file) skip the extra Spark job + dir setup
+# staged replay inputs — symlink dirs, mtime-ordered batch files,
+# multi-file splits — keyed "<kind>::<source path>". Each is a pure
+# function of its source, so it is built once per process and lives
+# as long as the process (staging_dir's atexit removes it; the bench's
+# reset_shared_intermediates does not): repeated replays (bench
+# best-of-2, the st-family sharing one events file) skip the rebuild
 _REPLAY_STAGE_CACHE: dict[str, tuple] = {}
 
 
-def _schema_and_stage(spark, parquet_path: str):
-    """(schema, streamable_dir) for a parquet source, cached per path.
-    The file-stream source needs a directory; single files get a
-    symlink dir (no data copy)."""
-    import os
-    import tempfile
+def _staged(key: str, build):
+    """``(schema, dir)`` of the staged input ``key``: on a miss,
+    ``build(dir)`` writes the stage's files into a fresh staging dir
+    and returns the batch schema the stream reads them with."""
+    hit = _REPLAY_STAGE_CACHE.get(key)
+    if hit is None:
+        stage = staging_dir("replay_stage_")
+        hit = _REPLAY_STAGE_CACHE[key] = (build(stage), stage)
+    return hit
 
+
+def _schema_and_stage(spark, parquet_path: str):
+    """(schema, streamable_dir) for a parquet source. The file-stream
+    source needs a directory; a single file gets a symlink dir (no data
+    copy), staged once per path."""
     # Set the conf on EVERY call, not just cache misses: the cache is
     # keyed by path alone, so a second SparkSession in the same process
     # would otherwise hit the cache with the conf never set and fail the
     # streaming read of TIMESTAMP(NANOS) data. Setting it is cheap and
     # idempotent.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    hit = _REPLAY_STAGE_CACHE.get(parquet_path)
-    if hit is not None:
-        return hit
-    schema = parquet_schema(spark, parquet_path)
-    if not os.path.isdir(parquet_path):
-        import atexit
-        import shutil
+    if os.path.isdir(parquet_path):
+        return parquet_schema(spark, parquet_path), parquet_path
 
-        stage = tempfile.mkdtemp(prefix="stateful_stream_")
+    def link(stage):
         os.symlink(
             os.path.abspath(parquet_path),
             os.path.join(stage, os.path.basename(parquet_path)),
         )
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
-    else:
-        stage = parquet_path
-    _REPLAY_STAGE_CACHE[parquet_path] = (schema, stage)
-    return schema, stage
+        return parquet_schema(spark, parquet_path)
 
-
-def _staging_dir(prefix: str) -> str:
-    """mkdtemp with an atexit rmtree (ignore_errors — idempotent with
-    any explicit cleanup): replay staging/sink/checkpoint dirs are
-    created once per process (or per run for sinks) and must not
-    outlive it — a targeted pytest run never calls the bench's reset
-    hook, which is exactly how the se01 cache leaked (r10 ADVICE
-    item 3); this closes the same class for every streaming replay."""
-    import atexit
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
+    return _staged(f"file::{parquet_path}", link)
 
 
 def _sessionize_fn(gap_seconds: float):
@@ -219,9 +266,7 @@ def replay_sessions(
     spark,
     parquet_path: str,
     gap_seconds: float = 1800.0,
-    table_name: str | None = None,
     max_files_per_trigger: int | None = None,
-    shuffle_partitions: int | None = 8,
 ) -> DataFrame:
     """Bounded replay: stream the parquet file(s) at ``parquet_path``
     through the stateful sessionizer into a memory sink and return the
@@ -235,39 +280,14 @@ def replay_sessions(
     unemitted. That set is deterministic, so st03 carries a full
     DuckDB oracle (streaming/queries.py).
     """
-    import uuid
-
-    table_name = table_name or f"stateful_sessions_{uuid.uuid4().hex[:8]}"
     # driver testdata carries TIMESTAMP(NANOS); read nanos as long and
     # truncate to micros (same policy as plans.analytics.load)
     batch_schema, stream_path = _schema_and_stage(spark, parquet_path)
     reader = spark.readStream.schema(batch_schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(stream_path)
-
-    # each shuffle partition carries a state-store instance whose
-    # per-batch open/commit cost dwarfs the work at local scale (32
-    # partitions: ~15s, 8: ~6s on 100k events). A cluster-scale stream
-    # keeps the session default (None = don't touch).
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    stream = _normalize_ts(stream).select("user_id", "ts")
-    try:
-        q = (
-            sessionize_stateful(stream, gap_seconds)
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(table_name)
+    stream = _normalize_ts(reader.parquet(stream_path)).select("user_id", "ts")
+    return _to_memory(spark, sessionize_stateful(stream, gap_seconds), "append")[0]
 
 
 QUOTA_OUTPUT_SCHEMA = "user_id long, event_id long, ts timestamp"
@@ -322,38 +342,16 @@ def replay_quota(
     spark,
     parquet_path: str,
     n_max: int = 20,
-    table_name: str | None = None,
-    shuffle_partitions: int | None = 8,
 ) -> DataFrame:
     """Bounded replay of ``enforce_quota`` over a parquet file through a
     real Structured Streaming run (single availableNow batch → admission
     equals the first n_max rows per user by (ts, event_id), which is the
     DuckDB ROW_NUMBER oracle in streaming/queries.py st06)."""
-    import uuid
-
-    table_name = table_name or f"stream_quota_{uuid.uuid4().hex[:8]}"
     batch_schema, stream_path = _schema_and_stage(spark, parquet_path)
     stream = _normalize_ts(
         spark.readStream.schema(batch_schema).parquet(stream_path)
     ).select("user_id", "event_id", "ts")
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            enforce_quota(stream, n_max)
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(table_name)
+    return _to_memory(spark, enforce_quota(stream, n_max), "append")[0]
 
 
 def replay_static_enrich(
@@ -363,8 +361,6 @@ def replay_static_enrich(
     join_key: str,
     group_col: str,
     value_col: str = "value",
-    table_name: str | None = None,
-    shuffle_partitions: int | None = 8,
 ) -> DataFrame:
     """Stream-static enrichment: the standard Structured Streaming
     pattern where a live event stream joins a slowly-changing dimension
@@ -374,9 +370,6 @@ def replay_static_enrich(
     rollup runs in complete mode over the bounded availableNow replay,
     making the final answer equal to the batch join + aggregate — which
     is the DuckDB oracle."""
-    import uuid
-
-    table_name = table_name or f"stream_enrich_{uuid.uuid4().hex[:8]}"
     batch_schema, stream_path = _schema_and_stage(spark, parquet_path)
     stream = _normalize_ts(spark.readStream.schema(batch_schema).parquet(stream_path))
     from pyspark.sql import functions as F
@@ -389,30 +382,13 @@ def replay_static_enrich(
             F.sum(F.col(value_col).cast("decimal(18,6)")).alias("__tv"),
         )
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            rollup.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(table_name)
+    return _to_memory(spark, rollup, "complete")[0]
 
 
 def replay_dedup(
     spark,
     parquet_path: str,
     dedup_cols: list[str] | None = None,
-    table_name: str | None = None,
-    shuffle_partitions: int | None = 8,
     pre=None,
 ) -> DataFrame:
     """Streaming exact deduplication: the at-ingest dedup a training
@@ -426,49 +402,22 @@ def replay_dedup(
     correct for bounded replay; a continuous ingest adds
     ``withWatermark`` so old keys age out.
     """
-    import os
-    import tempfile
-    import uuid
-
     dedup_cols = dedup_cols or ["event_id"]
-    table_name = table_name or f"stream_dedup_{uuid.uuid4().hex[:8]}"
-
     batch_schema, _ = _schema_and_stage(spark, parquet_path)
-    cache_key = f"dedup2x::{parquet_path}"
-    hit = _REPLAY_STAGE_CACHE.get(cache_key)
-    if hit is not None:
-        stage = hit[1]
-    else:
-        stage = _staging_dir("dedup_stream_")
-        src = os.path.abspath(parquet_path)
-        for name in ("first.parquet", "second.parquet"):
-            os.symlink(src, os.path.join(stage, name))
-        _REPLAY_STAGE_CACHE[cache_key] = (batch_schema, stage)
 
+    def twice(stage):
+        for name in ("first.parquet", "second.parquet"):
+            os.symlink(os.path.abspath(parquet_path), os.path.join(stage, name))
+        return batch_schema
+
+    _, stage = _staged(f"dedup2x::{parquet_path}", twice)
     stream = _normalize_ts(spark.readStream.schema(batch_schema).parquet(stage))
     if pre is not None:
         # row-local projection (e.g. a content fingerprint) computed ON
         # THE STREAM before state keys in — dedup_cols may name columns
         # it derives
         stream = pre(stream)
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            stream.dropDuplicates(dedup_cols)
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(table_name)
+    return _to_memory(spark, stream.dropDuplicates(dedup_cols), "append")[0]
 
 
 LATE_MOD = 20  # id-space density of the straggler/advancer sets (st08)
@@ -482,7 +431,6 @@ def _stage_single_parquet(stage: str, df, name: str, mtime: float) -> None:
     ``name`` under ``stage`` with a pinned mtime — the file source
     orders batches by modification time, so the mtime IS the replay's
     batch schedule and must be set identically everywhere."""
-    import os
     import shutil
 
     tmp = os.path.join(stage, "__tmp_" + name)
@@ -494,13 +442,22 @@ def _stage_single_parquet(stage: str, df, name: str, mtime: float) -> None:
     os.utime(dst, (mtime, mtime))
 
 
+def _ordered_stream(spark, schema, stage: str) -> DataFrame:
+    """Stream a staged dir one file per trigger, oldest mtime first: the
+    staged files ARE the replay's micro-batches."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("latestFirst", "false")
+        .parquet(stage)
+    )
+
+
 def replay_late_data(
     spark,
     parquet_path: str,
     delay: str = "10 minutes",
     window_duration: str = "1 hour",
-    table_name: str | None = None,
-    shuffle_partitions: int | None = 8,
 ) -> DataFrame:
     """REAL watermark late-data semantics, exercised end-to-end.
 
@@ -527,20 +484,11 @@ def replay_late_data(
       the emitted set, which is a pure function of (split, delay):
       the DuckDB twin (st08) reproduces it with two scalar
       watermarks."""
-    import os
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
 
     from ..plans.analytics import load
 
-    table_name = table_name or f"stream_late_{uuid.uuid4().hex[:8]}"
-    cache_key = f"late::{parquet_path}"
-    hit = _REPLAY_STAGE_CACHE.get(cache_key)
-    if hit is not None:
-        batch_schema, stage = hit
-    else:
+    def split(stage):
         sf_dir = os.path.dirname(os.path.abspath(parquet_path))
         ev = load(spark, sf_dir, "events").select(
             "event_id", "event_type", "ts"
@@ -550,11 +498,7 @@ def replay_late_data(
         old = F.col("ts") < F.lit(LATE_CUTOFF).cast("timestamp")
         c_set = ((F.col("event_id") % LATE_MOD == 0) & old) | is_max
         b_set = (F.col("event_id") % LATE_MOD == 1) & old & ~is_max
-        stage = _staging_dir("late_stream_")
-
-        import time as _t
-
-        t0 = _t.time() - 300
+        t0 = time.time() - 300
         _stage_single_parquet(
             stage, ev.filter(~c_set & ~b_set), "a_ontime.parquet", t0
         )
@@ -564,45 +508,19 @@ def replay_late_data(
         _stage_single_parquet(
             stage, ev.filter(c_set), "c_late.parquet", t0 + 120
         )
-        batch_schema = parquet_schema(
-            spark, os.path.join(stage, "a_ontime.parquet")
-        )
-        _REPLAY_STAGE_CACHE[cache_key] = (batch_schema, stage)
+        return parquet_schema(spark, os.path.join(stage, "a_ontime.parquet"))
 
-    stream = (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(stage)
+    batch_schema, stage = _staged(f"late::{parquet_path}", split)
+    windows = (
+        _ordered_stream(spark, batch_schema, stage)
+        .withWatermark("ts", delay)
+        .groupBy(F.window("ts", window_duration), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
     )
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            stream.withWatermark("ts", delay)
-            .groupBy(F.window("ts", window_duration), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-        # expose the per-batch drop accounting so tests can pin that
-        # the late filter actually fired (not just that output matched)
-        global LAST_LATE_DROPPED
-        LAST_LATE_DROPPED = sum(
-            s.get("numRowsDroppedByWatermark", 0)
-            for p in q.recentProgress
-            for s in p.get("stateOperators", [])
-        )
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(table_name)
+    out, q = _to_memory(spark, windows, "append")
+    global LAST_LATE_DROPPED
+    LAST_LATE_DROPPED = _watermark_drops(q)
+    return out
 
 
 LAST_LATE_DROPPED: int = 0
@@ -612,8 +530,6 @@ def replay_dedup_within_watermark(
     spark,
     parquet_path: str,
     delay: str = "3 days",
-    table_name: str | None = None,
-    shuffle_partitions: int | None = 8,
 ) -> DataFrame:
     """Streaming dedup with BOUNDED state — ``dropDuplicatesWithinWatermark``
     (Spark 3.5+), the scale-correct form of ``replay_dedup`` (st04):
@@ -653,20 +569,11 @@ def replay_dedup_within_watermark(
     Emitted = A ∪ {stragglers with ts ≥ wmA} — a pure function of
     (split rule, delay) that the DuckDB twin (st11) computes with one
     scalar watermark."""
-    import os
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
 
     from ..plans.analytics import load
 
-    table_name = table_name or f"stream_wmdedup_{uuid.uuid4().hex[:8]}"
-    cache_key = f"wmdedup::{parquet_path}"
-    hit = _REPLAY_STAGE_CACHE.get(cache_key)
-    if hit is not None:
-        batch_schema, stage = hit
-    else:
+    def split(stage):
         sf_dir = os.path.dirname(os.path.abspath(parquet_path))
         ev = load(spark, sf_dir, "events").select(
             "event_id", "event_type", "ts"
@@ -675,11 +582,7 @@ def replay_dedup_within_watermark(
         s_set = F.col("event_id") % LATE_MOD == 0
         b_set = (F.col("event_id") % LATE_MOD == 1) & old
         r_set = F.col("event_id") % LATE_MOD == 2
-        stage = _staging_dir("wmdedup_stream_")
-
-        import time as _t
-
-        t0 = _t.time() - 300
+        t0 = time.time() - 300
         a = ev.filter(~s_set)
         _stage_single_parquet(stage, a, "a_ontime.parquet", t0)
         _stage_single_parquet(
@@ -691,52 +594,24 @@ def replay_dedup_within_watermark(
             "c_stragglers_and_dups.parquet",
             t0 + 120,
         )
-        batch_schema = parquet_schema(
-            spark, os.path.join(stage, "a_ontime.parquet")
-        )
-        _REPLAY_STAGE_CACHE[cache_key] = (batch_schema, stage)
+        return parquet_schema(spark, os.path.join(stage, "a_ontime.parquet"))
 
-    stream = (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(stage)
+    batch_schema, stage = _staged(f"wmdedup::{parquet_path}", split)
+    deduped = (
+        _ordered_stream(spark, batch_schema, stage)
+        .withWatermark("ts", delay)
+        .dropDuplicatesWithinWatermark(["event_id"])
     )
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            stream.withWatermark("ts", delay)
-            .dropDuplicatesWithinWatermark(["event_id"])
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-        global LAST_WMDEDUP_DROPPED
-        LAST_WMDEDUP_DROPPED = sum(
-            s.get("numRowsDroppedByWatermark", 0)
-            for p in q.recentProgress
-            for s in p.get("stateOperators", [])
-        )
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(table_name)
+    out, q = _to_memory(spark, deduped, "append")
+    global LAST_WMDEDUP_DROPPED
+    LAST_WMDEDUP_DROPPED = _watermark_drops(q)
+    return out
 
 
 LAST_WMDEDUP_DROPPED: int = 0
 
 
-def replay_foreachbatch_upsert(
-    spark,
-    parquet_path: str,
-    shuffle_partitions: int | None = 8,
-) -> DataFrame:
+def replay_foreachbatch_upsert(spark, parquet_path: str) -> DataFrame:
     """Streaming ``foreachBatch`` idempotent-append ingest — the SINK
     side of exactly-once, which no other replay certifies: st04/st11
     dedup IN-STREAM (state store holds seen keys), while a production
@@ -763,28 +638,16 @@ def replay_foreachbatch_upsert(
     Warehouse.enrich_fact's existence join does — at 100 TB it prunes on the target's date partitions (new
     data is recent); in-batch state is one micro-batch, sink state is
     the table itself, nothing lives on the driver."""
-    import os
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
 
     from ..plans.analytics import load
 
-    cache_key = f"fbupsert::{parquet_path}"
-    hit = _REPLAY_STAGE_CACHE.get(cache_key)
-    if hit is not None:
-        batch_schema, stage = hit
-    else:
+    def split(stage):
         sf_dir = os.path.dirname(os.path.abspath(parquet_path))
         ev = load(spark, sf_dir, "events")
         a_set = F.col("event_id") % 10 != 9
         redeliver = F.col("event_id") % 10 == 3
-        stage = _staging_dir("fbupsert_stream_")
-
-        import time as _t
-
-        t0 = _t.time() - 300
+        t0 = time.time() - 300
         _stage_single_parquet(stage, ev.filter(a_set), "a_bulk.parquet", t0)
         _stage_single_parquet(
             stage,
@@ -792,15 +655,10 @@ def replay_foreachbatch_upsert(
             "b_tail_and_redeliver.parquet",
             t0 + 60,
         )
-        batch_schema = parquet_schema(
-            spark, os.path.join(stage, "a_bulk.parquet")
-        )
-        _REPLAY_STAGE_CACHE[cache_key] = (batch_schema, stage)
+        return parquet_schema(spark, os.path.join(stage, "a_bulk.parquet"))
 
-    target = os.path.join(
-        _staging_dir("fbupsert_sink_"),
-        f"fact_events_{uuid.uuid4().hex[:8]}",
-    )
+    batch_schema, stage = _staged(f"fbupsert::{parquet_path}", split)
+    target = os.path.join(staging_dir("fbupsert_sink_"), "fact_events")
 
     def _upsert(batch_df, _batch_id: int) -> None:
         fresh = batch_df.dropDuplicates(["event_id"])
@@ -809,29 +667,12 @@ def replay_foreachbatch_upsert(
             fresh = fresh.join(existing, "event_id", "left_anti")
         fresh.write.mode("append").parquet(target)
 
-    stream = (
-        spark.readStream.schema(batch_schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(stage)
+    writer = (
+        _ordered_stream(spark, batch_schema, stage)
+        .writeStream.foreachBatch(_upsert)
+        .option("checkpointLocation", staging_dir("fbupsert_ckpt_"))
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(_upsert)
-            .option(
-                "checkpointLocation",
-                _staging_dir("fbupsert_ckpt_"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    _run_replay(spark, writer)
     return read_parquet(spark, target)
 
 
@@ -839,8 +680,6 @@ def replay_stream_stream_join(
     spark,
     parquet_path: str,
     window_minutes: int = 10,
-    table_name: str | None = None,
-    shuffle_partitions: int | None = 8,
 ) -> DataFrame:
     """Bounded replay of a STREAM-STREAM interval join — the state-store
     join surface (two buffered sides, watermark-bounded state) none of
@@ -851,11 +690,8 @@ def replay_stream_stream_join(
     watermark passes; in the bounded availableNow replay everything
     lands in one batch, so the emitted pair set equals the batch
     interval join — the DuckDB oracle (st09)."""
-    import uuid
-
     from pyspark.sql import functions as F
 
-    table_name = table_name or f"stream_ssjoin_{uuid.uuid4().hex[:8]}"
     batch_schema, stage = _schema_and_stage(spark, parquet_path)
 
     def src():
@@ -891,23 +727,7 @@ def replay_stream_stream_join(
         ),
         "inner",
     )
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(table_name)
+    return _to_memory(spark, joined, "append")[0]
 
 
 def replay_session_window(
@@ -915,8 +735,6 @@ def replay_session_window(
     parquet_path: str,
     gap: str = "30 minutes",
     delay: str = "30 minutes",
-    table_name: str | None = None,
-    shuffle_partitions: int | None = 8,
 ) -> DataFrame:
     """Native ``session_window`` session aggregation from a REAL
     Structured Streaming run (the built-in alternative to the custom
@@ -932,11 +750,8 @@ def replay_session_window(
     from the global max, not batch boundaries) and the DuckDB oracle
     reproduces it: islands sessions whose end precedes the final
     watermark."""
-    import uuid
-
     from pyspark.sql import functions as F
 
-    table_name = table_name or f"stream_sesswin_{uuid.uuid4().hex[:8]}"
     batch_schema, stream_path = _schema_and_stage(spark, parquet_path)
     stream = _normalize_ts(
         spark.readStream.schema(batch_schema).parquet(stream_path)
@@ -952,33 +767,13 @@ def replay_session_window(
             "n_events",
         )
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(table_name)
+    return _to_memory(spark, sessions, "append")[0]
 
 
 TWS_OUTPUT_SCHEMA = "user_id long, n_events long, total_cents long"
 
 
-def replay_tws_totals(
-    spark,
-    parquet_path: str,
-    table_name: str | None = None,
-    shuffle_partitions: int | None = 8,
-) -> DataFrame:
+def replay_tws_totals(spark, parquet_path: str) -> DataFrame:
     """Per-user lifetime totals on Spark 4's ``transformWithState``
     arbitrary-state API (the successor of ``applyInPandasWithState``
     this module's sessionizer uses): a ``StatefulProcessor`` holding
@@ -1008,10 +803,6 @@ def replay_tws_totals(
     groupBy shuffle — 10^9 users is tens of GB across a cluster's
     state stores, none of it on the driver.
     """
-    import os
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
         LongType,
@@ -1030,23 +821,14 @@ def replay_tws_totals(
             StatefulProcessorHandle,
         )
 
-    table_name = table_name or f"stream_tws_{uuid.uuid4().hex[:8]}"
-    cache_key = f"tws::{parquet_path}"
-    hit = _REPLAY_STAGE_CACHE.get(cache_key)
-    if hit is not None:
-        batch_schema, stage = hit
-    else:
-        sf_dir = os.path.dirname(os.path.abspath(parquet_path))
-        from ..plans.analytics import load
+    from ..plans.analytics import load
 
+    def split(stage):
+        sf_dir = os.path.dirname(os.path.abspath(parquet_path))
         ev = load(spark, sf_dir, "events").select(
             "event_id", "user_id", "value"
         )
-        stage = _staging_dir("tws_stream_")
-
-        import time as _t
-
-        t0 = _t.time() - 300
+        t0 = time.time() - 300
         _stage_single_parquet(
             stage, ev.filter(F.col("event_id") % 2 == 0), "a_even.parquet", t0
         )
@@ -1056,11 +838,9 @@ def replay_tws_totals(
             "b_odd.parquet",
             t0 + 60,
         )
-        batch_schema = parquet_schema(
-            spark, os.path.join(stage, "a_even.parquet")
-        )
-        _REPLAY_STAGE_CACHE[cache_key] = (batch_schema, stage)
+        return parquet_schema(spark, os.path.join(stage, "a_even.parquet"))
 
+    batch_schema, stage = _staged(f"tws::{parquet_path}", split)
     state_schema = StructType(
         [
             StructField("n", LongType()),
@@ -1105,55 +885,29 @@ def replay_tws_totals(
             handleInputRows/init still propagates and fails the query.
             """
 
-    stream = spark.readStream.schema(batch_schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(stage)
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    old_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", ""
-    )
-    if shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            stream.groupBy("user_id")
-            .transformWithStateInPandas(
-                statefulProcessor=_Totals(),
-                outputStructType=TWS_OUTPUT_SCHEMA,
-                outputMode="Update",
-                timeMode="None",
-            )
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+    totals = (
+        _ordered_stream(spark, batch_schema, stage)
+        .groupBy("user_id")
+        .transformWithStateInPandas(
+            statefulProcessor=_Totals(),
+            outputStructType=TWS_OUTPUT_SCHEMA,
+            outputMode="Update",
+            timeMode="None",
         )
-        _await_or_raise(q)
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        if old_provider:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", old_provider
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    return spark.table(table_name)
+    )
+    provider = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"
+        )
+    }
+    return _to_memory(spark, totals, "update", provider)[0]
 
 
 def replay_left_outer_join(
     spark,
     parquet_path: str,
     window_minutes: int = 10,
-    table_name: str | None = None,
-    shuffle_partitions: int | None = 8,
 ) -> DataFrame:
     """Bounded replay of a stream-stream LEFT OUTER interval join —
     the null-emission semantics st09's inner join never exercises:
@@ -1182,12 +936,10 @@ def replay_left_outer_join(
     the plain LEFT JOIN (st13). The sentinel view itself stays below
     its own eviction horizon and is filtered by user_id >= 0 anyway."""
     import datetime
-    import tempfile
-    import uuid
 
     from pyspark.sql import functions as F
 
-    table_name = table_name or f"stream_loj_{uuid.uuid4().hex[:8]}"
+    from ..plans.analytics import load
 
     def left_join(src):
         views = (
@@ -1219,16 +971,8 @@ def replay_left_outer_join(
             "leftOuter",
         )
 
-    cache_key = f"loj::{parquet_path}"
-    hit = _REPLAY_STAGE_CACHE.get(cache_key)
-    if hit is not None:
-        batch_schema, stage = hit
-    else:
-        import os
-        import time as _t
-
-        from ..plans.analytics import load
-
+    key = f"loj::{parquet_path}"
+    if key not in _REPLAY_STAGE_CACHE:
         sf_dir = os.path.dirname(os.path.abspath(parquet_path))
         ev = load(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "ts"
@@ -1244,49 +988,27 @@ def replay_left_outer_join(
             [(-1, -1, "view", adv), (-2, -2, "click", adv)],
             ev.schema,
         )
-        stage = _staging_dir("loj_stream_")
-        t0 = _t.time() - 300
-        _stage_single_parquet(stage, ev, "a_events.parquet", t0)
-        _stage_single_parquet(stage, sentinels, "b_advancers.parquet", t0 + 60)
-        batch_schema = parquet_schema(
-            spark, os.path.join(stage, "a_events.parquet")
-        )
-        _REPLAY_STAGE_CACHE[cache_key] = (batch_schema, stage)
 
-    def src():
-        return (
-            spark.readStream.schema(batch_schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(stage)
-        )
+        def split(stage):
+            t0 = time.time() - 300
+            _stage_single_parquet(stage, ev, "a_events.parquet", t0)
+            _stage_single_parquet(
+                stage, sentinels, "b_advancers.parquet", t0 + 60
+            )
+            return parquet_schema(
+                spark, os.path.join(stage, "a_events.parquet")
+            )
 
-    joined = left_join(src)
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(table_name)
+        _staged(key, split)
+    batch_schema, stage = _REPLAY_STAGE_CACHE[key]
+    joined = left_join(lambda: _ordered_stream(spark, batch_schema, stage))
+    return _to_memory(spark, joined, "append")[0]
 
 
 def replay_scd_asof_enrich(
     spark,
     parquet_path: str,
     versions: DataFrame,
-    table_name: str | None = None,
-    shuffle_partitions: int | None = 8,
 ) -> DataFrame:
     """Stream-static SLOWLY-CHANGING-DIMENSION enrichment: the purchase
     stream joins a versioned dimension on ``user_id`` PLUS the
@@ -1297,11 +1019,8 @@ def replay_scd_asof_enrich(
     event matches at most one row and the join is stateless by
     construction). Complete-mode rollup over the bounded availableNow
     replay == the batch join + aggregate == the DuckDB oracle."""
-    import uuid
-
     from pyspark.sql import functions as F
 
-    table_name = table_name or f"stream_scd_{uuid.uuid4().hex[:8]}"
     batch_schema, stream_path = _schema_and_stage(spark, parquet_path)
     stream = _normalize_ts(
         spark.readStream.schema(batch_schema).parquet(stream_path)
@@ -1319,30 +1038,13 @@ def replay_scd_asof_enrich(
             F.sum(F.col("value").cast("decimal(18,6)")).alias("__tv"),
         )
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            rollup.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(table_name)
+    return _to_memory(spark, rollup, "complete")[0]
 
 
 def replay_binned_histogram(
     spark,
     parquet_path: str,
     bin_cap: int = 511,
-    table_name: str | None = None,
-    shuffle_partitions: int | None = 8,
 ) -> "DataFrame":
     """Streaming MERGEABLE-SKETCH aggregation: each micro-batch folds
     its events into a bounded (event_type, bin) count matrix — the
@@ -1355,11 +1057,8 @@ def replay_binned_histogram(
     |types|×(bin_cap+1) BY CONSTRUCTION, never by the stream length —
     the property that lets a quantile dashboard run forever on a
     100 TB/day firehose."""
-    import uuid
-
     from pyspark.sql import functions as F
 
-    table_name = table_name or f"stream_binhist_{uuid.uuid4().hex[:8]}"
     batch_schema, stream_path = _schema_and_stage(spark, parquet_path)
     stream = _normalize_ts(
         spark.readStream.schema(batch_schema).parquet(stream_path)
@@ -1374,24 +1073,7 @@ def replay_binned_histogram(
         .groupBy("event_type", "bin")
         .agg(F.count(F.lit(1)).alias("bin_count"))
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
-    try:
-        q = (
-            hist.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(table_name)
+    return _to_memory(spark, hist, "complete")[0]
 
 
 def replay_countmin_cells(
@@ -1400,8 +1082,6 @@ def replay_countmin_cells(
     depth: int,
     width: int,
     key_col: str = "user_id",
-    table_name: str | None = None,
-    shuffle_partitions: int | None = 8,
 ) -> "DataFrame":
     """Streaming Count-Min sketch maintenance: each micro-batch folds
     its events into the D×W integer cell matrix (cells are SUMS, the
@@ -1412,13 +1092,10 @@ def replay_countmin_cells(
     on a firehose. The hash family is the library's seeded 60-bit md5
     ('cm{d}:{key}'), identical to cm01's, so the DuckDB oracle can
     recompute every probed cell exactly."""
-    import uuid
-
     from pyspark.sql import functions as F
 
     from ..functions import dedup as dd
 
-    table_name = table_name or f"stream_cmcells_{uuid.uuid4().hex[:8]}"
     batch_schema, stream_path = _schema_and_stage(spark, parquet_path)
     stream = _normalize_ts(
         spark.readStream.schema(batch_schema).parquet(stream_path)
@@ -1444,24 +1121,7 @@ def replay_countmin_cells(
         .groupBy("__d", "__b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cell_count"))
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
-    try:
-        q = (
-            cells.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(table_name)
+    return _to_memory(spark, cells, "complete")[0]
 
 
 def replay_hll_registers(
@@ -1471,8 +1131,6 @@ def replay_hll_registers(
     rest_bits: int,
     key_col: str = "user_id",
     group_col: str = "event_type",
-    table_name: str | None = None,
-    shuffle_partitions: int | None = 8,
 ) -> "DataFrame":
     """Streaming HyperLogLog register maintenance: each micro-batch
     MAXes its (group, bucket) rho values into the register matrix —
@@ -1482,14 +1140,11 @@ def replay_hll_registers(
     oracle computes. State bounded by |groups| × hll_m BY
     CONSTRUCTION. Hash family identical to hll02's (_H60 of the key
     string; bucket = low bits, rho = leading-zero rank of the rest)."""
-    import uuid
-
     from pyspark.sql import functions as F
 
     from ..functions import dedup as dd
 
     rest_zero_rho = rest_bits + 1
-    table_name = table_name or f"stream_hllregs_{uuid.uuid4().hex[:8]}"
     batch_schema, stream_path = _schema_and_stage(spark, parquet_path)
     stream = _normalize_ts(
         spark.readStream.schema(batch_schema).parquet(stream_path)
@@ -1510,24 +1165,7 @@ def replay_hll_registers(
         .groupBy("__g", "__b")
         .agg(F.max("__rho").cast("int").alias("register_rho"))
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
-    try:
-        q = (
-            regs.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(table_name)
+    return _to_memory(spark, regs, "complete")[0]
 
 
 def replay_bloom_words(
@@ -1535,8 +1173,6 @@ def replay_bloom_words(
     parquet_path: str,
     m_bits: int,
     k: int,
-    table_name: str | None = None,
-    shuffle_partitions: int | None = 8,
 ) -> "DataFrame":
     """Streaming Bloom-filter maintenance: each micro-batch ORs its
     document fingerprints' bit contributions into the m/32-row word
@@ -1548,14 +1184,11 @@ def replay_bloom_words(
     so the DuckDB oracle recomputes every word exactly (bf01's
     xxhash64 positions are Spark-internal and exist only as a prune;
     this filter is itself the certified artifact)."""
-    import uuid
-
     from pyspark.sql import functions as F
 
     from ..functions import dedup as dd
     from ..functions import text as tx
 
-    table_name = table_name or f"stream_bloomwords_{uuid.uuid4().hex[:8]}"
     batch_schema, stream_path = _schema_and_stage(spark, parquet_path)
     stream = _normalize_ts(
         spark.readStream.schema(batch_schema).parquet(stream_path)
@@ -1578,24 +1211,7 @@ def replay_bloom_words(
     words = contribs.groupBy("__widx").agg(
         F.expr("bit_or(__b)").alias("word")
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
-    try:
-        q = (
-            words.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(table_name)
+    return _to_memory(spark, words, "complete")[0]
 
 
 # --- round-11 staged: st20 streaming bottom-k (KMV) sample ---------------
@@ -1606,8 +1222,6 @@ def replay_bloom_words(
 #: merge — a single-file stage would fold everything in one batch and
 #: certify nothing about cross-batch state.
 BOTTOMK_SPLIT_FILES = 4
-
-_BOTTOMK_STAGE_CACHE: dict = {}
 
 BOTTOMK_OUTPUT_SCHEMA = (
     "event_type string, n_events long, occupied long, "
@@ -1678,8 +1292,6 @@ def replay_bottomk_sample(
     parquet_path: str,
     k: int,
     split_files: int = BOTTOMK_SPLIT_FILES,
-    table_name: str | None = None,
-    shuffle_partitions: int | None = 8,
 ) -> "DataFrame":
     """Streaming bottom-k (KMV) distinct-user sample maintenance: each
     micro-batch merges its users' 60-bit hashes into the per-type
@@ -1697,63 +1309,34 @@ def replay_bottomk_sample(
     crosses micro-batch boundaries; each batch emits the group's
     current digest row and the final row per group (max n_events —
     exact, monotone) is the certified answer."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
 
     from ..functions import dedup as dd
 
-    table_name = table_name or f"stream_bottomk_{uuid.uuid4().hex[:8]}"
-    stage = _BOTTOMK_STAGE_CACHE.get((parquet_path, split_files))
-    if stage is None:
+    def split(stage):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        src = read_parquet(spark, parquet_path).select(
-            "event_type", "user_id"
-        )
-        stage = tempfile.mkdtemp(prefix="stateful_bk_stage_")
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
+        src = read_parquet(spark, parquet_path).select("event_type", "user_id")
         src.repartition(split_files).write.mode("overwrite").parquet(stage)
-        _BOTTOMK_STAGE_CACHE[(parquet_path, split_files)] = stage
-    schema = parquet_schema(spark, stage)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+        return parquet_schema(spark, stage)
+
+    schema, stage = _staged(f"bottomk{split_files}::{parquet_path}", split)
+    sample = (
+        _ordered_stream(spark, schema, stage)
         .select(
             "event_type",
             "user_id",
             dd.hash60(F.col("user_id").cast("string")).alias("__h"),
         )
+        .groupBy("event_type")
+        .applyInPandasWithState(
+            _bottomk_fn(k),
+            outputStructType=BOTTOMK_OUTPUT_SCHEMA,
+            stateStructType=BOTTOMK_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
     )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
-    try:
-        q = (
-            stream.groupBy("event_type")
-            .applyInPandasWithState(
-                _bottomk_fn(k),
-                outputStructType=BOTTOMK_OUTPUT_SCHEMA,
-                stateStructType=BOTTOMK_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            .writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(table_name)
+    return _to_memory(spark, sample, "append")[0]
 
 
 #: st21's micro-batch count: the document stream is staged into this
@@ -1761,16 +1344,12 @@ def replay_bottomk_sample(
 #: merge genuinely crosses batch boundaries (the st20 pattern).
 MINHASH_SPLIT_FILES = 4
 
-_MINHASH_STAGE_CACHE: dict = {}
-
 
 def replay_minhash_signature(
     spark,
     parquet_path: str,
     k: int,
     group_col: str = "source",
-    table_name: str | None = None,
-    shuffle_partitions: int | None = 8,
 ) -> "DataFrame":
     """Streaming per-group MinHash signature maintenance: each
     micro-batch MINs its documents' k permuted fingerprint hashes into
@@ -1789,11 +1368,6 @@ def replay_minhash_signature(
     staged into MINHASH_SPLIT_FILES parquet files read with
     maxFilesPerTrigger=1, so the merge genuinely crosses micro-batch
     boundaries."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
 
     from ..functions import dedup as dd
@@ -1805,21 +1379,16 @@ def replay_minhash_signature(
         minhash_b,
     )
 
-    table_name = table_name or f"stream_minhash_{uuid.uuid4().hex[:8]}"
-    stage = _MINHASH_STAGE_CACHE.get((parquet_path, group_col))
-    if stage is None:
+    def split(stage):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         src = read_parquet(spark, parquet_path).select(
             F.col(group_col).alias("__g"),
             tx.fingerprint("text").alias("__fp"),
         )
-        stage = tempfile.mkdtemp(prefix="stateful_mh_stage_")
-        atexit.register(shutil.rmtree, stage, ignore_errors=True)
-        src.repartition(MINHASH_SPLIT_FILES).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        _MINHASH_STAGE_CACHE[(parquet_path, group_col)] = stage
-    schema = parquet_schema(spark, stage)
+        src.repartition(MINHASH_SPLIT_FILES).write.mode("overwrite").parquet(stage)
+        return parquet_schema(spark, stage)
+
+    schema, stage = _staged(f"minhash_{group_col}::{parquet_path}", split)
     h0 = dd.hash60(F.col("__fp")) % F.lit(MINHASH_REDUCE)
     perms = F.array(
         *[
@@ -1828,30 +1397,10 @@ def replay_minhash_signature(
             for j in range(k)
         ]
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    sig = (
+        _ordered_stream(spark, schema, stage)
         .select("__g", F.posexplode(perms).alias("__j", "__v"))
+        .groupBy("__g", "__j")
+        .agg(F.min("__v").cast("bigint").alias("sig"))
     )
-    sig = stream.groupBy("__g", "__j").agg(
-        F.min("__v").cast("bigint").alias("sig")
-    )
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
-    try:
-        q = (
-            sig.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-    finally:
-        if shuffle_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    return spark.table(table_name)
+    return _to_memory(spark, sig, "complete")[0]

@@ -1,8 +1,8 @@
-"""ct01 cross-source contamination: the n-gram order is a knob
-(SPARK_GRAFT_CONTAM_NGRAM, default 7; 13 = eval-decontamination
-parity). The Spark plan and its DuckDB oracle twin are built from the
-same parameter, so they must agree at ANY n — verified here directly
-at n=13 and at a degenerate n larger than every document."""
+"""ct01 cross-source contamination: the n-gram order is a parameter
+of the plan and its DuckDB oracle twin (the registered ct01 runs at
+entrypoints.CONTAM_NGRAM = 7; 13 = eval-decontamination parity). Both
+are built from the same n, so they must agree at ANY n — verified here
+directly at n=13 and at a degenerate n larger than every document."""
 
 from __future__ import annotations
 

@@ -34,6 +34,19 @@ def test_every_query_has_oracle():
     assert len(q) >= 35
 
 
+@pytest.mark.parametrize("build", ["queries", "oracle_sql"])
+def test_broken_registry_import_raises(monkeypatch, build):
+    """A registry module that fails to import fails the registry build
+    loudly instead of silently shrinking it to the relational entries."""
+    import sys
+
+    monkeypatch.setitem(
+        sys.modules, "local_etl_csv_to_postgresql_spark.functions.entrypoints", None
+    )
+    with pytest.raises(ImportError):
+        getattr(ep, build)()
+
+
 def test_no_name_in_two_registries():
     """queries() merges the three registries with dict.update, so a
     name registered twice would silently shadow one of the queries."""

@@ -104,34 +104,6 @@ def test_sign_lsh_candidates_match_python_reference(spark, nbits, n_tables):
     assert (0, 30) in got  # identical vectors always pair, every setting
 
 
-def test_minhash_bands_must_divide_k():
-    """entrypoints refuses a (k, bands) setting where bands does not
-    divide k — the Spark banding and the DuckDB oracle banding diverge
-    there (advice r2 #2)."""
-    import subprocess
-    import sys
-
-    proc = subprocess.run(
-        [
-            sys.executable,
-            "-c",
-            "import local_etl_csv_to_postgresql_spark.functions."
-            "entrypoints",
-        ],
-        env={
-            "SPARK_GRAFT_MINHASH_K": "16",
-            "SPARK_GRAFT_MINHASH_BANDS": "3",
-            "PATH": "/usr/bin:/bin",
-            "HOME": "/root",
-        },
-        cwd="/root/repo",
-        capture_output=True,
-        text=True,
-    )
-    assert proc.returncode != 0
-    assert "banding contract" in proc.stderr
-
-
 def test_sign_bucket_offset_slices_disjoint_dims(spark):
     df = spark.createDataFrame(
         [(1, [1.0, -1.0, 1.0, 1.0, -1.0, 1.0, -1.0, -1.0])], ["id", "e"]

@@ -223,7 +223,7 @@ def test_quota_replay_admits_first_n_per_user(spark, tmp_path):
     })
     path = tmp_path / "events.parquet"
     pq.write_table(table, path)
-    out = replay_quota(spark, str(path), n_max=3, shuffle_partitions=2)
+    out = replay_quota(spark, str(path), n_max=3)
     got = {
         u: sorted(r["event_id"] for r in rows_)
         for u, rows_ in __import__("itertools").groupby(
@@ -232,6 +232,48 @@ def test_quota_replay_admits_first_n_per_user(spark, tmp_path):
         )
     }
     assert got == {1: [1, 2, 3], 2: [6, 7], 3: [8, 9, 10]}
+
+
+def test_failed_replay_restores_the_session_conf(spark, tmp_path):
+    """A replay whose input lacks a column it selects raises, and the
+    caller's shuffle partitions are what they were before the call."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    from local_etl_csv_to_postgresql_spark.streaming.stateful import (
+        replay_sessions,
+    )
+
+    path = tmp_path / "no_user.parquet"
+    pq.write_table(
+        pa.table({"ts": pa.array([dt.datetime(2024, 1, 1, 10)])}), path
+    )
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(AnalysisException):
+        replay_sessions(spark, str(path))
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_replay_runner_restores_set_confs_and_unsets_absent_ones(
+    spark, tmp_path
+):
+    """The runner sets the replay partitions and any extra conf for the
+    run only: a conf that was set gets its value back, one that was
+    absent is unset again."""
+    from local_etl_csv_to_postgresql_spark.streaming import stateful as st
+
+    src = tmp_path / "src"
+    spark.range(5).write.parquet(str(src))
+    stream = spark.readStream.schema("id long").parquet(str(src))
+    key = "spark.graft.test.replayOnly"
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert spark.conf.get(key, None) is None
+    out, q = st._to_memory(spark, stream, "append", {key: "on"})
+    assert sorted(r["id"] for r in out.collect()) == [0, 1, 2, 3, 4]
+    assert q.exception() is None
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert spark.conf.get(key, None) is None
 
 
 def test_quota_fn_carries_state_across_batches():

@@ -490,6 +490,44 @@ def test_held_lock_fails_the_load_and_writes_nothing(spark, tmp_path):
     assert res.status == "success" and res.loaded_rows == 100
 
 
+def test_refused_load_writes_no_quarantine_rows(spark, tmp_path):
+    """Rejects are quarantined only once the load is accepted: a load
+    refused by the held lock writes none, and its rerun writes them
+    once."""
+    import fcntl
+
+    from local_etl_csv_to_postgresql_spark.config import EngineConfig
+    from local_etl_csv_to_postgresql_spark.pipeline import run_etl_pipeline
+    from local_etl_csv_to_postgresql_spark.sources.generator import (
+        generate_transactions,
+        write_transactions_csv,
+    )
+
+    rows = generate_transactions(50, 10, 1, seed=5)
+    rows[3]["amount"] = "-12.00"
+    rows[7]["category"] = "Nonsense"
+    csv = str(tmp_path / "tx.csv")
+    write_transactions_csv(csv, rows)
+    qdir = str(tmp_path / "quarantine")
+    cfg = EngineConfig(
+        warehouse=WarehouseConfig(path=str(tmp_path / "wh")),
+        quarantine_path=qdir,
+    )
+    os.makedirs(cfg.warehouse.path)
+    fd = os.open(os.path.join(cfg.warehouse.path, "_load.lock"), os.O_RDWR | os.O_CREAT)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        res = run_etl_pipeline(spark, csv, cfg)
+        assert res.status == "failed"
+        assert not os.path.exists(qdir)
+    finally:
+        os.close(fd)
+    res = run_etl_pipeline(spark, csv, cfg)
+    assert res.status == "success"
+    got = sorted(r["transaction_id"] for r in spark.read.parquet(qdir).collect())
+    assert len(got) == 2 and len(set(got)) == 2
+
+
 def test_concurrent_loads_one_fails_and_no_key_repeats(spark, tmp_path):
     """Two loads of different batches at the same time: one holds the
     warehouse, the other fails at once, and no key is stored twice."""
